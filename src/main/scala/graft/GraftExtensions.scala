@@ -25,6 +25,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("graft_tokenize"),
       info("graft_tokenize", "lower+whitespace-split+drop-empty tokens"),
       exprs => Tokenize(exprs.head)))
+    e.injectFunction((FunctionIdentifier("graft_token_counts"),
+      info("graft_token_counts", "per-partition (word, cnt) partials of the tokens"),
+      exprs => TokenCounts(exprs.head)))
     e.injectFunction((FunctionIdentifier("graft_word_ngrams"),
       info("graft_word_ngrams", "space-joined word n-grams"),
       exprs => WordNgramsExpr(exprs(0),

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions.{ExpressionArgs, RollingFingerprintExpr, SimHashSignature, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
+import graft.functions.expressions.{ExpressionArgs, RollingFingerprintExpr, SimHashSignature, TokenCounts, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
 
 /** Column API over the native text expressions
   * ([[graft.functions.expressions]]). Output-equivalent to
@@ -13,6 +13,7 @@ import graft.functions.expressions.{ExpressionArgs, RollingFingerprintExpr, SimH
 object NativeText {
 
   val TokenizeName    = "graft_tokenize"
+  val TokenCountsName = "graft_token_counts"
   val NgramsName      = "graft_word_ngrams"
   val FingerprintName = "graft_rolling_fp"
   val SimHashName     = "graft_simhash"
@@ -22,6 +23,8 @@ object NativeText {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(
       TokenizeName, es => Tokenize(es.head), "scala_udf")
+    reg.createOrReplaceTempFunction(
+      TokenCountsName, es => TokenCounts(es.head), "scala_udf")
     reg.createOrReplaceTempFunction(
       NgramsName,
       es => WordNgramsExpr(es(0), ExpressionArgs.literalInt(es(1), NgramsName)),
@@ -40,6 +43,12 @@ object NativeText {
 
   /** Lower-cased whitespace tokens, empties dropped. */
   def tokens(text: Column): Column = call_function(TokenizeName, text)
+
+  /** Generator of one `(word, cnt)` row per distinct token of each
+    * partition (or of each flush, see [[TokenCounts]]): sum `cnt` per
+    * word for the word count.
+    */
+  def tokenCounts(text: Column): Column = call_function(TokenCountsName, text)
 
   /** All word n-grams (with duplicates), space-joined. */
   def wordNgrams(toks: Column, n: Int): Column =

@@ -12,16 +12,21 @@ import graft.functions.NativeText
   *
   * Physical shape of `wordCount` (see `.explain("formatted")`):
   * {{{
-  * HashAggregate(final)          <- reference O10 IntSumReducer
-  *   Exchange hashpartitioning   <- reference O8 HashPartitioner shuffle
-  *     HashAggregate(partial)    <- reference O5 combiner
-  *       Generate explode        <- reference O2 tokenizer
-  *         FileScan parquet [text]  (column-pruned: only `text` is read)
+  * Sort [word]                     <- the reference's sorted reducer output
+  *   Exchange rangepartitioning
+  *     HashAggregate(final, sum)   <- reference O10 IntSumReducer
+  *       Exchange hashpartitioning <- reference O8 HashPartitioner shuffle
+  *         HashAggregate(partial)  <- merges a task's flushed partials
+  *           Generate graft_token_counts(text)  <- reference O2 tokenizer + O5 combiner
+  *             FileScan parquet [text]  (column-pruned: only `text` is read)
   * }}}
-  * Partial aggregation before the exchange is what the reference built
-  * its combiner for; Catalyst inserts it automatically, and at cluster
-  * scale the shuffle carries one row per (partition, word) — not one
-  * per token.
+  * The generator is the reference's combiner: one hash table per map
+  * task, filled from one byte-level pass over each document, emitting
+  * one `(word, cnt)` row per distinct word of the task — no row, array
+  * or string per token (see [[graft.functions.expressions.TokenCounts]]).
+  * At cluster scale the shuffle carries one row per (task, word), not
+  * one per token. The variants that need a per-token column (source,
+  * lang, doc_id, observed metrics) keep `explode(graft_tokenize(text))`.
   */
 object WordCountOps {
 
@@ -31,13 +36,20 @@ object WordCountOps {
     NativeText.tokens(col(textCol))
   }
 
+  /** (word, cnt) before ordering: the kernel's per-task partials summed
+    * per word. `coalesce` keeps `cnt` NOT NULL, as `count` had it.
+    */
+  private def summedCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
+    NativeText.register(docs.sparkSession)
+    docs
+      .select(NativeText.tokenCounts(col(textCol)))
+      .groupBy("word")
+      .agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
+  }
+
   /** (word, cnt) — `SELECT word, count(*) GROUP BY word`. */
   def wordCount(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs
-      .select(explode(tokens(docs, textCol)).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    summedCounts(docs, textCol).orderBy("word")
 
   /** The wordcount with named plan metrics via `Dataset.observe` —
     * the modern form of the reference's O14 counters
@@ -92,10 +104,7 @@ object WordCountOps {
     * heap, the driver merges — no global sort at any scale.
     */
   def wordCountTopK(docs: DataFrame, k: Int = 20): DataFrame =
-    docs
-      .select(explode(tokens(docs)).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
+    summedCounts(docs)
       .orderBy(desc("cnt"), asc("word"))
       .limit(k)
 
@@ -146,10 +155,13 @@ object WordCountOps {
       .orderBy("source")
 
   /** Reference O11 sink parity (`WordCountDriver.java:59`, default
-    * TextOutputFormat): write `word TAB count` text lines.
+    * TextOutputFormat): write raw `word TAB count` text lines — no CSV
+    * quoting or escaping, so a word is written exactly as counted.
     */
   def writeTsv(wordcounts: DataFrame, path: String): Unit =
-    wordcounts.write.mode("overwrite").option("sep", "\t").csv(path)
+    wordcounts
+      .select(concat_ws("\t", col("word"), col("cnt").cast("string")))
+      .write.mode("overwrite").text(path)
 
   /** Faithful O4: the reference's `FileLocationsLookup`
     * (`FileLocationsLookup.java:20-65`) maps a record's byte offset

@@ -31,12 +31,24 @@ class CodedShuffleSpec extends AnyFunSuite {
   }
 
   test("tsv sink round-trips the wordcount (reference O11)") {
+    // raw `word TAB count` lines, read back without a CSV reader: words
+    // with quotes and commas must come back exactly as counted
+    import spark.implicits._
+    val quoted = Seq("say \"hello\" to a,b", "\"hello\" x,\"y\" \"").toDF("text")
     val dir = java.nio.file.Files.createTempDirectory("graft-tsv").toString
-    val wc = WordCountOps.wordCount(docs)
+    val wc = WordCountOps.wordCount(docs.select("text").union(quoted))
     WordCountOps.writeTsv(wc, dir)
-    val back = spark.read.option("sep", "\t").csv(dir)
-      .collect().map(r => r.getString(0) -> r.getString(1).toLong).toMap
-    val expect = wc.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(back === expect)
+    val back = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-"))
+      .flatMap(f => java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]))
+      .map { line =>
+        val tab = line.lastIndexOf('\t')
+        line.substring(0, tab) -> line.substring(tab + 1).toLong
+      }
+    val expect = wc.collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(back.length === expect.length)
+    assert(back.toMap === expect.toMap)
+    assert(back.toMap.get("\"hello\"") === Some(2L))
+    assert(back.toMap.get("x,\"y\"") === Some(1L))
   }
 }

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.functions.expressions.{MinHashSignature, RollingFingerprintExpr, SimHashSignature, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
+import graft.functions.expressions.{MinHashSignature, RollingFingerprintExpr, SimHashSignature, TokenCounts, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
 
 /** Property-based checks of the native expressions via direct
   * Catalyst `eval` (no Spark jobs — thousands of cases per second).
@@ -30,6 +31,41 @@ object ExpressionProperties extends Properties("graft.expressions") {
       .eval(null).asInstanceOf[ArrayData]
       .toObjectArray(StringType).toSeq.map(_.toString)
 
+  // words whose lower case only `UTF8String.toLowerCase` gets right:
+  // dotted capital I (one char, two when lowered), capital sigma (word-
+  // final or not), sharp s, and a non-Latin script
+  private val nonAsciiWord = Gen.oneOf(
+    "İstanbul", "İ", "ΟΔΟΣ", "Σ", "ΣΑΣ", "straße", "STRASSE", "ÀÉÎ", "日本語")
+  // longer than any earlier document, so the scan buffer must grow
+  private val longWord = Gen.choose(65, 400)
+    .flatMap(n => Gen.listOfN(n, Gen.alphaChar)).map(_.mkString)
+  private val document: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    12 -> Gen.listOf(Gen.frequency(
+      6 -> Gen.nonEmptyListOf(wordChar).map(_.mkString),
+      2 -> nonAsciiWord,
+      1 -> longWord,
+      4 -> Gen.nonEmptyListOf(delimChars).map(_.mkString))).map(_.take(30).mkString))
+  /** A partition: documents, `None` for a null one. */
+  private val partition: Gen[List[Option[String]]] =
+    Gen.listOf(Gen.frequency(1 -> Gen.const(None), 8 -> document.map(Some(_))))
+      .map(_.take(12))
+
+  /** Every row `TokenCounts` emits over a partition, flushes included. */
+  private def tokenCountRows(docs: Seq[Option[String]], flushAt: Int): Seq[(String, Long)] = {
+    val kernel = new TokenCounts(BoundReference(0, StringType, nullable = true), flushAt)
+    val out = Seq.newBuilder[(String, Long)]
+    def take(rows: IterableOnce[InternalRow]): Unit =
+      rows.iterator.foreach(r => out += r.getUTF8String(0).toString -> r.getLong(1))
+    docs.foreach(d => take(kernel.eval(InternalRow(d.map(UTF8String.fromString).orNull))))
+    take(kernel.terminate())
+    out.result()
+  }
+
+  /** `explode(graft_tokenize(text))` + `count(*) GROUP BY word`. */
+  private def explodeCounts(docs: Seq[Option[String]]): Map[String, Long] =
+    docs.flatten.flatMap(tokenize).groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
+
   private def strArrayLit(xs: Seq[String]) =
     Literal.create(xs, ArrayType(StringType))
 
@@ -43,6 +79,38 @@ object ExpressionProperties extends Properties("graft.expressions") {
       }
       tokenize(s) == model
     }
+
+  property("tokenize of non-ASCII text splits UTF8String.toLowerCase") =
+    forAll(document) { s =>
+      val st = new java.util.StringTokenizer(
+        UTF8String.fromString(s).toLowerCase.toString, " \t\n\r\f")
+      val model = Seq.newBuilder[String]
+      while (st.hasMoreTokens) model += st.nextToken()
+      tokenize(s) == model.result()
+    }
+
+  property("token counts equal explode(tokenize) + count, one row per word") =
+    forAll(partition) { docs =>
+      val rows = tokenCountRows(docs, TokenCounts.FlushAt)
+      rows.map(_._1).distinct.size == rows.size && rows.toMap == explodeCounts(docs)
+    }
+
+  property("token counts summed over flushes equal the model at any flush size") =
+    forAll(partition, Gen.choose(1, 8)) { (docs, flushAt) =>
+      val rows = tokenCountRows(docs, flushAt)
+      rows.groupMapReduce(_._1)(_._2)(_ + _) == explodeCounts(docs)
+    }
+
+  property("token counts of edge documents") = {
+    val docs = Seq(None, Some(""), Some(" \t\n\r\f"), Some("\f\fa  A\t\ta\r\n"),
+      Some("İstanbul ISTANBUL istanbul"), Some("ΟΔΟΣ Σ σ"), Some("ß STRASSE Straße"),
+      Some("x" * 5000 + " x"))
+    val want = Map("a" -> 3L, "i̇stanbul" -> 1L, "istanbul" -> 2L, "οδος" -> 1L,
+      "σ" -> 2L, "ß" -> 1L, "strasse" -> 1L, "straße" -> 1L, "x" * 5000 -> 1L, "x" -> 1L)
+    (explodeCounts(docs) == want) :| "model" &&
+      (tokenCountRows(docs, TokenCounts.FlushAt).toMap == want) :| "kernel" &&
+      (tokenCountRows(docs, 2).groupMapReduce(_._1)(_._2)(_ + _) == want) :| "kernel, flushing"
+  }
 
   property("tokenize distributes over whitespace concatenation") =
     forAll(rawString, rawString) { (a, b) =>

@@ -38,6 +38,17 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(shuffles(q("wordcount")) === 2)
   }
 
+  test("wordcount, wordcount_topk: the fused token-count generator, no explode") {
+    // a silent fallback to explode(graft_tokenize) would still answer
+    // right, one row per token slower
+    Seq("wordcount", "wordcount_topk").foreach { name =>
+      val plan = q(name).queryExecution.executedPlan.toString
+      assert(plan.contains("Generate graft_token_counts("),
+        s"$name must count tokens in the generator:\n$plan")
+      assert(!plan.contains("explode"), s"$name must not explode tokens:\n$plan")
+    }
+  }
+
   test("q6_forecast: single-partition final aggregate only") {
     assert(shuffles(q("q6_forecast")) === 1)
   }

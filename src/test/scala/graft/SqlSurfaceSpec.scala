@@ -20,6 +20,18 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(sql === df)
   }
 
+  test("SQL token-count generator sums to the DataFrame wordcount") {
+    Catalog.registerViews(spark, TestSpark.Sf0001)
+    val sql = spark.sql(
+      """SELECT word, sum(cnt) AS cnt FROM (
+        |  SELECT graft_token_counts(text) FROM documents
+        |) GROUP BY word ORDER BY word""".stripMargin)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val df = WordCountOps.wordCount(Tables.documents(spark, TestSpark.Sf0001))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(sql === df)
+  }
+
   test("graft functions are callable from SQL") {
     Catalog.registerViews(spark, TestSpark.Sf0001)
     val r = spark.sql(

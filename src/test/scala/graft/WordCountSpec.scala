@@ -26,6 +26,28 @@ class WordCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(totalTokens > 0)
   }
 
+  test("wordcount schema: word STRING NOT NULL, cnt BIGINT NOT NULL") {
+    import org.apache.spark.sql.types._
+    val want = StructType(Seq(
+      StructField("word", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false)))
+    assert(WordCountOps.wordCount(docs).schema === want)
+    assert(WordCountOps.wordCountTopK(docs).schema === want)
+  }
+
+  test("wordcount of a local relation equals explode(tokenize) + count") {
+    // a LocalTableScan input, null and empty documents, non-ASCII text:
+    // the generator's rows come from terminate() on every input path
+    import spark.implicits._
+    val local = Seq(Some("İstanbul ISTANBUL a"), None, Some(""), Some("A\ta ΟΔΟΣ Σ"))
+      .toDF("text")
+    val want = local.select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
+      .groupBy("word").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val got = WordCountOps.wordCount(local).collect().map(r => r.getString(0) -> r.getLong(1))
+    assert(got.toMap === want)
+    assert(got.length === want.size)
+  }
+
   test("topk is the head of the fully sorted wordcount") {
     val full = WordCountOps.wordCount(docs)
       .orderBy(desc("cnt"), asc("word")).limit(20).collect().toSeq
