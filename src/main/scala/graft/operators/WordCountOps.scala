@@ -25,8 +25,9 @@ import graft.functions.NativeText
   * one `(word, cnt)` row per distinct word of the task — no row, array
   * or string per token (see [[graft.functions.expressions.TokenCounts]]).
   * At cluster scale the shuffle carries one row per (task, word), not
-  * one per token. The variants that need a per-token column (source,
-  * lang, doc_id, observed metrics) keep `explode(graft_tokenize(text))`.
+  * one per token. `wordCountTopK`, `wordCountObserved` and `distinctWords`
+  * run the same generator. The variants that need a per-token column
+  * (source, lang, doc_id) keep `explode(graft_tokenize(text))`.
   */
 object WordCountOps {
 
@@ -36,16 +37,19 @@ object WordCountOps {
     NativeText.tokens(col(textCol))
   }
 
+  /** The kernel's per-task `(word, cnt)` partials (registers it first). */
+  private def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
+    NativeText.register(docs.sparkSession)
+    docs.select(NativeText.tokenCounts(col(textCol)))
+  }
+
   /** (word, cnt) before ordering: the kernel's per-task partials summed
     * per word. `coalesce` keeps `cnt` NOT NULL, as `count` had it.
     */
-  private def summedCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    NativeText.register(docs.sparkSession)
-    docs
-      .select(NativeText.tokenCounts(col(textCol)))
+  private def summedCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
+    tokenCounts(docs, textCol)
       .groupBy("word")
       .agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
-  }
 
   /** (word, cnt) — `SELECT word, count(*) GROUP BY word`. */
   def wordCount(docs: DataFrame, textCol: String = "text"): DataFrame =
@@ -56,17 +60,23 @@ object WordCountOps {
     * (`WordCountDriver.java:17-20`): `tokens_seen` and `chars_seen`
     * are collected by the plan itself during the one pass (no second
     * job, no accumulator re-count on task retry — observed metrics
-    * are exactly-once per completed query). Returns the observed
-    * wordcount and the [[org.apache.spark.sql.Observation]] handle to
-    * read after an action.
+    * are exactly-once per completed query). Both are sums over the
+    * word counts, `chars_seen` weighted by word length; BIGINT, and 0
+    * on empty input.
+    *
+    * They are observed on the sorted counts, one row per word. Lower
+    * down they go wrong: under the sort's exchange the range-sampling
+    * job runs the observation a second time, and under the aggregate's
+    * exchange AQE drops an empty stage's plan, so the observation
+    * reports nothing on empty input. Returns the observed wordcount and
+    * the [[org.apache.spark.sql.Observation]] handle to read after an
+    * action.
     */
   def wordCountObserved(docs: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation("graft_wordcount")
-    val words = docs
-      .select(explode(tokens(docs)).as("word"))
-      .observe(obs, count(lit(1)).as("tokens_seen"),
-        sum(length(col("word"))).as("chars_seen"))
-    (words.groupBy("word").agg(count(lit(1)).as("cnt")).orderBy("word"), obs)
+    (wordCount(docs).observe(obs, coalesce(sum("cnt"), lit(0L)).as("tokens_seen"),
+      coalesce(sum(length(col("word")).cast("long") * col("cnt")), lit(0L)).as("chars_seen")),
+      obs)
   }
 
   /** Driver-surface form of [[wordCountObserved]]: runs the observed
@@ -123,10 +133,10 @@ object WordCountOps {
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
-  /** Distinct vocabulary (dedup on the token stream). */
+  /** Distinct vocabulary: the words of the kernel's partials, deduped. */
   def distinctWords(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(tokens(docs)).as("word"))
+    tokenCounts(docs)
+      .select("word")
       .distinct()
       .orderBy("word")
 

@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.LongAccumulator
+
+import graft.functions.NativeText
 
 /** Faithful simulation of the reference's coded-shuffle *intended*
   * semantics (SURVEY.md §0/§4): trade map redundancy for shuffle
@@ -28,7 +27,7 @@ import org.apache.spark.util.LongAccumulator
   *    `WordCount.java:255-258`) and its cross-JVM static-map side
   *    channel (§0.1.1);
   *  - counters `PACKETS_SENT` / `ENCODED_PACKETS_SENT`
-  *    (`WordCountDriver.java:17-20`) = LongAccumulators.
+  *    (`WordCountDriver.java:17-20`) = [[Result]] fields.
   *
   * Pairing policy (round-10): the reference's encoder is a greedy
   * cache scan whose pair count depends on partial ARRIVAL ORDER —
@@ -42,25 +41,32 @@ import org.apache.spark.util.LongAccumulator
   * endpoint-first allocation x22 = min(L2,R2), x21 = min(L2-x22,R1),
   * x11 = min(L1,R1-x21) is a MAXIMUM matching on a path (exchange
   * argument), so the coding gain is at least what any greedy run
-  * achieves. Entries zip by rank-within-class (rank over the unique
-  * word), which makes the whole pairing a window + two joins —
-  * declarative, deterministic, and exactly reproducible by the
-  * DuckDB oracle in closed form: the registry row carries a full
-  * hash-gated oracle, not a rows-only check.
+  * achieves. Entries zip in word order within their class, so every
+  * counter is a closed form the DuckDB oracle reproduces: the
+  * registry row carries a full hash-gated oracle, not a rows-only
+  * check.
   *
-  * Execution shape (nothing corpus-sized touches the driver):
-  * tokenize + two-level aggregation are ordinary distributed plans;
-  * the per-class rank windows partition by (enc, p, tgt) — the
-  * topology is a hard-coded 3-node story, so class count (≤18) caps
-  * window parallelism, which is inherent to simulating a 3-node
-  * cluster, not a scale defect of the engine. Packet counters are
-  * COUNTED from materialized packet rows rather than task-side
-  * accumulators, so task retry / speculation cannot double-count.
-  * The multicast decode is a left-outer join of packets against the
-  * exploded local-knowledge table (node-set → replica nodes) whose
-  * null side counts genuine decode failures; the exact truth
-  * comparison (a second corpus tokenize) is gated behind
-  * `checkDecode` — the spec turns it on.
+  * Execution shape: one Spark action. The partials are an ordinary
+  * two-exchange aggregate; `groupByKey(enc)` then hands each simulated
+  * encoder node its own partials, and [[encode]] classes, zips, XORs
+  * and decodes them in one pass, emitting one delivered row per
+  * partial. Those rows meet an independent word count of the same
+  * documents (the `graft_token_counts` kernel, negated) in one
+  * per-word aggregate, where each word's sum must be 0; one row over
+  * it yields every counter, the failed strips and the mismatching
+  * words. Five jobs, one per exchange and the result. Counters
+  * are counted from output rows, not task-side accumulators, so task
+  * retry or speculation cannot double-count; the exact decode check
+  * runs on every call.
+  *
+  * Memory: an encoder group holds its own partials in memory — at most
+  * one per word (a word's hash parity fixes which replica node encodes
+  * each of its node-sets, and no two of them land on the same node), so
+  * the vocabulary, never the corpus — like the in-memory coding cache
+  * of the reference's combiner. That is the trade-off: unlike a sorted
+  * window, a group cannot spill. Only 3 tasks do the coding, one per
+  * simulated node; that is the 3-node topology, not a limit of the
+  * engine, and the counts stay closed-form whatever the engine does.
   */
 object CodedShuffleSim {
 
@@ -68,7 +74,17 @@ object CodedShuffleSim {
       naivePackets: Long,      // partial aggregates, uncoded unicast
       packetsSent: Long,       // with coding: coded pairs count once
       encodedPackets: Long,    // packets that carried 2 words
-      decodedOk: Boolean)      // zero failed strips (+ exact counts when checkDecode)
+      decodedOk: Boolean)      // no failed strip, and decoded counts == the word count
+
+  /** Combiner output: `cnt` occurrences of `word` on node-set `p`,
+    * bound for reducer `tgt`, encoded at replica node `enc`.
+    */
+  final case class Partial(p: Int, tgt: Int, enc: Int, word: String, cnt: Long)
+
+  /** One partial as its reducer recovers it; `cnt` is None when the
+    * reducer could not strip the partner half of its packet.
+    */
+  final case class Delivered(word: String, cnt: Option[Long], coded: Boolean)
 
   private val Nodes = 3
 
@@ -79,178 +95,91 @@ object CodedShuffleSim {
   private def topoHash(c: Column): Column =
     graft.functions.TextFunctions.wordHash(c)
 
-  /** Run the simulation over (source, word) partial aggregates
-    * derived from `docs`; optionally bump the provided accumulators
-    * (the O14 counter analog). `checkDecode` additionally verifies the
-    * decoded stream against the true word counts (costs one extra
-    * corpus tokenize — test-time only).
+  /** Node `k` replicates node-sets `k` and `k-1`. */
+  private def holds(node: Int, p: Int): Boolean =
+    p == node || p == (node + Nodes - 1) % Nodes
+
+  /** One encoder node `enc`: rank-zip its pairable classes, XOR each
+    * pair into one payload, and strip each half at its target. A
+    * target may strip only a partner whose node-set it replicates —
+    * what the reference's static-map side channel faked; anything else
+    * is a failed strip. Unpaired partials go out unicast.
     */
-  def simulate(docs: DataFrame,
-               accPackets: Option[LongAccumulator] = None,
-               accEncoded: Option[LongAccumulator] = None,
-               checkDecode: Boolean = false): Result = {
+  private[plans] def encode(enc: Int, partials: Iterator[Partial]): Iterator[Delivered] = {
+    val prev = (enc + Nodes - 1) % Nodes
+    val next = (enc + 1) % Nodes
+    val all = partials.toArray.sortBy(_.word)
+    val cls = all.groupBy { x =>
+      if (x.p == prev && x.tgt == enc) "L1"
+      else if (x.p == prev && x.tgt == next) "L2"
+      else if (x.p == enc && x.tgt == prev) "R1"
+      else if (x.p == enc && x.tgt == enc) "R2"
+      else "U"  // target outside the partner replica set: unicast-only
+    }.withDefaultValue(Array.empty[Partial])
+    // the zips ARE the allocation: x22, then x21 and x11 on what is left
+    val a = cls("L2") zip cls("R2")
+    val b = cls("L2").drop(a.length) zip cls("R1")
+    val c = cls("L1") zip cls("R1").drop(b.length)
+    val pairs = a ++ b ++ c
+    val paired = pairs.iterator.flatMap { case (l, r) => Iterator(l, r) }.toSet
+    def strip(at: Partial, partner: Partial, payload: Long) = Delivered(at.word,
+      Option.when(holds(at.tgt, partner.p))(payload ^ partner.cnt), coded = true)
+    pairs.iterator.flatMap { case (l, r) =>
+      val payload = l.cnt ^ r.cnt
+      Iterator(strip(l, r, payload), strip(r, l, payload))
+    } ++ all.iterator.filterNot(paired).map(x => Delivered(x.word, Some(x.cnt), coded = false))
+  }
+
+  /** Run the simulation over the (node-set, word) partial aggregates
+    * of `docs` and verify the decoded stream against the true word
+    * counts — one Spark action.
+    */
+  def simulate(docs: DataFrame): Result = {
     val spark = docs.sparkSession
-    graft.functions.NativeText.register(spark)
+    import spark.implicits._
+    NativeText.register(spark)
 
-    // combiner output: partial counts per (node-set p, word); reducer
-    // target and encoder replica node are deterministic column
-    // expressions of the cross-engine hash
+    // combiner output per (node-set p, word); reducer target and
+    // encoder replica node are column expressions of the cross-engine
+    // hash. A null source has no node-set: p = enc = -1 leaves its
+    // group without left classes, so it goes unicast, as in the oracle
+    val wh = topoHash(col("word"))
     val partials = docs
-      .select(col("source"), explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-      .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
-      .withColumn("p", (topoHash(col("source")) % Nodes).cast("int"))
-      .groupBy(col("p"), col("word")).agg(sum("cnt").as("cnt"))
-      .withColumn("wh", topoHash(col("word")))
-      .withColumn("tgt", (col("wh") % Nodes).cast("int"))
-      .withColumn("enc",
-        when(col("wh") % 2 === 0, col("p"))
-          .otherwise(pmod(col("p") + 1, lit(Nodes))).cast("int"))
-      .drop("wh")
+      .select((topoHash(col("source")) % Nodes).cast("int").as("p"),
+        explode(NativeText.tokens(col("text"))).as("word"))
+      .groupBy("p", "word").agg(count(lit(1)).as("cnt"))
+      .select(coalesce(col("p"), lit(-1)).as("p"), (wh % Nodes).cast("int").as("tgt"),
+        coalesce(when(wh % 2 === 0, col("p")).otherwise(pmod(col("p") + 1, lit(Nodes)))
+          .cast("int"), lit(-1)).as("enc"),
+        col("word"), col("cnt"))
+      .as[Partial]
 
-    // the partial table fans out (classing → both pair sides +
-    // unicast, plus the knowledge table) — persist it so the corpus
-    // tokenize + two aggregations run once, not once per branch; its
-    // size is bounded by 3 × vocabulary, not the corpus
-    partials.persist(StorageLevel.MEMORY_AND_DISK)
+    // the true counts enter negated (coded = null): per word, the
+    // decoded rows must cancel them exactly
+    val truth = docs.select(NativeText.tokenCounts(col("text")))
+      .select(col("word"), (-col("cnt")).as("cnt"), lit(null).cast("boolean").as("coded"))
+    val perWord = partials.groupByKey(_.enc).flatMapGroups(encode).toDF()
+      .unionByName(truth)
+      .groupBy("word").agg(sum("cnt").as("diff"), count(col("coded")).as("rows"),
+        count(when(col("coded"), 1)).as("coded_rows"),
+        count(when(col("coded").isNotNull && col("cnt").isNull, 1)).as("failed"))
+    val row = perWord.agg(
+        coalesce(sum("rows"), lit(0L)), coalesce(sum("coded_rows"), lit(0L)),
+        coalesce(sum("failed"), lit(0L)), count(when(col("diff") =!= 0L, 1)))
+      .head()
 
-    // compatibility class at the encoder: left partials live on the
-    // node-set {e-1, e} (p = e-1), right on {e, e+1} (p = e); a pair
-    // must address each side's target inside the OTHER side's replica
-    // set, with distinct targets — the path L1—R1—L2—R2
-    val e1 = pmod(col("enc") + 1, lit(Nodes))  // e+1
-    val e2 = pmod(col("enc") + 2, lit(Nodes))  // e-1
-    val classed = partials.withColumn("cls",
-      when(col("p") === e2 && col("tgt") === col("enc"), "L1")
-        .when(col("p") === e2 && col("tgt") === e1, "L2")
-        .when(col("p") === col("enc") && col("tgt") === e2, "R1")
-        .when(col("p") === col("enc") && col("tgt") === col("enc"), "R2")
-        .otherwise("U"))  // target outside the partner replica set: unicast-only
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("enc"), col("p"), col("tgt")).orderBy(col("word"))))
-
-    // per-encoder class counts (3 rows) -> maximum-matching allocation
-    val alloc = classed.groupBy("enc").agg(
-        count(when(col("cls") === "L1", 1)).as("l1"),
-        count(when(col("cls") === "L2", 1)).as("l2"),
-        count(when(col("cls") === "R1", 1)).as("r1"),
-        count(when(col("cls") === "R2", 1)).as("r2"))
-      .withColumn("x22", least(col("l2"), col("r2")))
-      .withColumn("x21", least(col("l2") - col("x22"), col("r1")))
-      .withColumn("x11", least(col("l1"), col("r1") - col("x21")))
-      .select("enc", "x22", "x21", "x11")
-
-    // rank-zip pair assignment: pair t and index within t. Persisted:
-    // three branches (both pair sides + unicast) read it, and the
-    // rank window above it would otherwise run per branch
-    val assigned = classed.join(broadcast(alloc), Seq("enc"))
-      .withColumn("pair_t",
-        when(col("cls") === "L2" && col("rk") <= col("x22"), "A")
-          .when(col("cls") === "R2" && col("rk") <= col("x22"), "A")
-          .when(col("cls") === "L2" && col("rk") > col("x22") &&
-            col("rk") <= col("x22") + col("x21"), "B")
-          .when(col("cls") === "R1" && col("rk") <= col("x21"), "B")
-          .when(col("cls") === "L1" && col("rk") <= col("x11"), "C")
-          .when(col("cls") === "R1" && col("rk") > col("x21") &&
-            col("rk") <= col("x21") + col("x11"), "C"))
-      .withColumn("pair_i",
-        when(col("pair_t") === "A", col("rk"))
-          .when(col("pair_t") === "B",
-            when(col("cls") === "L2", col("rk") - col("x22")).otherwise(col("rk")))
-          .when(col("pair_t") === "C",
-            when(col("cls") === "R1", col("rk") - col("x21")).otherwise(col("rk"))))
-    assigned.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // the packet stream: a coded pair multicasts ONE packet carried as
-    // TWO target rows (one per stripped partial); an unpaired partial
-    // is a unicast flush row (WordCount.java:211-223)
-    val lSide = assigned.where(col("pair_t").isNotNull && col("cls").startsWith("L"))
-      .select(col("enc"), col("pair_t"), col("pair_i"),
-        col("p").as("l_p"), col("word").as("l_word"),
-        col("cnt").as("l_cnt"), col("tgt").as("l_tgt"))
-    val rSide = assigned.where(col("pair_t").isNotNull && col("cls").startsWith("R"))
-      .select(col("enc"), col("pair_t"), col("pair_i"),
-        col("p").as("r_p"), col("word").as("r_word"),
-        col("cnt").as("r_cnt"), col("tgt").as("r_tgt"))
-    val pairs = lSide.join(rSide, Seq("enc", "pair_t", "pair_i"))
-      .withColumn("payload", col("l_cnt").bitwiseXOR(col("r_cnt")))
-    val codedRowsDf = pairs.select(
-        col("r_tgt").as("tgt_node"), col("l_p").as("known_p"),
-        col("l_word").as("known_word"), col("r_word").as("tgt_word"),
-        col("payload"), lit(true).as("coded"))
-      .unionByName(pairs.select(
-        col("l_tgt").as("tgt_node"), col("r_p").as("known_p"),
-        col("r_word").as("known_word"), col("l_word").as("tgt_word"),
-        col("payload"), lit(true).as("coded")))
-    val unicastRowsDf = assigned.where(col("pair_t").isNull)
-      .select(col("tgt").as("tgt_node"), col("p").as("known_p"),
-        col("word").as("known_word"), col("word").as("tgt_word"),
-        col("cnt").as("payload"), lit(false).as("coded"))
-    val packets = codedRowsDf.unionByName(unicastRowsDf)
-
-    // what each physical node knows from its own map phase: the
-    // partials of every node-set it replicates — decode may ONLY strip
-    // values from the target's own knowledge (this is what the
-    // reference's static-map side channel faked)
-    val knowledge = partials
-      .withColumn("k_node",
-        explode(array(col("p"), pmod(col("p") + 1, lit(Nodes)).cast("int"))))
-      .select(col("k_node"), col("p").as("k_p"), col("word").as("k_word"),
-        col("cnt").as("k_cnt"))
-
-    // persist the packet stream so the pairing pass runs once across
-    // the counting + decode actions below (a perf choice only: the
-    // counters are derived from packet ROWS, not task-side
-    // accumulators, so a retried/speculated/recomputed task can no
-    // longer double-count — each recompute yields the same rows)
-    packets.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // packet accounting from the materialized stream itself: a coded
-      // pair is TWO rows for ONE packet; a unicast row is one packet.
-      val rowsByCoded = packets.groupBy("coded").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
-      val codedRows = rowsByCoded.getOrElse(true, 0L)
-      val unicastRows = rowsByCoded.getOrElse(false, 0L)
-      val naivePackets = codedRows + unicastRows  // one per partial; a pair holds 2
-      val encodedPackets = codedRows / 2
-      val packetsSent = encodedPackets + unicastRows
-      val codedAtTarget = packets.where(col("coded")).join(knowledge,
-        packets("tgt_node") === col("k_node") &&
-          col("known_p") === col("k_p") && col("known_word") === col("k_word"),
-        "left_outer")
-      val failedStrips = codedAtTarget.where(col("k_cnt").isNull).count()
-      val decodedOk =
-        if (!checkDecode) failedStrips == 0L
-        else {
-          val credits = codedAtTarget.where(col("k_cnt").isNotNull)
-            .select(col("tgt_word").as("word"),
-              col("payload").bitwiseXOR(col("k_cnt")).as("cnt"))
-            .unionByName(packets.where(!col("coded"))
-              .select(col("tgt_word").as("word"), col("payload").as("cnt")))
-          val decoded = credits.groupBy("word").agg(sum("cnt").as("dcnt"))
-          val truth = docs
-            .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-            .groupBy("word").agg(count(lit(1)).as("tcnt"))
-          val mismatches = decoded.join(truth, Seq("word"), "full_outer")
-            .where(coalesce(col("dcnt"), lit(-1L)) =!= coalesce(col("tcnt"), lit(-2L)))
-            .count()
-          failedStrips == 0L && mismatches == 0L
-        }
-
-      accPackets.foreach(_.add(packetsSent))
-      accEncoded.foreach(_.add(encodedPackets))
-      Result(naivePackets, packetsSent, encodedPackets, decodedOk)
-    } finally {
-      packets.unpersist()
-      assigned.unpersist()
-      partials.unpersist()
-    }
+    // a coded pair is TWO delivered rows for ONE packet; a unicast row is one
+    val naivePackets = row.getLong(0)
+    val encodedPackets = row.getLong(1) / 2
+    Result(naivePackets, naivePackets - encodedPackets, encodedPackets,
+      decodedOk = row.getLong(2) == 0L && row.getLong(3) == 0L)
   }
 
   /** DataFrame form for the query registry: one deterministic row,
     * every column reproduced in closed form by the DuckDB oracle
     * (the rank-zip counts are the path maximum matching; decoded_ok
     * is TRUE by the pairing's decodability-by-construction, which the
-    * Spark side still verifies against the knowledge table).
+    * Spark side verifies against an independent word count).
     */
   def asDataFrame(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession

@@ -282,11 +282,13 @@ private[graft] trait QueriesEvents extends QueriesOracleHelpers {
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // the reference's coded-shuffle research metric, simulated with
-    // the *intended* (bug-fixed) semantics. Round-10: the rank-zip
-    // pairing policy (a maximum matching on the per-encoder class
-    // path L1—R1—L2—R2, see CodedShuffleSim) makes every counter a
-    // closed form over cross-engine md5 topology hashes, so the row
-    // is fully hash-gated — no more rows-only entries in the registry
+    // the *intended* (bug-fixed) semantics in one Spark action: each
+    // simulated encoder node zips, XORs and decodes its own partials,
+    // and decoded_ok checks the result against an independent word
+    // count. The rank-zip pairing (a maximum matching on the
+    // per-encoder class path L1—R1—L2—R2, see CodedShuffleSim) makes
+    // every counter a closed form over cross-engine md5 topology
+    // hashes, so the row is fully hash-gated
     "coded_shuffle_sim" -> QueryDef(
       (s, d) => graft.plans.CodedShuffleSim.asDataFrame(Tables.documents(s, d)),
       Some(s"""WITH tok AS (SELECT source, unnest($toksSql) AS word FROM documents),

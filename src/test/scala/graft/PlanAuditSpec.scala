@@ -49,6 +49,20 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("distinct_words, wordcount_observed: the token-count generator, no explode") {
+    // the registry's wordcount_observed row is the collected metrics;
+    // the plan that counts is the observed wordcount behind it
+    val docs = Tables.documents(spark, TestSpark.Sf0001)
+    Seq("distinct_words" -> q("distinct_words"),
+      "wordcount_observed" -> graft.operators.WordCountOps.wordCountObserved(docs)._1)
+      .foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("Generate graft_token_counts("),
+          s"$name must count tokens in the generator:\n$plan")
+        assert(!plan.contains("explode"), s"$name must not explode tokens:\n$plan")
+      }
+  }
+
   test("q6_forecast: single-partition final aggregate only") {
     assert(shuffles(q("q6_forecast")) === 1)
   }

@@ -48,6 +48,21 @@ class WordCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length === want.size)
   }
 
+  test("observed metrics: BIGINT token and char totals, 0 on empty input") {
+    import spark.implicits._
+    def metrics(texts: Seq[Option[String]]): (Any, Any) = {
+      val (wc, obs) = WordCountOps.wordCountObserved(texts.toDF("text"))
+      wc.count()
+      val row = obs.get
+      (row("tokens_seen"), row("chars_seen"))
+    }
+    // 5 tokens; chars_seen is the total length of the words they count as
+    assert(metrics(Seq(Some("İstanbul ISTANBUL a"), None, Some(""), Some("A\tΟΔΟΣ"))) ===
+      (5L, WordCountOps.wordCount(Seq("İstanbul ISTANBUL a A ΟΔΟΣ").toDF("text"))
+        .select(sum(length(col("word")) * col("cnt"))).head.getLong(0)))
+    assert(metrics(Seq(None, Some(" "))) === (0L, 0L))
+  }
+
   test("topk is the head of the fully sorted wordcount") {
     val full = WordCountOps.wordCount(docs)
       .orderBy(desc("cnt"), asc("word")).limit(20).collect().toSeq
