@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,6 +20,14 @@ import graft.functions.NativeText
   *         HashAggregate(partial)  <- merges a task's flushed partials
   *           Generate graft_token_counts(text)  <- reference O2 tokenizer + O5 combiner
   *             FileScan parquet [text]  (column-pruned: only `text` is read)
+  * }}}
+  * Through [[writeTsv]] the top two nodes become one per-partition sort,
+  * so the write is the map stage plus one reducer stage:
+  * {{{
+  * Sort [word], false              <- each reducer's key-sorted part-r-* file
+  *   HashAggregate(final, sum)
+  *     Exchange hashpartitioning   <- the one shuffle
+  *       ...
   * }}}
   * The generator is the reference's combiner: one hash table per map
   * task, filled from one byte-level pass over each document, emitting
@@ -167,11 +176,33 @@ object WordCountOps {
   /** Reference O11 sink parity (`WordCountDriver.java:59`, default
     * TextOutputFormat): write raw `word TAB count` text lines — no CSV
     * quoting or escaping, so a word is written exactly as counted.
+    *
+    * Layout: one part file per reducer, as Hadoop writes it. When the
+    * input's top node is a global sort (as in [[wordCount]]), the sort
+    * is made per-partition: each part file is one final-aggregate hash
+    * partition sorted by word, and each word is in exactly one file.
+    * That saves the range-sampling job and the second exchange of a
+    * global sort. The reference never sets `numReduceTasks`
+    * (`WordCountDriver.java:30-32` is a dead field), so Hadoop would run
+    * one reducer; but its coded encoder targets `numReduceTasks`
+    * reducers (`WordCount.java:132,152`), so the design assumes N
+    * reducers, each writing its own key-sorted `part-r-*` — the layout
+    * written here. A caller that needs one globally sorted file calls
+    * `coalesce(1)` first. Any other input (a limit over a sort, as in
+    * [[wordCountTopK]], or no sort) is written as it is.
     */
   def writeTsv(wordcounts: DataFrame, path: String): Unit =
-    wordcounts
+    reducerSorted(wordcounts)
       .select(concat_ws("\t", col("word"), col("cnt").cast("string")))
       .write.mode("overwrite").text(path)
+
+  /** `df` with a top-level global sort made per-partition; else `df`. */
+  private def reducerSorted(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case s: Sort if s.global =>
+      new classic.Dataset[Row](df.sparkSession.asInstanceOf[classic.SparkSession],
+        s.copy(global = false), Encoders.row(df.schema))
+    case _ => df
+  }
 
   /** Faithful O4: the reference's `FileLocationsLookup`
     * (`FileLocationsLookup.java:20-65`) maps a record's byte offset

@@ -49,6 +49,69 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
+  test("writeTsv: one hash exchange, a per-partition sort by word, no range exchange") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s = spark.newSession()
+    val executed = new ConcurrentLinkedQueue[QueryExecution]
+    val sentinel = new CountDownLatch(1)
+    s.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        executed.add(qe)
+        if (qe.analyzed.toString.contains("Range (0, 4242")) sentinel.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+    })
+    val dir = java.nio.file.Files.createTempDirectory("graft-tsv").toString
+    graft.operators.WordCountOps.writeTsv(
+      graft.operators.WordCountOps.wordCount(Tables.documents(s, TestSpark.Sf0001)), dir)
+    s.range(0, 4242).count()
+    assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel action never reported")
+    import scala.jdk.CollectionConverters._
+    // every executed node, AQE's final plan and query stages included
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = executed.asScala.toSeq.map(qe => aqe.collect(qe.executedPlan) { case p => p })
+      .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.size === 1, s"write plans: ${executed.asScala.map(_.executedPlan)}")
+    val nodes = writes.head
+    val partitionings = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    // one hash exchange, no range exchange (nor any other)
+    assert(partitionings.map(_.getClass.getSimpleName) === Seq("HashPartitioning"),
+      s"${nodes.head}")
+    val sorts = nodes.collect { case x: SortExec => x }
+    assert(sorts.size === 1 && !sorts.head.global, s"${nodes.head}")
+    assert(sorts.head.toString.startsWith("Sort [word"), s"${nodes.head}")
+  }
+
+  test("Tables.documents launches no Spark job") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val jobs = new ConcurrentLinkedQueue[Int]
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.sentinel") == "1")
+          sentinel.countDown()
+        else if (sentinel.getCount > 0) jobs.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      Tables.documents(s, TestSpark.Sf0001)
+      // job events arrive in order: once the sentinel's is here, every
+      // job the load launched is too
+      sc.setLocalProperty("graft.sentinel", "1")
+      try s.range(0, 4343).count() finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel job never reported")
+      assert(jobs.isEmpty, s"jobs launched by the load: $jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("distinct_words, wordcount_observed: the token-count generator, no explode") {
     // the registry's wordcount_observed row is the collected metrics;
     // the plan that counts is the observed wordcount behind it
