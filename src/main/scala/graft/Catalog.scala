@@ -9,11 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Catalog {
   def registerViews(spark: SparkSession, sfDir: String): Unit = {
-    graft.functions.NativeText.register(spark)
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.SketchFunctions.register(spark)
-    graft.functions.AggregatorFunctions.register(spark)
-    graft.operators.LayoutOps.registerHilbert(spark)
+    GraftExtensions.register(spark)
     // events needs the nanos-as-long read conf BEFORE its footer is
     // read — go through Tables.events, never the generic loader
     Tables.events(spark, sfDir).createOrReplaceTempView("events")

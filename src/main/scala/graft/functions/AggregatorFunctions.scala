@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
 
 /** The TYPED `Aggregator` UDAF surface — the public Dataset-friendly
@@ -32,8 +32,6 @@ object AggregatorFunctions {
     def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  val GeoMeanName = "graft_geomean"
-
-  def register(spark: SparkSession): Unit =
-    spark.udf.register(GeoMeanName, udaf(GeoMean))
+  /** [[GeoMean]] as a column function, named as SQL calls it. */
+  val geoMean: UserDefinedFunction = udaf(GeoMean).withName("graft_geomean")
 }

@@ -1,91 +1,44 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumn
+import org.apache.spark.sql.GraftColumn.expr
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 
-import graft.functions.expressions.{BloomAgg, BloomProbe, CmsProbe, CountMinAgg, ExpressionArgs, HistQuantile, KmvDistinctEstimate}
+import graft.functions.expressions.{BloomAgg, BloomProbe, CmsProbe, CountMinAgg, HistQuantile, KmvDistinctEstimate}
 
-/** Column API over the sketch aggregate(s). `register` is idempotent;
-  * operators call it before building plans (the analyzer wraps the
-  * returned AggregateFunction in an AggregateExpression).
+/** Column API over the sketch aggregates and their probes. Each column
+  * holds its expression directly: no registration, any session.
   */
 object SketchFunctions {
 
-  val KmvName = "graft_kmv_est"
-  val HistQuantileName = "graft_hist_quantile"
-  val CmsName = "graft_cms"
-  val CmsProbeName = "graft_cms_probe"
-  val BloomName = "graft_bloom"
-  val BloomProbeName = "graft_bloom_probe"
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      KmvName,
-      es => KmvDistinctEstimate(es(0), ExpressionArgs.literalInt(es(1), KmvName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      HistQuantileName,
-      es => HistQuantile(es(0),
-        ExpressionArgs.literalDouble(es(1), HistQuantileName),
-        ExpressionArgs.literalDouble(es(2), HistQuantileName),
-        ExpressionArgs.literalInt(es(3), HistQuantileName),
-        ExpressionArgs.literalDouble(es(4), HistQuantileName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      CmsName,
-      es => CountMinAgg(es(0),
-        ExpressionArgs.literalInt(es(1), CmsName),
-        ExpressionArgs.literalInt(es(2), CmsName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      CmsProbeName,
-      es => CmsProbe(es(0), es(1),
-        ExpressionArgs.literalInt(es(2), CmsProbeName),
-        ExpressionArgs.literalInt(es(3), CmsProbeName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      BloomName,
-      es => BloomAgg(es(0),
-        ExpressionArgs.literalInt(es(1), BloomName),
-        ExpressionArgs.literalInt(es(2), BloomName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      BloomProbeName,
-      es => BloomProbe(es(0), es(1),
-        ExpressionArgs.literalInt(es(2), BloomProbeName),
-        ExpressionArgs.literalInt(es(3), BloomProbeName)),
-      "scala_udf")
-  }
+  private def agg(f: AggregateFunction): Column = GraftColumn(f.toAggregateExpression())
 
   /** KMV distinct-count estimate over a 60-bit hash column (double). */
-  def kmvEst(hash: Column, k: Int): Column =
-    call_function(KmvName, hash, lit(k))
+  def kmvEst(hash: Column, k: Int): Column = agg(KmvDistinctEstimate(expr(hash), k))
 
   /** Fixed-grid histogram quantile estimate (constant-size mergeable
     * buffer; see [[graft.functions.expressions.HistQuantile]]).
     */
   def histQuantile(value: Column, lo: Double, hi: Double,
                    bins: Int, p: Double): Column =
-    call_function(HistQuantileName, value, lit(lo), lit(hi), lit(bins), lit(p))
+    agg(HistQuantile(expr(value), lo, hi, bins, p))
 
   /** Count-min sketch grid (d×w flattened) over a 60-bit hash column
     * (long); see [[graft.functions.expressions.CountMinAgg]].
     */
-  def cms(hash: Column, d: Int, w: Int): Column =
-    call_function(CmsName, hash, lit(d), lit(w))
+  def cms(hash: Column, d: Int, w: Int): Column = agg(CountMinAgg(expr(hash), d, w))
 
   /** Point estimate (min over rows) of a key's count in a CMS grid. */
   def cmsProbe(sketch: Column, hash: Column, d: Int, w: Int): Column =
-    call_function(CmsProbeName, sketch, hash, lit(d), lit(w))
+    GraftColumn(CmsProbe(expr(sketch), expr(hash), d, w))
 
   /** Bloom bitmap (mBits/64 longs) over a 60-bit hash column (long);
     * see [[graft.functions.expressions.BloomAgg]].
     */
-  def bloom(hash: Column, k: Int, mBits: Int): Column =
-    call_function(BloomName, hash, lit(k), lit(mBits))
+  def bloom(hash: Column, k: Int, mBits: Int): Column = agg(BloomAgg(expr(hash), k, mBits))
 
   /** Membership probe (boolean) of a key hash in a bloom bitmap. */
   def bloomProbe(sketch: Column, hash: Column, k: Int, mBits: Int): Column =
-    call_function(BloomProbeName, sketch, hash, lit(k), lit(mBits))
+    GraftColumn(BloomProbe(expr(sketch), expr(hash), k, mBits))
 }

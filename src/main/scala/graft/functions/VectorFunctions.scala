@@ -1,59 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumn
+import org.apache.spark.sql.GraftColumn.expr
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions.{CosineSimilarityFloat, DotProductFloat, ExpressionArgs, PqDecodeFloat, PqEncodeInts, PqReconstructFloat}
+import graft.functions.expressions.{CosineSimilarityFloat, DotProductFloat, PqDecodeFloat, PqEncodeInts, PqReconstructFloat}
 
-/** Column-level API for the native vector expressions.
-  *
-  * Spark 4 `Column` no longer wraps a Catalyst `Expression` directly,
-  * so custom expressions are surfaced through the session's
-  * `FunctionRegistry` + `call_function` (both public API).
-  * `register` is idempotent and cheap — query builders call it before
-  * constructing a plan that uses these columns.
+/** Column-level API for the native vector expressions. Each column
+  * holds its expression directly: no registration, any session.
   */
 object VectorFunctions {
 
-  val CosineName = "graft_cosine"
-  val DotName    = "graft_dot"
-  val PqReconstructName = "graft_pq_reconstruct"
-  val PqEncodeName = "graft_pq_encode"
-  val PqDecodeName = "graft_pq_decode"
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      CosineName, exprs => CosineSimilarityFloat(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      DotName, exprs => DotProductFloat(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      PqReconstructName,
-      exprs => PqReconstructFloat(exprs(0), exprs(1),
-        ExpressionArgs.literalInt(exprs(2), PqReconstructName),
-        ExpressionArgs.literalInt(exprs(3), PqReconstructName),
-        ExpressionArgs.literalInt(exprs(4), PqReconstructName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      PqEncodeName,
-      exprs => PqEncodeInts(exprs(0), exprs(1),
-        ExpressionArgs.literalInt(exprs(2), PqEncodeName),
-        ExpressionArgs.literalInt(exprs(3), PqEncodeName),
-        ExpressionArgs.literalInt(exprs(4), PqEncodeName)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      PqDecodeName,
-      exprs => PqDecodeFloat(exprs(0), exprs(1),
-        ExpressionArgs.literalInt(exprs(2), PqDecodeName),
-        ExpressionArgs.literalInt(exprs(3), PqDecodeName)),
-      "scala_udf")
-  }
-
   /** Cosine similarity of two array<float> columns (double result). */
-  def cosine(a: Column, b: Column): Column = call_function(CosineName, a, b)
+  def cosine(a: Column, b: Column): Column =
+    GraftColumn(CosineSimilarityFloat(expr(a), expr(b)))
 
   /** Dot product of two array<float> columns (double result). */
-  def dot(a: Column, b: Column): Column = call_function(DotName, a, b)
+  def dot(a: Column, b: Column): Column = GraftColumn(DotProductFloat(expr(a), expr(b)))
 
   /** L2 norm of an array<float> column. */
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
@@ -62,17 +26,17 @@ object VectorFunctions {
     * array<array<float>> codebook (m subspaces of sub dims, k rows).
     */
   def pqReconstruct(x: Column, cb: Column, m: Int, sub: Int, k: Int): Column =
-    call_function(PqReconstructName, x, cb, lit(m), lit(sub), lit(k))
+    GraftColumn(PqReconstructFloat(expr(x), expr(cb), m, sub, k))
 
   /** PQ code word (array<int> of length m) of an array<float> against
     * an array<array<float>> codebook — the persisted-index payload.
     */
   def pqEncode(x: Column, cb: Column, m: Int, sub: Int, k: Int): Column =
-    call_function(PqEncodeName, x, cb, lit(m), lit(sub), lit(k))
+    GraftColumn(PqEncodeInts(expr(x), expr(cb), m, sub, k))
 
   /** Reassemble a code word into its reconstruction (bit-equal to
     * [[pqReconstruct]] of the original vector).
     */
   def pqDecode(codes: Column, cb: Column, m: Int, sub: Int): Column =
-    call_function(PqDecodeName, codes, cb, lit(m), lit(sub))
+    GraftColumn(PqDecodeFloat(expr(codes), expr(cb), m, sub))
 }

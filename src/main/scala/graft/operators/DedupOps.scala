@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -115,7 +115,6 @@ object DedupOps {
     * odd = incoming batch.
     */
   def bloomDedup(docs: DataFrame): DataFrame = {
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     val keyHash = conv(substring(md5(lower(col("text"))), 1, 15), 16, 10)
       .cast("long")
     val corpus = docs.where(pmod(col("doc_id"), lit(2)) === 0)
@@ -140,7 +139,6 @@ object DedupOps {
     * tokenize + n-gram expressions (hot path at scale).
     */
   private[graft] def docShingles(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs.select(col("doc_id"),
         graft.functions.NativeText.shingles(
           graft.functions.NativeText.tokens(col("text")), ShingleN).as("sh"))
@@ -157,11 +155,8 @@ object DedupOps {
     * so the two can never disagree on banding.
     */
   private[graft] def bandsOf(ds: DataFrame): DataFrame = {
-    ds.sparkSession.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      exprs => graft.functions.expressions.MinHashSignature(exprs.head, NumHashes, P),
-      "scala_udf")
-    val signed = ds.withColumn("sig", call_function("graft_minhash_sig", col("sh")))
+    val signed = ds.withColumn("sig", GraftColumn(graft.functions.expressions.MinHashSignature(
+      GraftColumn.expr(col("sh")), NumHashes, P)))
     signed.select(
       col("doc_id"),
       explode(transform(sequence(lit(0), lit(NumBands - 1)), b =>
@@ -291,7 +286,6 @@ object DedupOps {
     * interpreted (the dominant cost of the pairing query at 10×).
     */
   private def simhashSigs(docs: DataFrame, bits: Int): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     docs
       .select(col("doc_id"), ws.as("ws"))
@@ -400,7 +394,6 @@ object DedupOps {
   /** (doc_id, ws) token arrays of non-empty docs — the shared head of
     * the substring family. */
   private def substrToks(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs
       .select(col("doc_id"), graft.functions.NativeText.tokens(col("text")).as("ws"))
       .where(size(col("ws")) > 0)

@@ -175,17 +175,15 @@ object EventsOps {
   }
 
   /** Per-type geometric mean of positive values through the
-    * registered [[graft.functions.AggregatorFunctions.GeoMean]]
-    * typed-Aggregator UDAF (register it on the session first). The
-    * WHERE mirrors the aggregator's positive-only reduce so `n`
+    * [[graft.functions.AggregatorFunctions.GeoMean]] typed-Aggregator
+    * UDAF. The WHERE mirrors the aggregator's positive-only reduce so `n`
     * counts exactly the aggregated rows.
     */
   def geoMeanByType(events: DataFrame): DataFrame =
     events.where(col("value") > 0)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        round(call_udf(graft.functions.AggregatorFunctions.GeoMeanName,
-          col("value")), 4).as("geomean"))
+        round(graft.functions.AggregatorFunctions.geoMean(col("value")), 4).as("geomean"))
       .orderBy("event_type")
 
   /** Exponentially weighted moving average over the per-(type, day)
@@ -490,7 +488,6 @@ object EventsOps {
     * the DuckDB oracle rather than rows-only.
     */
   def kmvDistinctUsers(events: DataFrame, k: Int = 64): DataFrame = {
-    graft.functions.SketchFunctions.register(events.sparkSession)
     events
       .select(col("event_type"),
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -542,7 +539,6 @@ object EventsOps {
     * DuckDB oracle.
     */
   def kmvDistinctEventsAgg(events: DataFrame, k: Int = 64): DataFrame = {
-    graft.functions.SketchFunctions.register(events.sparkSession)
     events
       .select(col("event_type"),
         conv(substring(md5(col("event_id").cast("string")), 1, 15), 16, 10)
@@ -850,7 +846,6 @@ object EventsOps {
     * other KMV rows.
     */
   def rollingActiveKmv(events: DataFrame, k: Int = 64): DataFrame = {
-    graft.functions.SketchFunctions.register(events.sparkSession)
     val pairs = Checkpoints.truncate(events
       .select(col("user_id"),
         to_date(date_trunc("day", timestamp_millis(tsMs))).as("day"))

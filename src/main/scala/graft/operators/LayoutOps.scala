@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data LAYOUT: Z-order (Morton) clustering, the
@@ -174,21 +174,10 @@ object LayoutOps {
   val HBoxYLo = 8L
   val HBoxYHi = 15L
 
-  val HilbertName = "graft_hilbert"
-
-  /** Registers [[HilbertName]] on the session function registry (the
-    * Spark-4 route to a custom expression as a Column). Idempotent.
-    */
-  def registerHilbert(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      HilbertName,
-      exprs => graft.functions.expressions.HilbertIndex(
-        exprs(0), exprs(1), HBits),
-      "scala_udf")
-
   /** Hilbert curve distance of two long cell coordinates. */
   def hValue(a: Column, b: Column): Column =
-    call_function(HilbertName, a, b)
+    GraftColumn(graft.functions.expressions.HilbertIndex(
+      GraftColumn.expr(a), GraftColumn.expr(b), HBits))
 
   private def hCells(lineitem: DataFrame): DataFrame =
     lineitem.select(
@@ -199,7 +188,6 @@ object LayoutOps {
   /** Write-once Hilbert-clustered lineitem layout ([[HFiles]] files,
     * range-partitioned and locally sorted by curve distance). */
   def hilbertLayoutDir(lineitem: DataFrame, sfDir: String): String = {
-    registerHilbert(lineitem.sparkSession)
     graft.sources.Fixtures.ensure("hilbert", sfDir,
       Seq(s"$sfDir/lineitem.parquet"), params = s"b$HBits f$HFiles") { dir =>
       hCells(lineitem)

@@ -34,7 +34,6 @@ object PipelineOps {
     // native tokenizer on the gate's hot path (HOF tokenize is
     // interpreted per element; the native expression is a byte loop —
     // output-equivalence is asserted by TextFunctionsSpec)
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val langs = TextAnalysisOps.StopwordsByLang.map(_._1)
     // language argmax as UNCONDITIONAL array ops — first index of the
@@ -92,7 +91,6 @@ object PipelineOps {
     */
   private def contaminationHits(docs: DataFrame, probeMaxId: Long,
                                 n: Int, minOverlap: Long): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     def shingled(df: DataFrame) = df.select(col("doc_id"),
       explode(array_distinct(graft.functions.NativeText.wordNgrams(
         graft.functions.NativeText.tokens(col("text")), n))).as("s"))
@@ -202,7 +200,6 @@ object PipelineOps {
     * a one-ULP cross-engine divergence would flip a resampled row.
     */
   def dsirWeights(docs: DataFrame, probeMaxId: Long = ProbeMaxId): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val b = pmod(
       conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"),
       lit(DsirBuckets.toLong))
@@ -265,7 +262,6 @@ object PipelineOps {
     * gibberish / outlier-vocabulary documents.
     */
   def unigramLogprob(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val toks = docs.select(col("doc_id"),
       explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
     // total token count via the row-local size() — one extra pruned
@@ -306,7 +302,6 @@ object PipelineOps {
     * out identically in both engines.
     */
   def bigramLogprob(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val bf = docs
       .select(col("doc_id"),
         explode(graft.functions.NativeText.wordNgrams(
@@ -589,7 +584,6 @@ object PipelineOps {
     * count), and the final chunk is simply shorter instead of padded.
     */
   def docChunks(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     docs.select(col("doc_id"), ws.as("ws"))
       .where(size(col("ws")) > 0)
@@ -618,7 +612,6 @@ object PipelineOps {
     * semantics, matching how packed pretraining batches actually cut.
     */
   def chunkPacking(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val chunks = docs.select(col("doc_id"), col("lang"), ws.as("ws"))
       .where(size(col("ws")) > 0)
@@ -675,7 +668,6 @@ object PipelineOps {
     * bookkeeping.
     */
   def filterFunnel(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val langs = TextAnalysisOps.StopwordsByLang.map(_._1)
 
     val flagged = docs
@@ -742,7 +734,6 @@ object PipelineOps {
     * the cap safe against a 100M-doc megadomain.
     */
   def sourceCap(docs: DataFrame, n: Int = SourceCapN): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val nTok = size(ws).cast("long")
     // det4, not round: the quality key RANKS rows, and Spark's
@@ -912,7 +903,6 @@ object PipelineOps {
     * composes with the funnel/cap stages without an exchange.
     */
   def qualityLogreg(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val n = size(ws).cast("long")
     // Features come from the SHARED qf* building blocks (one source

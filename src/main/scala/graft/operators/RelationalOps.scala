@@ -283,7 +283,6 @@ object RelationalOps {
     * order-insensitive so the estimate is hash-gateable.
     */
   def lineitemHistQuantiles(lineitem: DataFrame): DataFrame = {
-    graft.functions.SketchFunctions.register(lineitem.sparkSession)
     import graft.functions.SketchFunctions.histQuantile
     def q(p: Double) =
       round(histQuantile(col("l_extendedprice"), HistQLo, HistQHi, HistQBins, p), 4)

@@ -57,7 +57,6 @@ object RetrievalOps {
     * aggregate cross-joined in.
     */
   private def bm25Scored(docs: DataFrame): DataFrame = {
-    NativeText.register(docs.sparkSession)
     val tf = docs
       .select(col("doc_id"), explode(NativeText.tokens(col("text"))).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -188,7 +187,6 @@ object RetrievalOps {
     * disjoint document sets, so no stored dl ever needs updating.
     */
   private def postingsOf(docs: DataFrame): DataFrame = {
-    NativeText.register(docs.sparkSession)
     docs
       .select(col("doc_id"), explode(NativeText.tokens(col("text"))).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
@@ -487,7 +485,6 @@ object RetrievalOps {
     */
   def hybridRrf(docs: DataFrame, emb: DataFrame, k: Int = 15,
       probeId: Long = 0L): DataFrame = {
-    VectorFunctions.register(docs.sparkSession)
     val lexScores = bm25Scored(docs)
       .groupBy("doc_id").agg(sum(col("contrib")).as("lex_score"))
     fuseLegs(leg(lexScores, "lex_score", "lex_rank"), emb, k, probeId)
@@ -504,7 +501,6 @@ object RetrievalOps {
   def hybridRrfIndexed(docs: DataFrame, emb: DataFrame, sfDir: String,
       k: Int = 15, probeId: Long = 0L): DataFrame = {
     val spark = docs.sparkSession
-    VectorFunctions.register(spark)
     val lexScores = postingsScores(spark, postingsIndexDir(docs, sfDir))
       .select(col("doc_id"), col("score_raw").as("lex_score"))
     fuseLegs(leg(lexScores, "lex_score", "lex_rank"), emb, k, probeId)

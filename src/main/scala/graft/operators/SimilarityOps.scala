@@ -113,7 +113,6 @@ object SimilarityOps {
   def mmrRerank(emb: DataFrame, probeId: Long = 0L, candK: Int = MmrCandK,
                 k: Int = MmrK): DataFrame = {
     val spark = emb.sparkSession
-    VectorFunctions.register(spark)
     val probe = emb.where(col("vec_id") === probeId)
       .select(col("embedding").as("probe_vec"))
     val cand = emb.crossJoin(broadcast(probe))
@@ -1583,7 +1582,6 @@ object SimilarityOps {
   def annIvfPq(emb: DataFrame, centroidMod: Int = 97, numCentroids: Int = 16,
                nprobe: Int = 3, nProbes: Int = 10, k: Int = 10,
                rerankM: Int = IvfPqRerankM): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val centroids = seedCentroids(emb, centroidMod, numCentroids)
     // PQ-encode each routed vector once under the TRAINED codebook
     // (one Lloyd round — the ann_pq_trained model); codes (here:
@@ -1626,7 +1624,6 @@ object SimilarityOps {
   def annIvfAdc(emb: DataFrame, centroidMod: Int = 97, numCentroids: Int = 16,
                 nprobe: Int = 3, nProbes: Int = 10, k: Int = 10,
                 rerankM: Int = IvfPqRerankM): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val centroids = seedCentroids(emb, centroidMod, numCentroids)
     val encoded = withResiduals(emb, centroids)
       .crossJoin(broadcast(ivfPqResidualCodebook(emb, centroids)))
@@ -1661,7 +1658,6 @@ object SimilarityOps {
     * paths and the metric arithmetic at once.
     */
   def annRecallNprobeSweep(emb: DataFrame, k: Int = 10): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     val legs = for {
       np <- Seq(1, 2, 4, 8)
       (method, search) <- Seq(
@@ -1792,7 +1788,6 @@ object SimilarityOps {
                       nProbes: Int = 10, k: Int = 10,
                       rerankM: Int = IvfPqRerankM): DataFrame = {
     val spark = emb.sparkSession
-    VectorFunctions.register(spark)
     val centroids = seedCentroids(emb, centroidMod, numCentroids)
     val lists = spark.read.parquet(
       ivfPqListsDir(emb, sfDir, centroidMod, numCentroids))
@@ -1937,7 +1932,6 @@ object SimilarityOps {
                         nprobe: Int = 3, nProbes: Int = 10, k: Int = 10,
                         rerankM: Int = IvfPqRerankM): DataFrame = {
     val spark = emb.sparkSession
-    VectorFunctions.register(spark)
     val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
       centroidMod, numCentroids, 1, 0.0))
     val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
@@ -1984,7 +1978,6 @@ object SimilarityOps {
                      nProbes: Int = 10, k: Int = 10,
                      rerankM: Int = IvfPqRerankM): DataFrame = {
     val spark = emb.sparkSession
-    VectorFunctions.register(spark)
     val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
       centroidMod, numCentroids, 1, 0.0))
     val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
@@ -2007,7 +2000,6 @@ object SimilarityOps {
 
   private def annPqFrom(emb: DataFrame, codebook: DataFrame, nProbes: Int,
                         k: Int, rerankM: Int): DataFrame = {
-    VectorFunctions.register(emb.sparkSession)
     // per subspace m: argmin_j ( |c|^2 - 2 x·c ) with ties to the
     // lowest j, then concatenate the winning rows' slices — one
     // native pass per vector (PqReconstructFloat; the interpreted
@@ -2118,7 +2110,6 @@ object SimilarityOps {
     */
   def nswEdges(universe: DataFrame, mods: Seq[Int],
                explicitParams: Option[(Int, Long)] = None): DataFrame = {
-    VectorFunctions.register(universe.sparkSession)
     val (k, stride) = explicitParams.getOrElse(semAdaptiveParams(universe.count()))
     val legs = mods.map { mod =>
       val assigned = nswAssignment(universe, mod, k, stride)
@@ -2169,7 +2160,6 @@ object SimilarityOps {
                       k: Int = 10,
                       entryCount: Int = NswEntries,
                       beam: Int = NswBeam): DataFrame = {
-    VectorFunctions.register(probesSrc.sparkSession)
     val verts = vertices.select(col("vec_id"), col("embedding"))
     val probes = probesSrc.where(col("vec_id") < nProbes)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))

@@ -82,7 +82,6 @@ object TextAnalysisOps {
     * plan is a single projection over the scan, no exchange.
     */
   def tokenStats(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val lens = transform(ws, w => length(w).cast("long"))
     val n = size(ws).cast("long")
@@ -114,7 +113,6 @@ object TextAnalysisOps {
     * total order, so the cut is deterministic at every SF.
     */
   def bpeMergePairs(docs: DataFrame, k: Int = BpeMergeTopK): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val wordFreq = docs
       .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("wf"))
@@ -170,7 +168,6 @@ object TextAnalysisOps {
     */
   private def bpeTrainLoop(docs: DataFrame, rounds: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val base = docs
       .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
       .where(length(col("word")) >= 2 && col("word").rlike("^[a-z0-9]+$"))
@@ -196,8 +193,7 @@ object TextAnalysisOps {
         val (x, y, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((r.toLong, x, y, cnt))
         cur = cur.select(
-          call_function("replace", col("wstr"),
-            lit(s"($x)($y)"), lit(s"($x$y)")).as("wstr"),
+          replace(col("wstr"), lit(s"($x)($y)"), lit(s"($x$y)")).as("wstr"),
           col("wf"))
       }
     }
@@ -288,7 +284,6 @@ object TextAnalysisOps {
     * Row-local, shuffle-free.
     */
   def qualityScore(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val n = size(ws).cast("long")
     val stop = qfStopCount(ws)
@@ -333,7 +328,6 @@ object TextAnalysisOps {
     * engines on an FP rendering difference.
     */
   def gopherRules(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val n = size(ws).cast("long")
     val meanLen = det4(qfSumLen(ws).cast("double") / n.cast("double"))
@@ -372,7 +366,6 @@ object TextAnalysisOps {
     * and SQL-reproducible.
     */
   def langId(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val hits: Seq[(String, Column)] = StopwordsByLang.map { case (lang, stops) =>
       lang -> size(filter(ws, w => w.isin(stops.map(x => x: Any): _*)))
@@ -397,7 +390,6 @@ object TextAnalysisOps {
     * Native tokenize + fold expressions.
     */
   def docFingerprint(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs
       .select(
         col("doc_id"),
@@ -418,7 +410,6 @@ object TextAnalysisOps {
     * produced once.
     */
   def tfidfTopK(docs: DataFrame, k: Int = 3): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
     val tf = docs
       .select(col("doc_id"),
@@ -446,7 +437,6 @@ object TextAnalysisOps {
     * derived-aggregate self-join recomputing the tokenize subtree.
     */
   def bigramLm(docs: DataFrame, k: Int = 3, minHead: Long = 10L): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val bg = docs
       .select(explode(graft.functions.NativeText.wordNgrams(
         graft.functions.NativeText.tokens(col("text")), 2)).as("bigram"))
@@ -479,7 +469,6 @@ object TextAnalysisOps {
   val RepetitionNgramN = 3
 
   def repetitionScore(docs: DataFrame, n: Int = RepetitionNgramN): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val grams = graft.functions.NativeText.wordNgrams(
       graft.functions.NativeText.tokens(col("text")), n)
     docs
@@ -505,7 +494,6 @@ object TextAnalysisOps {
     * other quality score — candidates for one fused pass.
     */
   def tokenEntropy(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     docs
       .select(col("doc_id"), ws.as("ws"))
@@ -525,7 +513,6 @@ object TextAnalysisOps {
   }
 
   def ngramFreq(docs: DataFrame, n: Int = 2, k: Int = 30): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs
       .select(explode(graft.functions.NativeText.wordNgrams(
         graft.functions.NativeText.tokens(col("text")), n)).as("ngram"))
@@ -559,7 +546,6 @@ object TextAnalysisOps {
     */
   def pmiCollocations(docs: DataFrame, minCount: Long = PmiMinCount,
                       k: Int = PmiTopK): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val uni = docs.select(explode(ws).as("word"))
       .groupBy("word").agg(count(lit(1)).as("c"))
@@ -622,8 +608,6 @@ object TextAnalysisOps {
     */
   def cmsHeavyHitters(docs: DataFrame, d: Int = CmsD, w: Int = CmsW,
                       k: Int = CmsTopK): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
-    graft.functions.SketchFunctions.register(docs.sparkSession)
     val hashed = docs
       .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
       .select(col("word"),
@@ -664,7 +648,6 @@ object TextAnalysisOps {
     * array, which the explode drops.
     */
   private def docFingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val grams = graft.functions.NativeText.wordNgrams(
       graft.functions.NativeText.tokens(col("text")), WinnowK)
     docs.select(col("doc_id"),
@@ -762,7 +745,6 @@ object TextAnalysisOps {
     * |sources|².
     */
   def sourceVocabOverlap(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     val ws = graft.functions.NativeText.tokens(col("text"))
     val vocab = docs
       .select(col("source"), explode(ws).as("word"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.NativeText
 
@@ -40,17 +41,12 @@ import graft.functions.NativeText
   */
 object WordCountOps {
 
-  /** Native tokenizer column (registers the expression first). */
-  private def tokens(docs: DataFrame, textCol: String = "text"): Column = {
-    NativeText.register(docs.sparkSession)
-    NativeText.tokens(col(textCol))
-  }
+  /** Native tokenizer column over `text`. */
+  private def tokens: Column = NativeText.tokens(col("text"))
 
-  /** The kernel's per-task `(word, cnt)` partials (registers it first). */
-  private def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    NativeText.register(docs.sparkSession)
+  /** The kernel's per-task `(word, cnt)` partials. */
+  private def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.select(NativeText.tokenCounts(col(textCol)))
-  }
 
   /** (word, cnt) before ordering: the kernel's per-task partials summed
     * per word. `coalesce` keeps `cnt` NOT NULL, as `count` had it.
@@ -114,7 +110,7 @@ object WordCountOps {
     */
   def wordCountPerSource(docs: DataFrame): DataFrame =
     docs
-      .select(col("source"), explode(tokens(docs)).as("word"))
+      .select(col("source"), explode(tokens).as("word"))
       .groupBy("source", "word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("source", "word")
@@ -155,7 +151,7 @@ object WordCountOps {
     */
   def groupedKeyAgg(docs: DataFrame): DataFrame =
     docs
-      .select(col("lang"), col("doc_id"), explode(tokens(docs)).as("word"))
+      .select(col("lang"), col("doc_id"), explode(tokens).as("word"))
       .groupBy("lang", "word")
       .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("n_docs"))
       .orderBy("lang", "word")
@@ -168,7 +164,7 @@ object WordCountOps {
     */
   def packetsBaseline(docs: DataFrame): DataFrame =
     docs
-      .select(col("source"), explode(tokens(docs)).as("word"))
+      .select(col("source"), explode(tokens).as("word"))
       .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
       .groupBy("source").agg(count(lit(1)).as("packets"), sum("cnt").as("tokens"))
       .orderBy("source")
@@ -193,7 +189,7 @@ object WordCountOps {
     */
   def writeTsv(wordcounts: DataFrame, path: String): Unit =
     reducerSorted(wordcounts)
-      .select(concat_ws("\t", col("word"), col("cnt").cast("string")))
+      .select(concat_ws("\t", col("word"), col("cnt").cast(StringType)))
       .write.mode("overwrite").text(path)
 
   /** `df` with a top-level global sort made per-partition; else `df`. */

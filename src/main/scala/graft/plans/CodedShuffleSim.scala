@@ -137,8 +137,6 @@ object CodedShuffleSim {
   def simulate(docs: DataFrame): Result = {
     val spark = docs.sparkSession
     import spark.implicits._
-    NativeText.register(spark)
-
     // combiner output per (node-set p, word); reducer target and
     // encoder replica node are column expressions of the cross-engine
     // hash. A null source has no node-set: p = enc = -1 leaves its

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
-import graft.functions.VectorFunctions
 import graft.operators._
 
 /** Registry slice: similarity search / embeddings. */
@@ -53,7 +52,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
       }),
 
     "similarity_topk" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.similarityTopK(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.similarityTopK(Tables.embeddings(s, d)),
       Some(s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS probe_vec FROM embeddings WHERE vec_id < 10),
               |s AS (SELECT probe_id, vec_id, ${cosSql("probe_vec", "embedding")} AS score
               |      FROM embeddings CROSS JOIN p WHERE vec_id <> probe_id),
@@ -68,7 +67,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // similarity_topk scan-once/WindowGroupLimit shape plus a
     // probes×k-row vote aggregate; ties to the smallest label
     "knn_classify" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.knnClassify(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.knnClassify(Tables.embeddings(s, d)),
       Some {
         import SimilarityOps.{KnnProbes, KnnK}
         s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS probe_vec FROM embeddings
@@ -85,7 +84,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
       }),
 
     "ann_ivf" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.annIvf(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annIvf(Tables.embeddings(s, d)),
       Some(ivfOracleSqlAt(3))),
 
     // one distributed Lloyd iteration in-plan; the oracle recomputes
@@ -97,10 +96,10 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // parquet and only scores (oracle hash unchanged — the model is
     // deterministic)
     "ann_ivf_kmeans" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annIvfKmeans(Tables.embeddings(s, d), d,
           centroidMod = 97, numCentroids = 16, nprobe = 3, nProbes = 10,
-          k = 10, iterations = 1, moveEps = 0.0) },
+          k = 10, iterations = 1, moveEps = 0.0),
       Some(kmeansOracleSql(1))),
 
     // persisted INVERTED LISTS: the corpus assignment lives on disk
@@ -109,10 +108,10 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // Same deterministic assignment rule as ann_ivf_kmeans -> same
     // result -> same oracle; the hash match proves index == inline.
     "ann_ivf_indexed" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annIvfIndexed(Tables.embeddings(s, d), d,
           centroidMod = 97, numCentroids = 16, nprobe = 3, nProbes = 10,
-          k = 10, iterations = 1, moveEps = 0.0) },
+          k = 10, iterations = 1, moveEps = 0.0),
       Some(kmeansOracleSql(1))),
 
     // steady-state IVF maintenance: the arriving (odd-id) batch is
@@ -125,8 +124,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // member of the incremental family: LSH band index, digest index,
     // centroid model, and now the IVF lists themselves).
     "ann_ivf_upsert" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfUpsert(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annIvfUpsert(Tables.embeddings(s, d), d),
       Some(ivfUpsertOracleSql)),
 
     // the index lifecycle's DELETE leg: tombstones appended next to
@@ -137,8 +135,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // model, so a leaked tombstone — returned neighbor that should
     // be dead, or a live one dropped — reds the hash.
     "ann_ivf_delete" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfDelete(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annIvfDelete(Tables.embeddings(s, d), d),
       Some(ivfUpsertOracle(s"AND a.vec_id % ${SimilarityOps.IvfDeleteMod} != ${SimilarityOps.IvfDeleteRes}"))),
 
     // ANN quality eval: recall@10 of the IVF index vs brute-force
@@ -146,8 +143,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // searches from scratch and intersects them, so the hash match
     // re-proves both search paths and the metric arithmetic at once
     "ann_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annRecallEval(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annRecallEval(Tables.embeddings(s, d), d),
       Some(s"""WITH p AS (SELECT vec_id AS probe_id, embedding AS probe_vec FROM embeddings WHERE vec_id < 10),
               |s AS (SELECT probe_id, vec_id, ${cosSql("probe_vec", "embedding")} AS score
               |      FROM embeddings CROSS JOIN p WHERE vec_id <> probe_id),
@@ -167,15 +163,14 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // round count (moveEps = 0 → the early stop can't desync the two
     // engines' round counts)
     "ann_ivf_kmeans2" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annIvfKmeans(Tables.embeddings(s, d), d,
           centroidMod = 97, numCentroids = 16, nprobe = 3, nProbes = 10,
-          k = 10, iterations = 2, moveEps = 0.0) },
+          k = 10, iterations = 2, moveEps = 0.0),
       Some(kmeansOracleSql(2))),
 
     "doc_embedding_join" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.docEmbeddingJoin(Tables.documents(s, d), Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.docEmbeddingJoin(Tables.documents(s, d), Tables.embeddings(s, d)),
       Some(s"""SELECT d.doc_id, d.lang, e.label, d.n_chars, round(${l2Sql("e.embedding")}, 4) AS emb_norm
               |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id ORDER BY d.doc_id""".stripMargin)),
 
@@ -196,7 +191,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
              |FROM x GROUP BY lang, pos ORDER BY lang, pos""".stripMargin)),
 
     "embedding_lsh_dup" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.embeddingLshDup(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.embeddingLshDup(Tables.embeddings(s, d)),
       Some {
         val keyExprs = (0 until 8).map { t =>
           val bits = (0 until 8).map { b =>
@@ -216,9 +211,9 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // pass; oracle reproduces the quantize/dequantize double math and
     // the rerank pool from SimilarityOps.Sq8RerankM
     "ann_sq8" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annSq8(Tables.embeddings(s, d), d,
-          nProbes = 10, k = 10, rerankM = SimilarityOps.Sq8RerankM) },
+          nProbes = 10, k = 10, rerankM = SimilarityOps.Sq8RerankM),
       Some(sq8OracleSql)),
 
     // recall@10 of the SQ8 quantized path vs brute force — the
@@ -226,40 +221,37 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // ann_recall_eval discipline for the quantized family); the
     // oracle nests the full quantized-search SQL as the approx side
     "ann_sq8_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annSq8RecallEval(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annSq8RecallEval(Tables.embeddings(s, d), d),
       Some(annRecallOracle(sq8OracleSql))),
 
     // product quantization with asymmetric scoring: codes = per-
     // subspace argmin centroid, reconstruction scored then exact
     // rerank; every constant from SimilarityOps.Pq*
     "ann_pq" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annPq(Tables.embeddings(s, d), d,
-          nProbes = 10, k = 10, rerankM = SimilarityOps.PqRerankM) },
+          nProbes = 10, k = 10, rerankM = SimilarityOps.PqRerankM),
       Some(pqOracleSql)),
 
     // recall@10 of the PQ path vs brute force — same discipline as
     // ann_sq8_recall_eval for the 64x-compressed codes
     "ann_pq_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annPqRecallEval(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annPqRecallEval(Tables.embeddings(s, d), d),
       Some(annRecallOracle(pqOracleSql))),
 
     // PQ over the one-Lloyd-round TRAINED codebook: same probe path
     // (annPqFrom + native reconstruction), better model — the oracle
     // replays the training round then the identical search body
     "ann_pq_trained" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) =>
         SimilarityOps.annPqTrained(Tables.embeddings(s, d), d,
-          nProbes = 10, k = 10, rerankM = SimilarityOps.PqRerankM) },
+          nProbes = 10, k = 10, rerankM = SimilarityOps.PqRerankM),
       Some(pqTrainedOracleSql)),
 
     // recall@10 of the trained-codebook PQ path — the measured
     // improvement the training round buys over ann_pq_recall_eval
     "ann_pq_trained_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annPqTrainedRecallEval(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annPqTrainedRecallEval(Tables.embeddings(s, d), d),
       Some(annRecallOracle(pqTrainedOracleSql))),
 
     // the composed billion-vector index: IVF routing prunes the scan
@@ -267,8 +259,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // rerank on the top PqRerankM — both halves the separately-gated
     // machines, composed unchanged
     "ann_ivfpq" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfPq(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annIvfPq(Tables.embeddings(s, d)),
       Some(ivfPqOracleSql)),
 
     // recall@10 of IVF-PQ vs brute force — routing miss x
@@ -276,8 +267,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // (r16: trained codebook + IvfPqRerankM raised this 0.47 -> 0.63,
     // against the 0.68 routing cap)
     "ann_ivfpq_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfPqRecallEval(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annIvfPqRecallEval(Tables.embeddings(s, d)),
       Some(annRecallOracle(ivfPqOracleSql))),
 
     // IVFADC — the residual-encoded composed index (route, subtract
@@ -286,8 +276,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // as a first-class path so its recall row can be A/B'd against
     // ann_ivfpq at identical knobs
     "ann_ivfadc" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfAdc(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annIvfAdc(Tables.embeddings(s, d)),
       Some(ivfAdcOracleSql)),
 
     // the A/B row: on THIS corpus (unit-norm near-uniform embeddings,
@@ -296,8 +285,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // the row pins the precondition a deployment would check per
     // corpus before picking the encoding
     "ann_ivfadc_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfAdcRecallEval(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annIvfAdcRecallEval(Tables.embeddings(s, d)),
       Some(annRecallOracle(ivfAdcOracleSql))),
 
     // the tuning curve for the knob a deployment actually turns:
@@ -305,8 +293,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // IVF-PQ, one gated multi-row metric; each leg's oracle replays
     // its search from scratch at that probe width
     "ann_recall_nprobe_sweep" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annRecallNprobeSweep(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annRecallNprobeSweep(Tables.embeddings(s, d)),
       Some {
         val legs = for {
           np <- Seq(1, 2, 4, 8)
@@ -328,15 +315,13 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // with exact scoring; probe cost is O(beam*G*rounds) rows per
     // probe at ANY corpus size
     "ann_nsw" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNsw(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.annNsw(Tables.embeddings(s, d)),
       Some(nswOracleSql)),
 
     // the persisted adjacency probed by the same walk — shares the
     // inline oracle verbatim (index == inline proof)
     "ann_nsw_indexed" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswIndexed(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswIndexed(Tables.embeddings(s, d), d),
       Some(nswOracleSql)),
 
     // recall@10 of the graph walk vs brute force: 0.73 at sf0.01
@@ -347,8 +332,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // hash-proven by ann_nsw_indexed), so the eval never re-pays
     // the build
     "ann_nsw_recall_eval" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswRecallEval(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswRecallEval(Tables.embeddings(s, d), d),
       Some(annRecallOracle(nswOracleSql))),
 
     // the graph family's tuning curve (the nprobe-sweep discipline
@@ -358,8 +342,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // without any rebuild; each leg's oracle replays the whole
     // build + walk from scratch at that entry count
     "ann_nsw_entry_sweep" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswEntrySweep(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswEntrySweep(Tables.embeddings(s, d), d),
       Some {
         val legs = SimilarityOps.NswEntrySweep.map { e =>
           s"""SELECT CAST($e AS BIGINT) AS entries,
@@ -378,8 +361,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // round, probe cost linear in beam, corpus-size-independent;
     // each leg's oracle replays build + walk at that beam width
     "ann_nsw_beam_sweep" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswBeamSweep(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswBeamSweep(Tables.embeddings(s, d), d),
       Some {
         val legs = SimilarityOps.NswBeamSweep.map { b =>
           s"""SELECT CAST($b AS BIGINT) AS beam,
@@ -397,16 +379,14 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // the documented contract); the oracle rebuilds that contract
     // from scratch, so the gate pins append == defined rebuild
     "ann_nsw_upsert" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswUpsert(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswUpsert(Tables.embeddings(s, d), d),
       Some(nswUpsertOracleSql(""))),
 
     // DELETE leg: the shared tombstone slice subtracted from the
     // SEARCHABLE vertex set — a dead vertex is neither returned nor
     // traversed (it cannot relay a walk); adjacency on disk untouched
     "ann_nsw_delete" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswDelete(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswDelete(Tables.embeddings(s, d), d),
       Some(nswUpsertOracleSql(
         s"WHERE NOT (vec_id % ${SimilarityOps.IvfDeleteMod} = ${SimilarityOps.IvfDeleteRes})"))),
 
@@ -416,8 +396,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // over the compacted layout is gated by the SAME from-scratch
     // oracle as the delete leg — compaction is invisible to search
     "ann_nsw_compacted" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annNswCompacted(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annNswCompacted(Tables.embeddings(s, d), d),
       Some(nswUpsertOracleSql(
         s"WHERE NOT (vec_id % ${SimilarityOps.IvfDeleteMod} = ${SimilarityOps.IvfDeleteRes})"))),
 
@@ -426,7 +405,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // batch edges are a pure function of (row, frozen corpus), so
     // stream == batch == defined rebuild through one oracle
     "streamed_nsw_upsert" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) => {
         val edges = graft.streaming.EventStreams.streamedNswLayout(s, d)
         SimilarityOps.annNswOverEdges(Tables.embeddings(s, d),
           Tables.embeddings(s, d), s.read.parquet(edges)) },
@@ -438,8 +417,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // codes; decode == fused-encode bit-equality makes the inline
     // oracle shared verbatim (index == inline proof)
     "ann_ivfpq_indexed" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfPqIndexed(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annIvfPqIndexed(Tables.embeddings(s, d), d),
       Some(ivfPqOracleSql)),
 
     // steady-state coded-list maintenance: the odd-id batch encoded
@@ -448,16 +426,14 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // from the corpus slice and rebuilds everything from scratch —
     // append == rebuild for the composed index
     "ann_ivfpq_upsert" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfPqUpsert(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annIvfPqUpsert(Tables.embeddings(s, d), d),
       Some(ivfPqUpsertOracle(""))),
 
     // the coded lifecycle's DELETE leg: id-only tombstone log
     // subtracted before decode, physical removal deferred to the
     // layout-agnostic compaction; oracle = rebuild minus the slice
     "ann_ivfpq_delete" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        SimilarityOps.annIvfPqDelete(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.annIvfPqDelete(Tables.embeddings(s, d), d),
       Some(ivfPqUpsertOracle(
         s"AND a.vec_id % ${SimilarityOps.IvfDeleteMod} != ${SimilarityOps.IvfDeleteRes}"))),
 
@@ -467,7 +443,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // stream-maintained layout shares the batch upsert's rebuild
     // oracle — stream == batch == rebuild through one hash
     "streamed_ivfpq_upsert" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) => {
         val lists = s.read.parquet(
           graft.streaming.EventStreams.streamedIvfPqLayout(s, d))
         SimilarityOps.annIvfPqOverLists(Tables.embeddings(s, d), d, lists) },
@@ -477,7 +453,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // generation; threshold + cluster cap from SimilarityOps
     // constants, cap inert at tested SFs)
     "semantic_pairs" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.semanticPairs(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.semanticPairs(Tables.embeddings(s, d)),
       Some(s"""$semanticOracleBody
              |SELECT a_id, b_id, score FROM pairs ORDER BY a_id, b_id""".stripMargin)),
 
@@ -485,7 +461,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // graph (recursive-CTE oracle, the dup_components pattern) +
     // survivor flag; downstream filter is WHERE is_survivor = 1
     "semantic_dedup" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.semanticDedup(Tables.embeddings(s, d)) },
+      (s, d) => SimilarityOps.semanticDedup(Tables.embeddings(s, d)),
       Some(s"""$semanticOracleBody
              |SELECT a.vec_id, a.centroid_id,
              |  coalesce(cm.component, a.vec_id) AS component,
@@ -500,7 +476,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // full assignment, combined-population cap) and restricts to
     // pairs with >= 1 batch endpoint.
     "incremental_semantic_dedup" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.incrementalSemanticDedup(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.incrementalSemanticDedup(Tables.embeddings(s, d), d),
       Some(s"""$incrementalSemanticOracleBody
              |SELECT a_id, b_id, score FROM pairs ORDER BY a_id, b_id""".stripMargin)),
 
@@ -512,7 +488,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // untouched. Oracle: same frozen model, assignment rows minus
     // the deleted slice, pairs with >= 1 batch endpoint
     "semantic_after_delete" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s); SimilarityOps.semanticAfterDelete(Tables.embeddings(s, d), d) },
+      (s, d) => SimilarityOps.semanticAfterDelete(Tables.embeddings(s, d), d),
       Some {
         import graft.operators.{SimilarityOps => S}
         s"""${incrementalSemanticOracle(
@@ -528,7 +504,7 @@ private[graft] trait QueriesSimilarity extends QueriesOracleHelpers {
     // duplicated micro-batch — or a drifted centroid model — reds
     // the row. Embedding-family sibling of streamed_ingest_pairs.
     "streamed_vector_pairs" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
+      (s, d) => {
         val dir = graft.streaming.EventStreams.streamedSemanticLayout(s, d)
         s.read.parquet(dir)
           .select("a_id", "b_id", "score")

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
-import graft.functions.VectorFunctions
 import graft.operators._
 
 /** Registry slice: Spark-4 SQL-engine surfaces. */
@@ -310,10 +309,7 @@ private[graft] trait QueriesSqlSurface extends QueriesOracleHelpers {
     // to the sketches' TypedImperativeAggregate): geometric mean in
     // log space, constant two-double buffer, partial-agg mergeable
     "events_geomean_udaf" -> QueryDef(
-      (s, d) => {
-        graft.functions.AggregatorFunctions.register(s)
-        EventsOps.geoMeanByType(Tables.events(s, d))
-      },
+      (s, d) => EventsOps.geoMeanByType(Tables.events(s, d)),
       Some("""SELECT event_type, count(*) AS n,
              |  round(exp(avg(ln(value))), 4) AS geomean
              |FROM events WHERE value > 0

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod}
 
-import graft.functions.VectorFunctions
 import graft.operators._
 
 /** Registry slice: text analysis. */
@@ -445,8 +444,7 @@ private[graft] trait QueriesTextAnalysis extends QueriesOracleHelpers {
     // the same K-row RRF. Same oracle as hybrid_rrf — the indexed
     // lexical scores must be identical to the inline ones
     "hybrid_rrf_indexed" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        RetrievalOps.hybridRrfIndexed(Tables.documents(s, d), Tables.embeddings(s, d), d) },
+      (s, d) => RetrievalOps.hybridRrfIndexed(Tables.documents(s, d), Tables.embeddings(s, d), d),
       Some(hybridRrfSql)),
 
     // hybrid retrieval: reciprocal-rank fusion of the BM25 leg and a
@@ -455,8 +453,7 @@ private[graft] trait QueriesTextAnalysis extends QueriesOracleHelpers {
     // the two K-row lists with a fixed two-term RRF expression (so
     // the float sum order is deterministic on both engines)
     "hybrid_rrf" -> QueryDef(
-      (s, d) => { VectorFunctions.register(s)
-        RetrievalOps.hybridRrf(Tables.documents(s, d), Tables.embeddings(s, d)) },
+      (s, d) => RetrievalOps.hybridRrf(Tables.documents(s, d), Tables.embeddings(s, d)),
       Some(hybridRrfSql)),
   )
 }

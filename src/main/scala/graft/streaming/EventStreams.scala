@@ -84,7 +84,6 @@ object EventStreams {
     * output mode (a running count has no append point).
     */
   def streamingWordCount(docs: DataFrame): DataFrame = {
-    graft.functions.NativeText.register(docs.sparkSession)
     docs
       .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
       .groupBy("word")
@@ -101,7 +100,6 @@ object EventStreams {
     * is re-emitted per trigger, like the streaming wordcount.
     */
   def streamingKmvDistinct(events: DataFrame, k: Int = 64): DataFrame = {
-    graft.functions.SketchFunctions.register(events.sparkSession)
     events
       .select(col("event_type"),
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -119,7 +117,6 @@ object EventStreams {
     * (StreamingSpec). Constant d×w state per group.
     */
   def streamingCmsGrid(events: DataFrame, d: Int = 4, w: Int = 256): DataFrame = {
-    graft.functions.SketchFunctions.register(events.sparkSession)
     events
       .select(col("event_type"),
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -559,7 +556,6 @@ object EventStreams {
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"m98c16q${ops.PqK}") { path =>
       import org.apache.spark.sql.functions.{col, lit, pmod}
-      graft.functions.VectorFunctions.register(spark)
       val root = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(root)) {
         import scala.jdk.CollectionConverters._
@@ -634,7 +630,6 @@ object EventStreams {
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"g${ops.NswG}m${ops.NswUpsertMods.mkString("x")}akb") { path =>
       import org.apache.spark.sql.functions.{col, lit, pmod}
-      graft.functions.VectorFunctions.register(spark)
       val root = java.nio.file.Paths.get(path)
       if (java.nio.file.Files.exists(root)) {
         import scala.jdk.CollectionConverters._

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 import graft.operators.{DedupOps, SimilarityOps}
 
 /** The user-managed index lifecycle: build → probe → fold/append →
@@ -110,7 +109,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("IVF compaction: one file per list partition, identical rows, identical probe") {
-    VectorFunctions.register(spark)
     val (centroids, _) = SimilarityOps.lloydIterate(
       emb, iterations = 1, moveEps = 0.0, centroidMod = 97, numCentroids = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfcomp")
@@ -149,7 +147,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("NSW compaction: dead-touching edges dropped exactly, bounded files, identical delete probe") {
-    VectorFunctions.register(spark)
     // a standalone upsert-shaped layout in a temp dir (arbitrary
     // split, NOT the gated fixture): corpus = mod-3 nonzero built in
     // batch, mod-3-zero appended, then an arbitrary tombstone slice
@@ -194,7 +191,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("NSW streamed-fold idempotence: a redelivered batch_id overwrites, never duplicates") {
-    VectorFunctions.register(spark)
     val corpus = emb.where(pmod(col("vec_id"), lit(2)) === 0)
     val batch = emb.where(pmod(col("vec_id"), lit(2)) === 1)
     val dir = java.nio.file.Files.createTempDirectory("nswidem")
@@ -254,7 +250,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("semantic fold-in: appended labels + merged counts equal a frozen-model rebuild") {
-    VectorFunctions.register(spark)
     // arbitrary split: corpus = mod-3 nonzero, accepted batch = mod 3;
     // a later mod-7 batch probes both indexes
     val corpus = emb.where(pmod(col("vec_id"), lit(3)) =!= 0)
@@ -289,7 +284,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   test("IVF delete: tombstoned probe equals a from-scratch search minus the deleted set") {
     import org.apache.spark.sql.functions.broadcast
-    VectorFunctions.register(spark)
     val (centroids, _) = SimilarityOps.lloydIterate(
       emb, iterations = 1, moveEps = 0.0, centroidMod = 97, numCentroids = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfdel")
@@ -315,7 +309,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("IVF compaction applies and truncates the tombstone log") {
-    VectorFunctions.register(spark)
     val (centroids, _) = SimilarityOps.lloydIterate(
       emb, iterations = 1, moveEps = 0.0, centroidMod = 97, numCentroids = 16)
     val dir = java.nio.file.Files.createTempDirectory("ivfdelcomp")
@@ -336,7 +329,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
   }
 
   test("coded-list (IVF-PQ) appends/delete/compaction: rows intact, log applied, one file per list") {
-    VectorFunctions.register(spark)
     val (centroids, _) = SimilarityOps.lloydIterate(
       emb, iterations = 1, moveEps = 0.0, centroidMod = 97, numCentroids = 16)
     val cb = SimilarityOps.pqCodebook(emb)
@@ -423,7 +415,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
   test("semantic delete: eager count advance, live probe, compaction recount agrees") {
     import graft.operators.SimilarityOps
-    VectorFunctions.register(spark)
     val corpus = emb.where(pmod(col("vec_id"), lit(3)) =!= 0)
     val batch = emb.where(pmod(col("vec_id"), lit(3)) === 0)
     val root = java.nio.file.Files.createTempDirectory("semdel").toString

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 import graft.operators.SimilarityOps
 
 /** The adaptive-K NSW construction scale story (VERDICT round-16 item
@@ -22,7 +21,6 @@ class NswAdaptiveSpec extends AnyFunSuite {
   lazy val emb = Tables.embeddings(spark, TestSpark.Sf0001).cache()
 
   test("adaptive default equals the explicitly-parameterized build") {
-    VectorFunctions.register(spark)
     val (k, stride) = SimilarityOps.semAdaptiveParams(emb.count())
     val auto = SimilarityOps.nswEdges(emb, SimilarityOps.NswMods)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
@@ -33,7 +31,6 @@ class NswAdaptiveSpec extends AnyFunSuite {
   }
 
   test("100x replica shape: hash-spread seeds survive sparse ids and per-leg pair work stays ~n^1.5") {
-    VectorFunctions.register(spark)
     // the mk100x replication model at its real copy count: 100
     // byte-identical copies, vec_id shifted by 1e9 per copy — the
     // dense-duplicate worst case at the exact scale the standing
@@ -75,7 +72,6 @@ class NswAdaptiveSpec extends AnyFunSuite {
   }
 
   test("the two legs seed independently (the navigability premise)") {
-    VectorFunctions.register(spark)
     val (k, stride) = SimilarityOps.semAdaptiveParams(emb.count())
     val legs = SimilarityOps.NswMods.map { mod =>
       SimilarityOps.nswAssignment(emb, mod, k, stride)

@@ -669,7 +669,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // probed (the registered query's 10x3 probe set can legitimately
     // cover every list at sf0.001 — the pin is about the mechanism)
     import org.apache.spark.sql.execution.FileSourceScanExec
-    graft.functions.VectorFunctions.register(spark)
     val df = graft.operators.SimilarityOps.annIvfIndexed(
       Tables.embeddings(spark, TestSpark.Sf0001), TestSpark.Sf0001,
       nprobe = 1, nProbes = 3)
@@ -693,7 +692,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // list as a partition filter — the whole point of persisting
     // codes is that per-probe I/O is (probed/K) x ~PqM ints/vector
     import org.apache.spark.sql.execution.FileSourceScanExec
-    graft.functions.VectorFunctions.register(spark)
     val df = graft.operators.SimilarityOps.annIvfPqIndexed(
       Tables.embeddings(spark, TestSpark.Sf0001), TestSpark.Sf0001,
       nprobe = 1, nProbes = 3)
@@ -716,7 +714,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // batch-append layout: appending files into the list partitions
     // must not cost the scan its partition filter
     import org.apache.spark.sql.execution.FileSourceScanExec
-    graft.functions.VectorFunctions.register(spark)
     val df = graft.operators.SimilarityOps.annIvfUpsert(
       Tables.embeddings(spark, TestSpark.Sf0001), TestSpark.Sf0001,
       nprobe = 1, nProbes = 3)
@@ -741,7 +738,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // side, and the log itself joins as a broadcast (model-sized)
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    graft.functions.VectorFunctions.register(spark)
     val df = graft.operators.SimilarityOps.annIvfDelete(
       Tables.embeddings(spark, TestSpark.Sf0001), TestSpark.Sf0001,
       nprobe = 1, nProbes = 3)

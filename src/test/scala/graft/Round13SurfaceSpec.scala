@@ -210,7 +210,6 @@ class Round13SurfaceSpec extends AnyFunSuite {
   }
 
   test("geomean UDAF matches the driver-side log-space computation") {
-    graft.functions.AggregatorFunctions.register(spark)
     val got = graft.operators.EventsOps.geoMeanByType(Tables.events(spark, sf))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     val vals = Tables.events(spark, sf)

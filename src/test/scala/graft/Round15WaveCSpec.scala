@@ -41,7 +41,6 @@ class Round15WaveCSpec extends AnyFunSuite {
   }
 
   test("hValue matches the reference walk and is a bijection on the grid") {
-    LayoutOps.registerHilbert(spark)
     val n = 1L << LayoutOps.HBits
     val grid = spark.range(n * n)
       .select((col("id") / n).cast("long").as("x"),

@@ -18,7 +18,7 @@ class Round16HardeningSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("hilbert masks out-of-grid coordinates onto the grid (never negative)") {
-    LayoutOps.registerHilbert(spark)
+    GraftExtensions.register(spark)
     val n = 1L << LayoutOps.HBits
     val cases = Seq(
       (n + 3L, 5L), (-1L, 0L), (Long.MaxValue, Long.MinValue),

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.VectorFunctions
 import graft.operators.SimilarityOps
 
 /** The adaptive-K semantic-dedup scale story (VERDICT round-9 item 4):
@@ -32,7 +31,6 @@ class SemanticAdaptiveSpec extends AnyFunSuite {
   }
 
   test("adaptive default equals the explicitly-parameterized path") {
-    VectorFunctions.register(spark)
     val (k, stride) = SimilarityOps.semAdaptiveParams(emb.count())
     val auto = SimilarityOps.semanticDedup(emb).collect()
     val pinned = SimilarityOps.semanticDedup(
@@ -41,7 +39,6 @@ class SemanticAdaptiveSpec extends AnyFunSuite {
   }
 
   test("10x replica shape: seeds survive sparse ids and pair work stays ~n^1.5") {
-    VectorFunctions.register(spark)
     // mk10x replication model: 10 byte-identical copies, vec_id
     // shifted by 1e9 per copy
     val rep = (0 until 10)
@@ -81,7 +78,6 @@ class SemanticAdaptiveSpec extends AnyFunSuite {
 
   test("incremental semantic dedup equals full rebuild on the persisted model " +
     "restricted to batch-endpoint pairs") {
-    VectorFunctions.register(spark)
     val sfDir = TestSpark.Sf0001
     val incr = SimilarityOps.incrementalSemanticDedup(emb, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

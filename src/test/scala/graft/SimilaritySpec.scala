@@ -10,7 +10,6 @@ class SimilaritySpec extends AnyFunSuite {
   lazy val emb = Tables.embeddings(spark, TestSpark.Sf0001).cache()
 
   test("brute-force rank 1 is the true nearest neighbor") {
-    VectorFunctions.register(spark)
     val topk = SimilarityOps.similarityTopK(emb).collect()
     assert(topk.length === 10 * 10)
     // recompute probe 0's best match on the driver
@@ -33,7 +32,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ann_ivf returns k results per probe with valid scores") {
-    VectorFunctions.register(spark)
     val res = SimilarityOps.annIvf(emb).collect()
     assert(res.nonEmpty)
     val byProbe = res.groupBy(_.getLong(0))
@@ -44,7 +42,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ann recall@10 vs brute force is reasonable on fixture") {
-    VectorFunctions.register(spark)
     val exact = SimilarityOps.similarityTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val approx = SimilarityOps.annIvf(emb).collect()
@@ -54,7 +51,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("kmeans-refined ivf keeps valid shape and reasonable recall") {
-    VectorFunctions.register(spark)
     val res = SimilarityOps.annIvfKmeans(emb).collect()
     assert(res.nonEmpty)
     res.groupBy(_.getLong(0)).foreach { case (_, rows) =>
@@ -69,7 +65,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ann_ivf_indexed equals the inline kmeans path (index == inline proof)") {
-    VectorFunctions.register(spark)
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
     val inline = SimilarityOps.annIvfKmeans(emb, TestSpark.Sf0001,
@@ -82,7 +77,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ann_recall_eval emits one sane metric row consistent with the searches") {
-    VectorFunctions.register(spark)
     val rows = SimilarityOps.annRecallEval(emb, TestSpark.Sf0001).collect()
     assert(rows.length === 1)
     val (hits, total, recall) =
@@ -101,7 +95,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("multi-round Lloyd recall is at least the 1-round build's") {
-    VectorFunctions.register(spark)
     val exact = SimilarityOps.similarityTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     def recallOf(iters: Int): Double = {
@@ -116,7 +109,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("sq8 rerank recall@10 beats the unreranked quantized path's floor") {
-    VectorFunctions.register(spark)
     val exact = SimilarityOps.similarityTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val sq8 = SimilarityOps.annSq8(emb).collect()
@@ -138,7 +130,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pq rerank recall@10 holds and reranked scores are exactly ordered") {
-    VectorFunctions.register(spark)
     val exact = SimilarityOps.similarityTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val pq = SimilarityOps.annPq(emb).collect()
@@ -158,7 +149,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained PQ codebook keeps shape and one Lloyd round does not increase quantization error") {
-    VectorFunctions.register(spark)
     val seed = SimilarityOps.pqCodebook(emb).collect()(0)
       .getSeq[scala.collection.Seq[Float]](0)
     val trained = SimilarityOps.pqTrainedCodebook(emb).collect()(0)
@@ -191,7 +181,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("trained PQ search keeps the result shape and does not collapse recall") {
-    VectorFunctions.register(spark)
     val exact = SimilarityOps.similarityTopK(emb).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val seedHits = SimilarityOps.annPq(emb).collect()
@@ -213,7 +202,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivf-pq composition: result shape, exact-rerank ordering, recall floor") {
-    VectorFunctions.register(spark)
     val res = SimilarityOps.annIvfPq(emb).collect()
     assert(res.nonEmpty)
     res.groupBy(_.getLong(0)).foreach { case (_, rows) =>
@@ -231,7 +219,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("pq decode of stored codes is bit-equal to the fused reconstruction") {
-    VectorFunctions.register(spark)
     import org.apache.spark.sql.functions.{broadcast, col}
     val cb = SimilarityOps.pqCodebook(emb)
     val both = emb.crossJoin(broadcast(cb))
@@ -260,7 +247,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivf-pq indexed probe equals the inline composition row for row") {
-    VectorFunctions.register(spark)
     val inline = SimilarityOps.annIvfPq(emb).collect().map(_.toString).sorted
     val indexed = SimilarityOps.annIvfPqIndexed(emb, TestSpark.Sf0001)
       .collect().map(_.toString).sorted
@@ -269,7 +255,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("semantic dedup labels one survivor per group and pairs stay co-clustered") {
-    VectorFunctions.register(spark)
     val labeled = SimilarityOps.semanticDedup(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(labeled.length === emb.count())
@@ -294,7 +279,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("Lloyd driver stops early once centroid movement is under eps") {
-    VectorFunctions.register(spark)
     // eps larger than any possible component delta: stops after the
     // first round's movement check
     val (_, ranBig) = SimilarityOps.lloydIterate(
@@ -307,7 +291,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("IVF upsert: batch append onto frozen model equals one-shot rebuild, for an arbitrary split") {
-    VectorFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, lit, pmod}
     // an arbitrary (non-parity) split: batch = every 3rd vector —
     // proving the append path is batch-agnostic, not an artifact of

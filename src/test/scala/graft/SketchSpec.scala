@@ -64,7 +64,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("cms grids merge across partitions and every row sums to N") {
-    graft.functions.SketchFunctions.register(spark)
     val (d, w) = (4, 64)
     val n = 3000L
     val df = spark.range(n).select((col("id") % 700).cast("string").as("key"))
@@ -88,7 +87,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("kmv buffers merge across partitions and dedup exactly") {
-    graft.functions.SketchFunctions.register(spark)
     // 500 distinct keys, every key duplicated 4x, spread over many
     // partitions so partial buffers must merge (and serialize)
     val df = spark.range(2000).select((col("id") % 500).cast("string").as("key"))
@@ -107,7 +105,7 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("bloom has no false negatives and merges across partitions") {
-    graft.functions.SketchFunctions.register(spark)
+    graft.GraftExtensions.register(spark) // the SQL probe at the end
     val (k, m) = (6, 1 << 14)
     def hash(c: org.apache.spark.sql.Column) =
       conv(substring(md5(c), 1, 15), 16, 10).cast("long")

@@ -306,7 +306,6 @@ class SqlParitySpec extends AnyFunSuite {
 
   test("cms_heavy_hitters via SQL (graft_cms + graft_cms_probe)") {
     import graft.operators.TextAnalysisOps.{CmsD, CmsTopK, CmsW}
-    graft.functions.SketchFunctions.register(spark)
     assertParity("cms_heavy_hitters",
       s"""WITH hashed AS (SELECT word,
          |    CAST(conv(substring(md5(word), 1, 15), 16, 10) AS BIGINT) AS x
@@ -572,7 +571,6 @@ class SqlParitySpec extends AnyFunSuite {
   }
 
   test("bloom_dedup via SQL (graft_bloom + graft_bloom_probe)") {
-    graft.functions.SketchFunctions.register(spark)
     val k = DedupOps.BloomK
     val m = DedupOps.BloomMBits
     assertParity("bloom_dedup",

@@ -46,7 +46,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   test("custom aggregates are callable from SQL") {
     Catalog.registerViews(spark, TestSpark.Sf0001)
-    graft.functions.SketchFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_hist_quantile(l_extendedprice, 0.0, 110000.0, 110, 0.5) AS p50,
         |       graft_kmv_est(CAST(conv(substring(md5(CAST(l_orderkey AS STRING)), 1, 15), 16, 10) AS DOUBLE), 64) AS est

@@ -400,7 +400,6 @@ class StreamingSpec extends AnyFunSuite {
     try { q.processAllAvailable() } finally { q.stop() }
     val streamed = spark.table("cms_stream").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    graft.functions.SketchFunctions.register(spark)
     val batch = Tables.events(spark, TestSpark.Sf0001)
       .select(col("event_type"),
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -425,7 +424,6 @@ class StreamingSpec extends AnyFunSuite {
     try { q.processAllAvailable() } finally { q.stop() }
     val streamed = spark.table("kmv_stream").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    graft.functions.SketchFunctions.register(spark)
     val batch = Tables.events(spark, TestSpark.Sf0001)
       .select(col("event_type"),
         conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
@@ -507,7 +505,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streamed coded-list fold over >= 2 micro-batches equals the batch upsert layout") {
     import graft.operators.SimilarityOps
-    graft.functions.VectorFunctions.register(spark)
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val streamed = graft.streaming.EventStreams
       .streamedIvfPqLayout(spark, TestSpark.Sf0001)

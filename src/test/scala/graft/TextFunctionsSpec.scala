@@ -32,7 +32,6 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   test("native expressions equal the functions-API reference implementations") {
     import graft.functions.NativeText
-    NativeText.register(spark)
     val edge = Seq("a b\tc\nd\re\ff", "  x  ", "", " \t\n", "MiXeD Case", "one")
     val fixture = Tables.documents(spark, TestSpark.Sf0001)
       .select(col("text")).collect().map(_.getString(0)).toSeq
@@ -54,7 +53,6 @@ class TextFunctionsSpec extends AnyFunSuite {
   test("native winnow fingerprints equal the composed HOF formulation") {
     import graft.functions.NativeText
     import graft.operators.TextAnalysisOps.{WinnowK, WinnowW}
-    NativeText.register(spark)
     // edge docs: below W grams (empty), exactly W, duplicate-heavy
     // (dedup order), plus the full fixture corpus
     val edge = Seq("one two three", "a b c d e f g h",
@@ -78,7 +76,6 @@ class TextFunctionsSpec extends AnyFunSuite {
 
   test("native simhash signature equals the HOF reference formulation") {
     import graft.functions.NativeText
-    NativeText.register(spark)
     val fixture = Tables.documents(spark, TestSpark.Sf0001)
       .select(col("text")).collect().map(_.getString(0)).toSeq
     val df = (Seq("a b\tc", "one", "MiXeD Case words here") ++ fixture)

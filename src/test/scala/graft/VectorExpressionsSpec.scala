@@ -20,7 +20,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("cosine matches reference implementation (codegen path)") {
-    VectorFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (1 to 50).map { _ =>
       (Array.fill(64)(rnd.nextFloat() - 0.5f).toSeq,
@@ -35,7 +34,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("cosine handles zero vectors and null inputs") {
-    VectorFunctions.register(spark)
     val zero = Seq((Seq.fill(4)(0f), Seq(1f, 2f, 3f, 4f))).toDF("a", "b")
       .select(VectorFunctions.cosine(col("a"), col("b")).as("c"))
       .head.getDouble(0)
@@ -47,7 +45,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("dot and l2Norm consistent with cosine") {
-    VectorFunctions.register(spark)
     val df = Seq((Seq(1f, 2f, 2f), Seq(1f, 2f, 2f))).toDF("a", "b")
     assert(df.select(VectorFunctions.dot(col("a"), col("b"))).head.getDouble(0) === 9.0)
     assert(df.select(VectorFunctions.l2Norm(col("a"))).head.getDouble(0) === 3.0)
@@ -55,7 +52,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("pqReconstruct picks per-subspace nearest rows, ties to the lowest index") {
-    VectorFunctions.register(spark)
     // m=2 subspaces of 2 dims, k=3 rows. x = [1,0, 0,1]:
     //   subspace 0: row0 [1,0] exact (d = 1-2 = -1) beats row1/row2
     //   subspace 1: row1 [0,1] exact; row2 duplicates row1 there —

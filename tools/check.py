@@ -70,9 +70,20 @@ def clean_spill():
     os.makedirs(_spill, exist_ok=True)
 
 
+# The floor scales with the fixture: DuckDB's spill grows with the data
+# it scans. 256x the fixture's bytes, at least 2 GB and at most 40 GB,
+# so the 10x fixture (sf1, ~170 MB) and anything larger keep the full
+# 40 GB while sf0.01 (2 MB) and sf0.1 (17 MB) need 2 and 5 GB.
+def fixture_bytes(d):
+    return sum(os.path.getsize(os.path.join(r, f))
+               for r, _, fs in os.walk(d, followlinks=True) for f in fs)
+
+
 clean_spill()
 _free_gb = shutil.disk_usage("/tmp").free // 2**30
-_need_gb = int(os.environ.get("GRAFT_MIN_HEADROOM_GB", "40"))
+_need_gb = int(os.environ.get(
+    "GRAFT_MIN_HEADROOM_GB",
+    min(40, max(2, math.ceil(256 * fixture_bytes(sfdir) / 2**30)))))
 if _free_gb < _need_gb:
     sys.exit(f"ABORT: only {_free_gb}G free on /tmp (need {_need_gb}G)")
 _temp_cap = os.environ.get("GRAFT_DUCKDB_TEMP_CAP",
