@@ -35,13 +35,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * fresh `buf` and its tokens are laid out one after another, so a
   * token may be wrapped without a copy; without it `buf` is reused
   * and a token's bytes are valid only during the `token` call.
+  * Without `fold` the text is split as it is, case kept: the
+  * reference's raw `StringTokenizer` tokens.
   */
-private[graft] abstract class TokenScanner(keepTokens: Boolean) {
+private[graft] abstract class TokenScanner(keepTokens: Boolean, fold: Boolean = true) {
   protected var buf: Array[Byte] = Array.emptyByteArray
 
   protected def token(start: Int, len: Int, hash: Int): Unit
 
-  final def scan(text: UTF8String): Unit = {
+  final def scan(text: UTF8String): Unit =
+    if (fold) scanFolded(text) else scanCased(text)
+
+  private def scanFolded(text: UTF8String): Unit = {
     val src = if (text.isFullAscii) text else text.toLowerCase
     val base = src.getBaseObject
     val off = src.getBaseOffset
@@ -72,6 +77,23 @@ private[graft] abstract class TokenScanner(keepTokens: Boolean) {
       i += 1
     }
     if (w > start) token(start, w - start, TokenScanner.finish(h, w - start))
+  }
+
+  /** The same split over the text as it is: each document is copied
+    * into `buf` whole and its tokens hashed where they lie.
+    */
+  private def scanCased(text: UTF8String): Unit = {
+    if (keepTokens || buf.length < text.numBytes) buf = new Array[Byte](text.numBytes)
+    text.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
+    var start = 0
+    var h = 0
+    for (i <- 0 to text.numBytes)
+      if (i < text.numBytes && !TokenScanner.isDelim(buf(i))) h = 31 * h + buf(i)
+      else {
+        if (i > start) token(start, i - start, TokenScanner.finish(h, i - start))
+        start = i + 1
+        h = 0
+      }
   }
 }
 

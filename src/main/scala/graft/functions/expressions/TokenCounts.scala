@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,19 +15,34 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash table per map task, filled straight from the token stream) as
   * a generator. Each document is scanned once by the [[TokenScanner]]
   * and every token is counted in a [[TokenTally]] — no string, array
-  * or row per token. `eval` returns nothing; `terminate` emits one
-  * `(word, cnt)` row per distinct word of the partition.
+  * or row per token. The caller sums `cnt` per word (and per its other
+  * keys). There are two emission points:
+  *  - per task (`graft_token_counts`, and every count grouped by word
+  *    alone): `eval` returns only rows a flush pushed out, and
+  *    `terminate` emits one `(word, cnt)` row per distinct word left
+  *    in the partition's tally. Generate joins those rows to the
+  *    partition's last input row, so no other input column can ride
+  *    along;
+  *  - `perDocument` (counts grouped by a document's key as well): `eval`
+  *    returns the document's own `(word, cnt)` rows, flushed rows
+  *    included, and leaves the tally empty; `terminate` returns
+  *    nothing. Generate carries the row's other columns (`doc_id`,
+  *    `source`, ...) beside each row. Emptying the tally zeroes only
+  *    the slots the document filled, so a small document costs
+  *    O(its words) however large the table grew.
   *
   * The tally holds at most `flushAt` distinct words (and about
   * `flushAt * 32` bytes of them): a word that does not fit flushes the
-  * rows so far out of the next `eval` and starts an empty table. The
-  * caller sums `cnt` per word, so flushing never changes the answer.
-  * Memory is therefore fixed per task, except that a single document's
-  * flushes wait until its scan ends.
+  * rows so far out of the next `eval` and starts an empty table. Since
+  * `cnt` is summed, flushing never changes the answer. Memory is
+  * therefore fixed per task, except that a single document's flushes
+  * wait until its scan ends.
   *
+  * Without `fold` tokens keep their case (see [[TokenScanner]]).
   * `flushAt` is [[TokenCounts.FlushAt]] everywhere but in tests.
   */
-case class TokenCounts private[graft] (child: Expression, flushAt: Int)
+case class TokenCounts private[graft] (child: Expression, flushAt: Int,
+    perDocument: Boolean = false, fold: Boolean = true)
     extends UnaryExpression with Generator with CodegenFallback {
 
   override def elementSchema: StructType = TokenCounts.Schema
@@ -44,9 +59,9 @@ case class TokenCounts private[graft] (child: Expression, flushAt: Int)
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val text = child.eval(input)
     if (text == null) return Nil
-    if (tally == null) tally = new TokenTally(flushAt)
+    if (tally == null) tally = new TokenTally(flushAt, fold)
     tally.scan(text.asInstanceOf[UTF8String])
-    tally.takeFlushed()
+    if (perDocument) tally.takeAll() else tally.takeFlushed()
   }
 
   override def terminate(): IterableOnce[InternalRow] = {
@@ -78,7 +93,8 @@ object TokenCounts {
   * `arena(starts(e) until starts(e) + lens(e))`. The table starts small
   * and doubles while it is at most half full, up to twice `flushAt`.
   */
-private final class TokenTally(flushAt: Int) extends TokenScanner(keepTokens = false) {
+private[graft] final class TokenTally(flushAt: Int, fold: Boolean = true)
+    extends TokenScanner(keepTokens = false, fold) {
   private val maxSlots = Integer.highestOneBit(math.max(1, 2 * flushAt - 1)) << 1
   private val arenaCap = flushAt.toLong * 32
 
@@ -91,6 +107,9 @@ private final class TokenTally(flushAt: Int) extends TokenScanner(keepTokens = f
   private var used = 0
   private var size = 0
   private var flushed: ArrayBuffer[InternalRow] = null
+  private val row = new SpecificInternalRow(TokenCounts.Schema.map(_.dataType))
+  /** Slots visited by [[clear]], over the tally's life. */
+  private[graft] var cleared = 0L
 
   protected def token(start: Int, len: Int, hash: Int): Unit = {
     var s = hash & (slots.length - 1)
@@ -158,6 +177,37 @@ private final class TokenTally(flushAt: Int) extends TokenScanner(keepTokens = f
   def takeFlushed(): IterableOnce[InternalRow] =
     if (flushed == null) Nil
     else { val out = flushed; flushed = null; out }
+
+  /** Every row of the last scan, flushed ones first, leaving the tally
+    * empty. The unflushed entries come as one reused row, refilled by
+    * each `next()`, whose word wraps the arena: a row is valid until
+    * the next one and the tally must not count again before all are
+    * read, as Generate does, projecting each row as it comes.
+    */
+  def takeAll(): IterableOnce[InternalRow] = {
+    val own = Iterator.tabulate(size) { e =>
+      row.update(0, UTF8String.fromBytes(arena, starts(e), lens(e)))
+      row.setLong(1, counts(e))
+      row
+    }
+    clear()
+    if (flushed == null) own else takeFlushed().iterator ++ own
+  }
+
+  /** Empties the table by zeroing each entry's own slot, found by
+    * probing from its hash for the slot that names it.
+    */
+  private def clear(): Unit = {
+    var e = 0
+    while (e < size) {
+      var s = hashes(e) & (slots.length - 1)
+      while ({ cleared += 1; slots(s).toInt != e + 1 }) s = (s + 1) & (slots.length - 1)
+      slots(s) = 0L
+      e += 1
+    }
+    used = 0
+    size = 0
+  }
 
   /** One `(word, cnt)` row per entry; without `copy` the words wrap the
     * arena, so the tally must not count again.

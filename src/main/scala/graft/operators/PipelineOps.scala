@@ -188,8 +188,8 @@ object PipelineOps {
     * (doc_id < `probeMaxId`, the [[contaminationCheck]] convention)
     * and the raw side is everything else.
     *
-    * Scale shape: one explode→(doc, bucket) map-side-combinable
-    * aggregate over the corpus; the two feature distributions are
+    * Scale shape: one (doc, bucket) map-side-combinable aggregate over
+    * the counting kernel's per-document rows; the two feature distributions are
     * B-row aggregates of that table; the log-ratio model (B rows,
     * corpus-size-independent) broadcast-joins back onto the per-doc
     * frequencies. No vocabulary-sized state anywhere — hashing is
@@ -203,20 +203,16 @@ object PipelineOps {
     val b = pmod(
       conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"),
       lit(DsirBuckets.toLong))
-    val buckets = docs
-      .select(col("doc_id"),
-        explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-      .select(col("doc_id"), b.as("b"))
-    // collapse token rows to per-(doc, bucket) frequencies FIRST: the
-    // token-sized explode then feeds exactly ONE map-side-combinable
+    // collapse word rows to per-(doc, bucket) frequencies FIRST: the
+    // corpus pass then feeds exactly ONE map-side-combinable
     // aggregate, and every other consumer (target dist, raw dist,
     // totals, per-doc tf) derives from this ≤ B-rows-per-doc table.
-    // Before round 11 the explode was referenced 4x with distinct
+    // Before round 11 the token rows were referenced 4x with distinct
     // shapes — the genuine multi-consumer duplication ReuseExchange
     // cannot unify (measured: 1.9 → ~1.2 s at sf0.1) — and at 100 TB
     // the materialized table is bounded by docs × B, not token count.
-    val tfAll = graft.operators.Checkpoints.truncate(
-      buckets.groupBy("doc_id", "b").agg(count(lit(1)).as("tf")))
+    val tfAll = Checkpoints.truncate(WordCountOps.tokenCounts(docs, Seq(col("doc_id")))
+      .groupBy(col("doc_id"), b.as("b")).agg(sum(col("cnt")).as("tf")))
     def dist(side: DataFrame, cname: String) =
       side.groupBy("b").agg(sum(col("tf")).as(cname))
     val target = dist(tfAll.where(col("doc_id") < probeMaxId), "ct")
@@ -249,27 +245,22 @@ object PipelineOps {
   /** Unigram log-probability quality score — the cheap perplexity
     * proxy: score(doc) = mean over tokens of ln(count(word) / total
     * tokens). Skew-safe formulation: aggregate term frequencies
-    * tf(doc_id, word) FIRST (map-side partials collapse each task's
-    * token stream before anything shuffles), then take the corpus
-    * count as sum(tf) over the word partition of the tf table. Same
-    * answer as the naive token-row window, but the word exchange
+    * tf(doc_id, word) FIRST (the counting kernel's per-document rows,
+    * merged by map-side partials before anything shuffles), then take
+    * the corpus count as sum(tf) over the word partition of the tf
+    * table. Same answer as the naive token-row window, but the word exchange
     * carries (doc, word) pairs instead of raw tokens, and the hottest
     * Zipf-head word's window group shrinks from its token count to
     * its document count — the difference between one reducer
     * serializing "the" and a bounded group at 100 TB. The per-doc
     * mean is the tf-weighted sum sum(tf·ln(wc/N))/sum(tf); the total
-    * is a one-row aggregate cross-joined in. Low scores flag
+    * N is a one-row sum(tf) over the same tf table, cross-joined in. Low scores flag
     * gibberish / outlier-vocabulary documents.
     */
   def unigramLogprob(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-    // total token count via the row-local size() — one extra pruned
-    // scan, cheaper than re-exploding
-    val total = docs
-      .agg(sum(size(graft.functions.NativeText.tokens(col("text"))).cast("long"))
-        .cast("double").as("total_tokens"))
-    val tf = toks.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val tf = WordCountOps.summedCounts(docs, Seq(col("doc_id"))).withColumnRenamed("cnt", "tf")
+    // the corpus total from the same tf table: no second scan
+    val total = tf.agg(sum(col("tf")).cast("double").as("total_tokens"))
     tf
       .withColumn("wc", sum(col("tf"))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("word"))))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{NativeText, VectorFunctions}
+import graft.functions.VectorFunctions
 
 /** Retrieval scoring over the corpus: Okapi BM25 lexical ranking and
   * reciprocal-rank-fusion hybrid (lexical + embedding) search — the
@@ -49,28 +49,25 @@ object RetrievalOps {
   val LegDepth = 50
 
   /** Per-(doc, query-term) BM25 contributions with document length
-    * and collection statistics attached: tf and dl come from one
-    * tokenize pass (dl as a window over the tf table's doc
-    * partition), df from a word-partition aggregate whose top rows
+    * and collection statistics attached: tf and dl are the postings
+    * ([[postingsOf]]: one pass of the per-document counting kernel, dl
+    * a window over the tf table's doc partition), df from a
+    * word-partition aggregate whose top rows
     * also FORM the query (selected by a distributed top-k and
     * broadcast back to the postings), N and avgdl from a one-row
     * aggregate cross-joined in.
     */
   private def bm25Scored(docs: DataFrame): DataFrame = {
-    val tf = docs
-      .select(col("doc_id"), explode(NativeText.tokens(col("text"))).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
+    val tf = postingsOf(docs)
     // ranking terms by COLLECTION frequency (sum of tf) rather than
     // bare document frequency is deliberate plan engineering: sum(tf)
     // CONSUMES the tf column, which keeps the upstream aggregate's
-    // count function alive, so this branch's shuffle canonicalizes
+    // sum(cnt) alive, so this branch's shuffle canonicalizes
     // identically to the postings' tf exchange and AQE inserts a
     // ReusedExchange — the corpus is tokenized ONCE. Ranking by
-    // count(*) (or count(tf): NullPropagation folds it back to
-    // count(1)) lets column pruning rewrite the aggregate to a
+    // count(*) lets column pruning rewrite the aggregate to a
     // keys-only distinct, the canonical forms diverge, and the whole
-    // scan+tokenize runs twice — verified in the executed plan
+    // scan+count runs twice — verified in the executed plan
     // (Explain run:bm25_topk). df still rides along for the idf.
     val wordStats = tf.groupBy("word")
       .agg(sum(col("tf")).as("ctf"), count(lit(1)).as("df"))
@@ -187,9 +184,7 @@ object RetrievalOps {
     * disjoint document sets, so no stored dl ever needs updating.
     */
   private def postingsOf(docs: DataFrame): DataFrame = {
-    docs
-      .select(col("doc_id"), explode(NativeText.tokens(col("text"))).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    WordCountOps.summedCounts(docs, Seq(col("doc_id"))).withColumnRenamed("cnt", "tf")
       .withColumn("dl", sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
       .withColumn("word_bucket", pmod(xxhash64(col("word")), lit(WordBuckets)))
   }

@@ -104,7 +104,8 @@ object TextAnalysisOps {
   /** One BPE training round: the adjacent character-pair frequencies
     * a byte-pair-encoding tokenizer would merge next. The corpus
     * collapses to its word-frequency table FIRST (one aggregate over
-    * exploded tokens — vocabulary-sized, not corpus-sized), then each
+    * the counting kernel's partials — vocabulary-sized, not
+    * corpus-sized), then each
     * DISTINCT word explodes into its adjacent char pairs weighted by
     * the word's corpus frequency. At 100 TB the pair explode runs
     * over the vocabulary (millions of rows), not the corpus
@@ -113,9 +114,7 @@ object TextAnalysisOps {
     * total order, so the cut is deterministic at every SF.
     */
   def bpeMergePairs(docs: DataFrame, k: Int = BpeMergeTopK): DataFrame = {
-    val wordFreq = docs
-      .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wf"))
+    val wordFreq = WordCountOps.summedCounts(docs).withColumnRenamed("cnt", "wf")
       .where(length(col("word")) >= 2)
     wordFreq
       .select(col("wf"), explode(transform(
@@ -168,11 +167,9 @@ object TextAnalysisOps {
     */
   private def bpeTrainLoop(docs: DataFrame, rounds: Int)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
-    val base = docs
-      .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
+    val base = WordCountOps.summedCounts(docs)
       .where(length(col("word")) >= 2 && col("word").rlike("^[a-z0-9]+$"))
-      .groupBy("word").agg(count(lit(1)).as("wf"))
-      .select(regexp_replace(col("word"), "(.)", "($1)").as("wstr"), col("wf"))
+      .select(regexp_replace(col("word"), "(.)", "($1)").as("wstr"), col("cnt").as("wf"))
     var cur = Checkpoints.truncate(base)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     for (r <- 1 to rounds) {
@@ -238,8 +235,9 @@ object TextAnalysisOps {
     * the per-doc token-budget accounting a training-data pipeline
     * runs after tokenizer training ([[bpeVocab]] is the corpus-grain
     * census of the same encode). The merge rewrites stay
-    * vocabulary-sized; the per-doc leg is one explode over the corpus
-    * joined to the word table on its natural key — at 100 TB both
+    * vocabulary-sized; the per-doc leg is the counting kernel's
+    * per-document (word, cnt) rows joined to the word table on its
+    * natural key, each match weighted by its `cnt` — at 100 TB both
     * sides hash-partition on the word, and the word table is small
     * enough that AQE broadcasts it. Output: encodable word
     * occurrences and the subword total per doc (docs with no
@@ -253,13 +251,11 @@ object TextAnalysisOps {
         regexp_replace(col("wstr"), "\\(([^)]*)\\)", "$1").as("word"),
         (size(regexp_extract_all(col("wstr"), lit("\\(([^)]*)\\)"), lit(1))))
           .cast("long").as("n_syms"))
-    val occ = docs
-      .select(col("doc_id"),
-        explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
+    val occ = WordCountOps.tokenCounts(docs, Seq(col("doc_id")))
       .where(length(col("word")) >= 2 && col("word").rlike("^[a-z0-9]+$"))
     val perDoc = occ.join(wordSyms, Seq("word"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_enc_words"), sum(col("n_syms")).as("n_subwords"))
+      .agg(sum(col("cnt")).as("n_enc_words"), sum(col("n_syms") * col("cnt")).as("n_subwords"))
     docs.select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -411,10 +407,7 @@ object TextAnalysisOps {
     */
   def tfidfTopK(docs: DataFrame, k: Int = 3): DataFrame = {
     val nDocs = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-    val tf = docs
-      .select(col("doc_id"),
-        explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val tf = WordCountOps.summedCounts(docs, Seq(col("doc_id"))).withColumnRenamed("cnt", "tf")
     val scored = tf
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("word"))))
       .crossJoin(nDocs)
@@ -533,8 +526,8 @@ object TextAnalysisOps {
     * with probabilities estimated from exact corpus counts. All
     * statistics are VOCABULARY-grain: the bigram and unigram counts
     * are partial/final aggregates of two Generate branches over the
-    * same pruned scan (map-side combine collapses the token streams
-    * before either exchange), the two token totals are 1-row
+    * same pruned scan (the counting kernel and the bigram explode,
+    * each collapsed map-side before its exchange), the two token totals are 1-row
     * aggregates of row-local `size()` (no third explode), and the
     * unigram joins attach to the bigram table at bigram-vocabulary
     * grain — the corpus itself is never joined or shuffled. The
@@ -547,8 +540,7 @@ object TextAnalysisOps {
   def pmiCollocations(docs: DataFrame, minCount: Long = PmiMinCount,
                       k: Int = PmiTopK): DataFrame = {
     val ws = graft.functions.NativeText.tokens(col("text"))
-    val uni = docs.select(explode(ws).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("c"))
+    val uni = WordCountOps.summedCounts(docs).withColumnRenamed("cnt", "c")
     val big = docs
       .select(explode(graft.functions.NativeText.wordNgrams(ws, 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("cb"))
@@ -745,10 +737,7 @@ object TextAnalysisOps {
     * |sources|².
     */
   def sourceVocabOverlap(docs: DataFrame): DataFrame = {
-    val ws = graft.functions.NativeText.tokens(col("text"))
-    val vocab = docs
-      .select(col("source"), explode(ws).as("word"))
-      .distinct()
+    val vocab = WordCountOps.summedCounts(docs, Seq(col("source"))).drop("cnt")
     val sizes = vocab.groupBy("source").agg(count(lit(1)).as("n"))
     val inter = vocab.as("a")
       .join(vocab.withColumnRenamed("source", "source_b").as("b"), Seq("word"))

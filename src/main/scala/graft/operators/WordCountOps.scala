@@ -1,12 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, GraftColumn, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import graft.functions.NativeText
+import graft.functions.expressions.TokenCounts
 
 /** The reference's entire query surface — word count and its direct
   * derivatives (reference `src/wordcount/WordCount.java:44-63,226-241`)
@@ -35,30 +35,39 @@ import graft.functions.NativeText
   * one `(word, cnt)` row per distinct word of the task — no row, array
   * or string per token (see [[graft.functions.expressions.TokenCounts]]).
   * At cluster scale the shuffle carries one row per (task, word), not
-  * one per token. `wordCountTopK`, `wordCountObserved` and `distinctWords`
-  * run the same generator. The variants that need a per-token column
-  * (source, lang, doc_id) keep `explode(graft_tokenize(text))`.
+  * one per token. Every other count runs the same generator through
+  * [[summedCounts]] (or, where it aggregates the rows its own way,
+  * [[tokenCounts]]): grouped by word alone it is the same per-task
+  * plan; grouped by a document's key as well (source, lang, doc_id) it
+  * emits per document, so the key rides along and the shuffle carries
+  * one row per (key, word).
   */
 object WordCountOps {
 
-  /** Native tokenizer column over `text`. */
-  private def tokens: Column = NativeText.tokens(col("text"))
-
-  /** The kernel's per-task `(word, cnt)` partials. */
-  private def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.select(NativeText.tokenCounts(col(textCol)))
-
-  /** (word, cnt) before ordering: the kernel's per-task partials summed
-    * per word. `coalesce` keeps `cnt` NOT NULL, as `count` had it.
+  /** The kernel's `(keys…, word, cnt)` rows over `text`, to be summed
+    * per (keys…, word): per-task partials without `keys`, else each
+    * document's own counts beside its `keys`. Without `fold` words keep
+    * their case.
     */
-  private def summedCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
-    tokenCounts(docs, textCol)
-      .groupBy("word")
+  private[graft] def tokenCounts(docs: DataFrame, keys: Seq[Column] = Nil,
+      fold: Boolean = true): DataFrame =
+    docs.select(keys :+ GraftColumn(TokenCounts(GraftColumn.expr(col("text")),
+      TokenCounts.FlushAt, perDocument = keys.nonEmpty, fold)): _*)
+
+  /** `(keys…, word, cnt)`: the [[tokenCounts]] rows summed per
+    * (keys…, word), unordered. `coalesce` keeps `cnt` NOT NULL, as
+    * `count` had it.
+    */
+  private[graft] def summedCounts(docs: DataFrame, keys: Seq[Column] = Nil,
+      fold: Boolean = true): DataFrame = {
+    val counts = tokenCounts(docs, keys, fold)
+    counts.groupBy(counts.columns.toSeq.init.map(counts(_)): _*)
       .agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
+  }
 
   /** (word, cnt) — `SELECT word, count(*) GROUP BY word`. */
-  def wordCount(docs: DataFrame, textCol: String = "text"): DataFrame =
-    summedCounts(docs, textCol).orderBy("word")
+  def wordCount(docs: DataFrame): DataFrame =
+    summedCounts(docs).orderBy("word")
 
   /** The wordcount with named plan metrics via `Dataset.observe` —
     * the modern form of the reference's O14 counters
@@ -109,11 +118,7 @@ object WordCountOps {
     * column plays the role of the input-split host list.
     */
   def wordCountPerSource(docs: DataFrame): DataFrame =
-    docs
-      .select(col("source"), explode(tokens).as("word"))
-      .groupBy("source", "word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("source", "word")
+    summedCounts(docs, Seq(col("source"))).orderBy("source", "word")
 
   /** Top-k words. TakeOrderedAndProject: each partition keeps a k-sized
     * heap, the driver merges — no global sort at any scale.
@@ -131,29 +136,21 @@ object WordCountOps {
     * reference token identity, driver-gated with its own oracle.
     */
   def wordCountCased(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(filter(split(col("text"), "[ \\t\\n\\r\\f]+"),
-        w => w =!= "")).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    summedCounts(docs, fold = false).orderBy("word")
 
-  /** Distinct vocabulary: the words of the kernel's partials, deduped. */
+  /** Distinct vocabulary: the words of the summed counts. */
   def distinctWords(docs: DataFrame): DataFrame =
-    tokenCounts(docs)
-      .select("word")
-      .distinct()
-      .orderBy("word")
+    summedCounts(docs).select("word").orderBy("word")
 
   /** Composite-key aggregation — the reference's `GroupedWord`
     * (locations[], word) key semantics (`GroupedWord.java:12-35`),
     * with (lang, word) as the composite grouping key.
     */
   def groupedKeyAgg(docs: DataFrame): DataFrame =
-    docs
-      .select(col("lang"), col("doc_id"), explode(tokens).as("word"))
+    tokenCounts(docs, Seq(col("lang"), col("doc_id")))
       .groupBy("lang", "word")
-      .agg(count(lit(1)).as("cnt"), countDistinct(col("doc_id")).as("n_docs"))
+      // a document flushed mid-scan gives two rows: count its id once
+      .agg(coalesce(sum("cnt"), lit(0L)).as("cnt"), countDistinct(col("doc_id")).as("n_docs"))
       .orderBy("lang", "word")
 
   /** Uncoded shuffle-packet accounting — the reference's PACKETS_SENT
@@ -163,9 +160,7 @@ object WordCountOps {
     * count the combiner would emit.
     */
   def packetsBaseline(docs: DataFrame): DataFrame =
-    docs
-      .select(col("source"), explode(tokens).as("word"))
-      .groupBy("source", "word").agg(count(lit(1)).as("cnt"))
+    summedCounts(docs, Seq(col("source")))
       .groupBy("source").agg(count(lit(1)).as("packets"), sum("cnt").as("tokens"))
       .orderBy("source")
 

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.NativeText
+import graft.operators.WordCountOps
 
 /** Faithful simulation of the reference's coded-shuffle *intended*
   * semantics (SURVEY.md §0/§4): trade map redundancy for shuffle
@@ -46,12 +46,13 @@ import graft.functions.NativeText
   * registry row carries a full hash-gated oracle, not a rows-only
   * check.
   *
-  * Execution shape: one Spark action. The partials are an ordinary
-  * two-exchange aggregate; `groupByKey(enc)` then hands each simulated
+  * Execution shape: one Spark action. The partials are the counting
+  * kernel's per-document rows, carrying the node-set, summed per
+  * (node-set, word); `groupByKey(enc)` then hands each simulated
   * encoder node its own partials, and [[encode]] classes, zips, XORs
   * and decodes them in one pass, emitting one delivered row per
-  * partial. Those rows meet an independent word count of the same
-  * documents (the `graft_token_counts` kernel, negated) in one
+  * partial. Those rows meet a word count of the same documents (the
+  * kernel's per-task partials, negated) in one
   * per-word aggregate, where each word's sum must be 0; one row over
   * it yields every counter, the failed strips and the mismatching
   * words. Five jobs, one per exchange and the result. Counters
@@ -142,10 +143,8 @@ object CodedShuffleSim {
     // hash. A null source has no node-set: p = enc = -1 leaves its
     // group without left classes, so it goes unicast, as in the oracle
     val wh = topoHash(col("word"))
-    val partials = docs
-      .select((topoHash(col("source")) % Nodes).cast("int").as("p"),
-        explode(NativeText.tokens(col("text"))).as("word"))
-      .groupBy("p", "word").agg(count(lit(1)).as("cnt"))
+    val partials = WordCountOps
+      .summedCounts(docs, Seq((topoHash(col("source")) % Nodes).cast("int").as("p")))
       .select(coalesce(col("p"), lit(-1)).as("p"), (wh % Nodes).cast("int").as("tgt"),
         coalesce(when(wh % 2 === 0, col("p")).otherwise(pmod(col("p") + 1, lit(Nodes)))
           .cast("int"), lit(-1)).as("enc"),
@@ -154,7 +153,7 @@ object CodedShuffleSim {
 
     // the true counts enter negated (coded = null): per word, the
     // decoded rows must cancel them exactly
-    val truth = docs.select(NativeText.tokenCounts(col("text")))
+    val truth = WordCountOps.tokenCounts(docs)
       .select(col("word"), (-col("cnt")).as("cnt"), lit(null).cast("boolean").as("coded"))
     val perWord = partials.groupByKey(_.enc).flatMapGroups(encode).toDF()
       .unionByName(truth)

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.functions.expressions.{MinHashSignature, RollingFingerprintExpr, SimHashSignature, TokenCounts, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
+import graft.functions.expressions.{MinHashSignature, RollingFingerprintExpr, SimHashSignature, TokenCounts, TokenTally, Tokenize, WinnowFingerprintsExpr, WordNgramsExpr}
 
 /** Property-based checks of the native expressions via direct
   * Catalyst `eval` (no Spark jobs — thousands of cases per second).
@@ -51,20 +51,38 @@ object ExpressionProperties extends Properties("graft.expressions") {
     Gen.listOf(Gen.frequency(1 -> Gen.const(None), 8 -> document.map(Some(_))))
       .map(_.take(12))
 
-  /** Every row `TokenCounts` emits over a partition, flushes included. */
-  private def tokenCountRows(docs: Seq[Option[String]], flushAt: Int): Seq[(String, Long)] = {
-    val kernel = new TokenCounts(BoundReference(0, StringType, nullable = true), flushAt)
-    val out = Seq.newBuilder[(String, Long)]
-    def take(rows: IterableOnce[InternalRow]): Unit =
-      rows.iterator.foreach(r => out += r.getUTF8String(0).toString -> r.getLong(1))
-    docs.foreach(d => take(kernel.eval(InternalRow(d.map(UTF8String.fromString).orNull))))
-    take(kernel.terminate())
-    out.result()
+  /** Every row a `TokenCounts` emits over a partition, flushes
+    * included, each tagged with the index of the document whose `eval`
+    * returned it (-1 for `terminate`), as Generate pairs them.
+    */
+  private def kernelRows(docs: Seq[Option[String]], flushAt: Int, perDocument: Boolean = false,
+      fold: Boolean = true): Seq[(Int, String, Long)] = {
+    val kernel = new TokenCounts(BoundReference(0, StringType, nullable = true), flushAt,
+      perDocument, fold)
+    def take(doc: Int, rows: IterableOnce[InternalRow]) =
+      rows.iterator.map(r => (doc, r.getUTF8String(0).toString, r.getLong(1))).toList
+    docs.zipWithIndex.flatMap { case (d, i) =>
+      take(i, kernel.eval(InternalRow(d.map(UTF8String.fromString).orNull)))
+    } ++ take(-1, kernel.terminate())
   }
+
+  /** The per-task kernel's `(word, cnt)` rows over a partition. */
+  private def tokenCountRows(docs: Seq[Option[String]], flushAt: Int,
+      fold: Boolean = true): Seq[(String, Long)] =
+    kernelRows(docs, flushAt, fold = fold).map { case (_, w, n) => w -> n }
+
+  private def countWords(words: Seq[String]): Map[String, Long] =
+    words.groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
 
   /** `explode(graft_tokenize(text))` + `count(*) GROUP BY word`. */
   private def explodeCounts(docs: Seq[Option[String]]): Map[String, Long] =
-    docs.flatten.flatMap(tokenize).groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
+    countWords(docs.flatten.flatMap(tokenize))
+
+  /** `explode(filter(split(text, "[ \t\n\r\f]+"), _ != ""))` + count:
+    * the reference's case-kept tokens.
+    */
+  private def splitCounts(docs: Seq[Option[String]]): Map[String, Long] =
+    countWords(docs.flatten.flatMap(_.split("[ \t\n\r\f]+").filter(_.nonEmpty)))
 
   private def strArrayLit(xs: Seq[String]) =
     Literal.create(xs, ArrayType(StringType))
@@ -91,9 +109,38 @@ object ExpressionProperties extends Properties("graft.expressions") {
 
   property("token counts equal explode(tokenize) + count, one row per word") =
     forAll(partition) { docs =>
-      val rows = tokenCountRows(docs, TokenCounts.FlushAt)
-      rows.map(_._1).distinct.size == rows.size && rows.toMap == explodeCounts(docs)
+      def oneRowPerWord(rows: Seq[(String, Long)], want: Map[String, Long]) =
+        rows.map(_._1).distinct.size == rows.size && rows.toMap == want
+      oneRowPerWord(tokenCountRows(docs, TokenCounts.FlushAt), explodeCounts(docs)) :| "folded" &&
+        oneRowPerWord(tokenCountRows(docs, TokenCounts.FlushAt, fold = false),
+          splitCounts(docs)) :| "case kept, split on the delimiters"
     }
+
+  property("per-document token counts land on their own document at any flush size") =
+    forAll(partition, Gen.choose(1, 8), Gen.choose(0, 12)) { (rest, flushAt, at) =>
+      // a document with more distinct words than the tally holds
+      val big = Some((0 until 3 * flushAt + 2).map(i => s"w$i W$i").mkString(" "))
+      val docs = rest.patch(math.min(at, rest.size), Seq(big), 0)
+      val rows = kernelRows(docs, flushAt, perDocument = true)
+      val byDoc = rows.groupBy(_._1).map { case (d, rs) =>
+        d -> rs.groupMapReduce(_._2)(_._3)(_ + _) }
+      docs.indices.forall(i =>
+        byDoc.getOrElse(i, Map.empty) == explodeCounts(Seq(docs(i)))) :| "per document" &&
+        !byDoc.contains(-1) :| "terminate emits nothing"
+    }
+
+  property("a per-document reset touches the small document's slots, not the grown table") = {
+    val tally = new TokenTally(TokenCounts.FlushAt)
+    def count(doc: String): (Int, Long) = {
+      val before = tally.cleared
+      tally.scan(UTF8String.fromString(doc))
+      (tally.takeAll().iterator.size, tally.cleared - before)
+    }
+    val (bigWords, bigCleared) = count((0 until 50000).map(i => s"w$i").mkString(" "))
+    val (smallWords, smallCleared) = count("a b c a")
+    (bigWords == 50000 && bigCleared >= 50000) :| s"large document: $bigCleared slots" &&
+      (smallWords == 3 && smallCleared <= 12) :| s"small document: $smallCleared slots"
+  }
 
   property("token counts summed over flushes equal the model at any flush size") =
     forAll(partition, Gen.choose(1, 8)) { (docs, flushAt) =>

@@ -34,6 +34,31 @@ class PlanAuditSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
     }.size
 
+  /** Every query `body` executes in a fresh session, AQE's final plans
+    * and actions inside the body (checkpoints, collects) included.
+    */
+  private def executed(body: org.apache.spark.sql.SparkSession => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s = spark.newSession()
+    val out = new ConcurrentLinkedQueue[QueryExecution]
+    val sentinel = new CountDownLatch(1)
+    s.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        out.add(qe)
+        if (qe.analyzed.toString.contains("Range (0, 4242")) sentinel.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+    })
+    body(s)
+    s.range(0, 4242).count()
+    assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel action never reported")
+    import scala.jdk.CollectionConverters._
+    out.asScala.toSeq
+  }
+
   test("wordcount: one aggregate exchange + the result sort") {
     assert(shuffles(q("wordcount")) === 2)
   }
@@ -50,33 +75,18 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("writeTsv: one hash exchange, a per-partition sort by word, no range exchange") {
-    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val s = spark.newSession()
-    val executed = new ConcurrentLinkedQueue[QueryExecution]
-    val sentinel = new CountDownLatch(1)
-    s.listenerManager.register(new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        executed.add(qe)
-        if (qe.analyzed.toString.contains("Range (0, 4242")) sentinel.countDown()
-      }
-      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
-    })
     val dir = java.nio.file.Files.createTempDirectory("graft-tsv").toString
-    graft.operators.WordCountOps.writeTsv(
-      graft.operators.WordCountOps.wordCount(Tables.documents(s, TestSpark.Sf0001)), dir)
-    s.range(0, 4242).count()
-    assert(sentinel.await(60, TimeUnit.SECONDS), "sentinel action never reported")
-    import scala.jdk.CollectionConverters._
+    val qes = executed(s => graft.operators.WordCountOps.writeTsv(
+      graft.operators.WordCountOps.wordCount(Tables.documents(s, TestSpark.Sf0001)), dir))
     // every executed node, AQE's final plan and query stages included
     val aqe = new AdaptiveSparkPlanHelper {}
-    val writes = executed.asScala.toSeq.map(qe => aqe.collect(qe.executedPlan) { case p => p })
+    val writes = qes.map(qe => aqe.collect(qe.executedPlan) { case p => p })
       .filter(_.exists(_.isInstanceOf[DataWritingCommandExec]))
-    assert(writes.size === 1, s"write plans: ${executed.asScala.map(_.executedPlan)}")
+    assert(writes.size === 1, s"write plans: ${qes.map(_.executedPlan)}")
     val nodes = writes.head
     val partitionings = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
     // one hash exchange, no range exchange (nor any other)
@@ -126,6 +136,23 @@ class PlanAuditSpec extends AnyFunSuite {
       }
   }
 
+  test("keyed and filtered token counts run the counting kernel, never explode(tokenize)") {
+    // every plan the query executes, its checkpoints and collects
+    // included: a count grouped by a document key rides the
+    // per-document kernel, one grouped by word alone the per-task one
+    Seq("wordcount_per_source", "packets_baseline", "grouped_key_agg", "wordcount_cased",
+      "tfidf_topk", "bm25_topk", "hybrid_rrf", "bpe_merge_pairs", "bpe_train_merges",
+      "bpe_vocab", "bpe_encode_docs", "unigram_logprob", "dsir_weights",
+      "pmi_collocations", "source_vocab_overlap", "coded_shuffle_sim").foreach { name =>
+      val plans = executed(s => Queries.queries(name)(s, TestSpark.Sf0001).collect())
+        .map(_.executedPlan.toString)
+      assert(plans.exists(_.contains("Generate graft_token_counts(")),
+        s"$name must count tokens in the kernel:\n${plans.mkString("\n")}")
+      assert(!plans.exists(_.contains("explode(tokenize")),
+        s"$name must not explode tokens:\n${plans.mkString("\n")}")
+    }
+  }
+
   test("q6_forecast: single-partition final aggregate only") {
     assert(shuffles(q("q6_forecast")) === 1)
   }
@@ -172,21 +199,35 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("unigram_logprob: tf partial-agg collapses tokens before the word window") {
+    // the ReusedExchange below needs the uncached documents table: a
+    // cached one (another suite's .cache() on the shared session) gives
+    // each branch its own TableCacheQueryStage and reuse dies, as in
+    // the bm25_topk pin
+    spark.catalog.clearCache()
     val df = q("unigram_logprob")
-    // tf aggregate + word window + 1-row total (SinglePartition) +
-    // doc aggregate + result sort = 5 designed exchanges
-    assert(shuffles(df) === 5)
-    // the exploded token stream must hit a partial HashAggregate
-    // BEFORE its first exchange — a Generate feeding an Exchange
-    // directly is the Zipf-head scale-killer coming back (one
-    // reducer receives every occurrence of "the")
+    // tf aggregate + word window + doc aggregate + result sort, and
+    // the 1-row total (SinglePartition) over its own copy of the tf
+    // aggregate's exchange = 6 before execution; AQE reuses that copy
+    // (below), so the corpus is counted once
+    assert(shuffles(df) === 6)
+    // the kernel's rows must hit a partial HashAggregate BEFORE their
+    // first exchange — a Generate feeding an Exchange directly is the
+    // Zipf-head scale-killer coming back (one reducer receives every
+    // (doc, word) row of "the")
     val lines = df.queryExecution.executedPlan.toString.linesIterator.toVector
-    val gen = lines.indexWhere(_.contains("Generate"))
-    assert(gen >= 0, "expected a Generate (explode) in the plan")
+    val gen = lines.indexWhere(_.contains("Generate graft_token_counts("))
+    assert(gen >= 0, "expected the counting kernel's Generate in the plan")
     val aggAbove = lines.lastIndexWhere(_.contains("HashAggregate"), gen)
     val exAbove = lines.lastIndexWhere(_.contains("Exchange hashpartitioning"), gen)
     assert(aggAbove > exAbove,
-      "token explode must feed a partial HashAggregate, not an Exchange")
+      "the kernel must feed a partial HashAggregate, not an Exchange")
+    df.collect()
+    val finalPlan = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(finalPlan.linesIterator.count(_.contains("Generate graft_token_counts(")) === 1,
+      s"expected one counting pass in the final plan:\n$finalPlan")
+    assert(finalPlan.contains("ReusedExchange"),
+      "expected the total to reuse the tf exchange")
   }
 
   test("event_funnel: one window exchange, groupBy rides it, 1-row final agg") {
@@ -839,7 +880,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val finalPlan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     val tokenizes = finalPlan.linesIterator
-      .count(_.contains("Generate explode(tokenize"))
+      .count(_.contains("Generate graft_token_counts("))
     assert(tokenizes === 1,
       s"expected one tokenize pass in the final plan, saw $tokenizes")
     assert(finalPlan.contains("ReusedExchange"),

@@ -26,6 +26,8 @@ report is written in a finally block even if the loop itself dies."""
 import fcntl, json, math, os, shutil, sys
 import duckdb
 
+from headroom import floor_gb
+
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 report_path = sys.argv[3] if len(sys.argv) > 3 else None
@@ -70,20 +72,10 @@ def clean_spill():
     os.makedirs(_spill, exist_ok=True)
 
 
-# The floor scales with the fixture: DuckDB's spill grows with the data
-# it scans. 256x the fixture's bytes, at least 2 GB and at most 40 GB,
-# so the 10x fixture (sf1, ~170 MB) and anything larger keep the full
-# 40 GB while sf0.01 (2 MB) and sf0.1 (17 MB) need 2 and 5 GB.
-def fixture_bytes(d):
-    return sum(os.path.getsize(os.path.join(r, f))
-               for r, _, fs in os.walk(d, followlinks=True) for f in fs)
-
-
 clean_spill()
 _free_gb = shutil.disk_usage("/tmp").free // 2**30
-_need_gb = int(os.environ.get(
-    "GRAFT_MIN_HEADROOM_GB",
-    min(40, max(2, math.ceil(256 * fixture_bytes(sfdir) / 2**30)))))
+# the floor scales with the fixture (tools/headroom.py, shared with gates.sh)
+_need_gb = floor_gb(sfdir)
 if _free_gb < _need_gb:
     sys.exit(f"ABORT: only {_free_gb}G free on /tmp (need {_need_gb}G)")
 _temp_cap = os.environ.get("GRAFT_DUCKDB_TEMP_CAP",

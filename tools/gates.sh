@@ -27,37 +27,40 @@ case "$SPILL" in
   */graft_spill) : ;;
   *) SPILL="${SPILL%/}/graft_spill" ;;
 esac
+# The floor scales with the stage's fixture (tools/headroom.py, the same
+# formula check.py applies; GRAFT_MIN_HEADROOM_GB overrides it).
 headroom() {
   rm -rf "$SPILL" /root/repo/.tmp && mkdir -p "$SPILL"
   avail_gb=$(df -BG --output=avail /tmp | tail -1 | tr -dc 0-9)
-  if [ "$avail_gb" -lt 40 ]; then
-    echo "ABORT: only ${avail_gb}G free on /tmp (need 40G)" | tee -a "$log"
+  need_gb=$(python3 tools/headroom.py "$1")
+  if [ "$avail_gb" -lt "$need_gb" ]; then
+    echo "ABORT: only ${avail_gb}G free on /tmp (need ${need_gb}G for $1)" | tee -a "$log"
     exit 1
   fi
-  echo "headroom: ${avail_gb}G free" >> "$log"
+  echo "headroom: ${avail_gb}G free (need ${need_gb}G for $1)" >> "$log"
 }
 
-headroom
+headroom /root/testdata/sf0.01
 stage "sf0.01 cold"
 SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/v_001 2>/dev/null | tail -1 | tee -a "$log"
 python3 tools/check.py /root/testdata/sf0.01 /tmp/v_001 2>&1 | tail -1 | tee -a "$log"
-headroom
+headroom /root/testdata/sf0.01
 stage "sf0.01 warm"
 SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/v_001 2>/dev/null | tail -1 | tee -a "$log"
 python3 tools/check.py /root/testdata/sf0.01 /tmp/v_001 2>&1 | tail -1 | tee -a "$log"
-headroom
+headroom /root/testdata/sf0.1
 stage "sf0.1"
 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=24g tools/run.sh graft.Verify /root/testdata/sf0.1 /tmp/v_01 2>/dev/null | tail -1 | tee -a "$log"
 python3 tools/check.py /root/testdata/sf0.1 /tmp/v_01 CORRECTNESS_sf0.1.json 2>&1 | tail -1 | tee -a "$log"
-headroom
+headroom /root/testdata/sf0.01
 stage "local4"
 SPARK_GRAFT_CPUS=4 SPARK_DRIVER_MEM=16g tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/v_l4 2>/dev/null | tail -1 | tee -a "$log"
 python3 tools/check.py /root/testdata/sf0.01 /tmp/v_l4 CORRECTNESS_local4.json 2>&1 | tail -1 | tee -a "$log"
-headroom
+headroom /tmp/sf1
 stage "10x"
 SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g tools/run.sh graft.Verify /tmp/sf1 /tmp/v_10x 2>/dev/null | tail -1 | tee -a "$log"
 python3 tools/check.py /tmp/sf1 /tmp/v_10x CORRECTNESS_10x.json 2>&1 | tail -1 | tee -a "$log"
-headroom
+headroom /tmp/sfskew
 stage "skew"
 # 60g: at 48g the r16 run hit GCLocker starvation ("Retried waiting
 # for GCLocker too often") and the JVM died mid-registry — the codec
