@@ -39,24 +39,18 @@ object Verify {
     // a stale pass) and stamped after a successful write. tools/check.py
     // cross-checks the per-query stamp against run_stamp.txt.
     val runStamp = java.util.UUID.randomUUID().toString
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
     var failed = List.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name)) {
         val dest = Paths.get(outDir, name)
-        rmTree(dest)
+        graft.sources.Fixtures.deleteTree(dest)
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(dest.toString)
           // underscore prefix → invisible to Spark/DuckDB parquet globs
           Files.writeString(dest.resolve("_GRAFT_STAMP"), runStamp)
         } catch { case e: Throwable =>
-          rmTree(dest)
+          graft.sources.Fixtures.deleteTree(dest)
           failed ::= name
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }

@@ -364,7 +364,7 @@ private[graft] trait QueriesRelational extends QueriesOracleHelpers {
     // oracle-checkable fact. Open purchases (p_ms >= WM2) are absent
     "streamed_join_unmatched" -> QueryDef(
       (s, d) => {
-        val dir = graft.streaming.EventStreams.streamedOuterJoinLayout(s, d)
+        val dir = graft.streaming.EventStreams.streamedJoinLayout(s, d, "left_outer")
         s.read.parquet(dir)
           .select("purchase_id", "user_id", "p_ms", "click_id", "c_ms")
           .orderBy(col("purchase_id"), col("click_id").asc_nulls_first)

@@ -71,15 +71,9 @@ object AvroSource {
 
   def writeOrdersAvro(orders: DataFrame, path: String): Unit = {
     requireUtcSession(orders.sparkSession)
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      // saveAsNewAPIHadoopFile refuses an existing dir; a partial
-      // previous attempt (no _SUCCESS) must be wiped, not appended to
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    // saveAsNewAPIHadoopFile refuses an existing dir; a partial
+    // previous attempt (no _SUCCESS) must be wiped, not appended to
+    Fixtures.deleteTree(java.nio.file.Paths.get(path))
     val pairs = orders
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         // orders' o_orderdate is TIMESTAMP_NTZ: hop through the session

@@ -32,26 +32,18 @@ object BinarySource {
     */
   def blobDir(spark: SparkSession, sfDir: String): String =
     Fixtures.ensure("blobdir", sfDir, Seq(s"$sfDir/documents.parquet")) { path =>
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      java.nio.file.Files.createDirectories(root)
-      graft.Tables.documents(spark, sfDir)
-        .where(pmod(col("doc_id"), lit(SampleMod)) === 0)
-        .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
-        .foreachPartition { rows: Iterator[Row] =>
-          rows.foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(path, s"doc_${r.getLong(0)}.bin"),
-              r.getAs[Array[Byte]](1))
+      Fixtures.cleanBuild(path, Seq("_SUCCESS")) {
+        graft.Tables.documents(spark, sfDir)
+          .where(pmod(col("doc_id"), lit(SampleMod)) === 0)
+          .select(col("doc_id"), encode(col("text"), "UTF-8").as("bytes"))
+          .foreachPartition { rows: Iterator[Row] =>
+            rows.foreach { r =>
+              java.nio.file.Files.write(
+                java.nio.file.Paths.get(path, s"doc_${r.getLong(0)}.bin"),
+                r.getAs[Array[Byte]](1))
+            }
           }
-        }
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      }
     }
 
   /** The gated inventory: doc id (from the file name), exact byte

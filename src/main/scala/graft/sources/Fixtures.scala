@@ -17,6 +17,14 @@ import java.io.File
   *
   * This is also what keeps fixture cost out of benchmark numbers: only
   * the first query invocation against a given dataset pays the write.
+  *
+  * The flip side: the key covers the tag, the dataset, `params` and the
+  * source fingerprint, never the code that builds the layout. Layouts
+  * live under `java.io.tmpdir` and outlive the JVM, so a changed builder
+  * is not run by the tests or by `graft.Verify` while a completed
+  * directory for its key exists. Delete a layout's directories to
+  * rebuild it, e.g. `rm -rf /tmp/graft_<tag>_*` for the default tmpdir
+  * (`/tmp/graft_*` for all of them).
   */
 object Fixtures {
 
@@ -36,6 +44,17 @@ object Fixtures {
       .take(6).map(b => f"$b%02x").mkString
   }
 
+  /** Delete `path` and everything under it, children first; a
+    * missing path is a no-op.
+    */
+  def deleteTree(path: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(path)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(path)
+        .sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(java.nio.file.Files.delete)
+    }
+
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Clean-slate rebuild for fixture layouts that write into
@@ -47,12 +66,7 @@ object Fixtures {
     */
   def cleanBuild(dir: String, markers: Seq[String])(build: => Unit): Unit = {
     val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    deleteTree(root)
     java.nio.file.Files.createDirectories(root)
     build
     markers.foreach(m =>

@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
+
+import graft.sources.Fixtures
 
 /** Structured Streaming variants of the events analytics: the same
   * logical queries as [[graft.operators.EventsOps]], expressed as
@@ -75,20 +77,85 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
 
-  /** The reference's wordcount as a CONTINUOUS query — the same
-    * tokenize → explode → count logical plan as
-    * [[graft.operators.WordCountOps.wordCount]] run incrementally
-    * over a document stream: each micro-batch folds its partial
+  /** Run a configured, unstarted stream writer over everything its
+    * source holds now: one AvailableNow trigger (still one file per
+    * micro-batch under `maxFilesPerTrigger`), awaited and stopped. A
+    * failed micro-batch rethrows here, so a layout built through it
+    * never writes its marker over a broken replay. The `ingest*` and
+    * `write*` functions below return such writers; a continuous run
+    * calls `.start()` on the same writer instead.
+    */
+  def drain(writer: DataStreamWriter[Row]): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** `stream` into an append-mode parquet sink at `outDir`. */
+  private def appendParquet(stream: DataFrame, outDir: String,
+                            checkpointDir: String): DataStreamWriter[Row] =
+    stream.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .outputMode("append")
+
+  /** `stream` handed to `fold(batch, batchId)` once per micro-batch. */
+  private def eachBatch(stream: DataFrame, checkpointDir: String)
+                       (fold: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], id: Long) => fold(batch, id) }
+
+  /** A write-once streamed layout over one fixture table: keyed on
+    * `tag`, `params` and the table's fingerprint
+    * ([[graft.sources.Fixtures.ensure]]), built from a wiped directory
+    * with `_SUCCESS` written only after `build` returns
+    * ([[graft.sources.Fixtures.cleanBuild]]) — a partial layout's stale
+    * checkpoint is never resumed.
+    */
+  private def streamedLayout(tag: String, sfDir: String, table: String,
+                             params: String = "")(build: String => Unit): String =
+    Fixtures.ensure(tag, sfDir, Seq(s"$sfDir/$table.parquet"), params) { path =>
+      Fixtures.cleanBuild(path, Seq("_SUCCESS"))(build(path))
+    }
+
+  /** The staged two-phase replay behind the event-sink layouts: stage
+    * `phase1` as `_src/phase1.parquet`, drain `sink` into `path`, stage
+    * `phase2` as `_src/phase2.parquet` and drain again from the same
+    * `_checkpoint`, so the second run starts under the first run's
+    * committed watermark and keyed state. Each staged file is one
+    * micro-batch ([[stageSingleParquet]]), so the watermark sequence is
+    * a function of the data and the split alone.
+    */
+  private[graft] def twoPhaseReplay(spark: SparkSession, path: String,
+                                    phase1: DataFrame, phase2: DataFrame)
+                                   (sink: (DataFrame, String, String) => DataStreamWriter[Row]): Unit = {
+    val src = java.nio.file.Paths.get(path, "_src")
+    def run(): Unit =
+      drain(sink(readEventsStream(spark, src.toString), path, s"$path/_checkpoint"))
+    stageSingleParquet(phase1, src.resolve("phase1.parquet"))
+    run()
+    stageSingleParquet(phase2, src.resolve("phase2.parquet"))
+    run()
+  }
+
+  /** The replays' usual split: phase 2 is the straggler slice
+    * `event_id % 5 = 0`, phase 1 the on-time rest. */
+  private def straggler: Column = pmod(col("event_id"), lit(5)) === 0
+
+  /** The reference's wordcount as a CONTINUOUS query: the batch
+    * [[graft.operators.WordCountOps.wordCount]]'s counting kernel
+    * (`graft_token_counts` summed per word) run incrementally over a
+    * document stream. Each micro-batch folds its per-task partial
     * counts into keyed state exactly where the batch plan puts its
-    * partial/final HashAggregate pair. Run with Update/Complete
+    * partial/final HashAggregate pair; the state value is the running
+    * `sum`. A checkpoint written by an earlier explode-and-count plan
+    * holds a `count` value instead, and a restart over it fails at once
+    * on the state schema check (StreamingSpec). Run with Update/Complete
     * output mode (a running count has no append point).
     */
-  def streamingWordCount(docs: DataFrame): DataFrame = {
-    docs
-      .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-  }
+  def streamingWordCount(docs: DataFrame): DataFrame =
+    graft.operators.WordCountOps.summedCounts(docs)
 
   /** Streaming distinct-user estimate per event type with the custom
     * KMV sketch aggregate: the mergeable k-bounded buffer is exactly
@@ -247,27 +314,39 @@ object EventStreams {
     */
   def ingestNearDedupStream(docsStream: DataFrame, docs: DataFrame,
                             sfDir: String, outDir: String,
-                            checkpointDir: String,
-                            availableNow: Boolean = false): StreamingQuery = {
-    val writer = docsStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.DedupOps
-          .incrementalNearDedupFrom(batch, docs, sfDir,
-            threshold = 0.8, maxBucket = 1000, includeBatchSelfPairs = true)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
+                            checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(docsStream, checkpointDir) { (batch, id) =>
+      graft.operators.DedupOps
+        .incrementalNearDedupFrom(batch, docs, sfDir,
+          threshold = 0.8, maxBucket = 1000, includeBatchSelfPairs = true)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
+
+  /** Stage the fixture table `table` whole into `path/_src` (a file
+    * stream source wants a directory; `_src` stays hidden from a read
+    * of the layout) and return that directory.
+    */
+  private def stageCopy(sfDir: String, path: String, table: String): String = {
+    val srcDir = java.nio.file.Paths.get(path, "_src")
+    java.nio.file.Files.createDirectories(srcDir)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$table.parquet"),
+      srcDir.resolve(s"$table.parquet"))
+    srcDir.toString
+  }
+
+  /** Stage `df` into `path/_src` as TWO parquet files, so a replay at
+    * one file per trigger folds at least two micro-batches, and return
+    * that directory.
+    */
+  private def stageTwoFiles(df: DataFrame, path: String): String = {
+    df.repartition(2).write.parquet(s"$path/_src")
+    s"$path/_src"
   }
 
   /** Write-once STREAMED near-dedup pair layout: replay the fixture's
     * odd-id documents through [[ingestNearDedupStream]] to
-    * termination (availableNow trigger, real checkpointed micro-batch
-    * run) — the registry's `streamed_ingest_pairs` reads the landed
+    * termination ([[drain]], a real checkpointed micro-batch run) —
+    * the registry's `streamed_ingest_pairs` reads the landed
     * pairs back while the oracle recomputes exact Jaccard from the
     * ORIGINAL documents table, so the streaming near-dedup path
     * (source → index probe → idempotent sink) joins the hash gate
@@ -277,29 +356,11 @@ object EventStreams {
   def streamedNearDedupLayout(spark: SparkSession, sfDir: String): String =
     // params "h2": the landed pairs came from probing the versioned
     // LSH index (see DedupOps.lshIndexDir) — keep the layouts in step
-    graft.sources.Fixtures.ensure("streamdedup", sfDir,
-      Seq(s"$sfDir/documents.parquet"), params = "h2") { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-        srcDir.resolve("documents.parquet"))
-      val arriving = readDocumentsStream(spark, srcDir.toString)
+    streamedLayout("streamdedup", sfDir, "documents", params = "h2") { path =>
+      val arriving = readDocumentsStream(spark, stageCopy(sfDir, path, "documents"))
         .where(pmod(col("doc_id"), lit(2)) === 1)
-      val q = ingestNearDedupStream(arriving,
-        graft.Tables.documents(spark, sfDir), sfDir,
-        path, s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestNearDedupStream(arriving,
+        graft.Tables.documents(spark, sfDir), sfDir, path, s"$path/_checkpoint"))
     }
 
   /** STREAMED semantic (embedding) ingest: each micro-batch of
@@ -315,26 +376,17 @@ object EventStreams {
     */
   def ingestSemanticDedupStream(vecStream: DataFrame, emb: DataFrame,
                                 sfDir: String, outDir: String,
-                                checkpointDir: String,
-                                availableNow: Boolean = false): StreamingQuery = {
-    val writer = vecStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.SimilarityOps
-          .semanticDedupBatch(batch, emb, sfDir)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                                checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(vecStream, checkpointDir) { (batch, id) =>
+      graft.operators.SimilarityOps
+        .semanticDedupBatch(batch, emb, sfDir)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Write-once STREAMED semantic-dedup pair layout: replay the
     * fixture's odd-id embeddings through [[ingestSemanticDedupStream]]
-    * to termination (availableNow trigger, real checkpointed
-    * micro-batch run). The registry's `streamed_vector_pairs` reads
+    * to termination ([[drain]], a real checkpointed micro-batch run).
+    * The registry's `streamed_vector_pairs` reads
     * the landed pairs back while the oracle recomputes the whole
     * model + restriction from the ORIGINAL embeddings table, so the
     * streamed embedding front door (source → centroid-model probe →
@@ -342,29 +394,11 @@ object EventStreams {
     * [[streamedNearDedupLayout]] put the LSH probe under it.
     */
   def streamedSemanticLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streamsem", sfDir,
-      Seq(s"$sfDir/embeddings.parquet")) { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
-        srcDir.resolve("embeddings.parquet"))
-      val arriving = readDocumentsStream(spark, srcDir.toString)
+    streamedLayout("streamsem", sfDir, "embeddings") { path =>
+      val arriving = readDocumentsStream(spark, stageCopy(sfDir, path, "embeddings"))
         .where(pmod(col("vec_id"), lit(2)) === 1)
-      val q = ingestSemanticDedupStream(arriving,
-        graft.Tables.embeddings(spark, sfDir), sfDir,
-        path, s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestSemanticDedupStream(arriving,
+        graft.Tables.embeddings(spark, sfDir), sfDir, path, s"$path/_checkpoint"))
     }
 
   /** STREAMED index MAINTENANCE for the retrieval family: each
@@ -384,19 +418,10 @@ object EventStreams {
     * repo's idempotent `batch_id=` sinks already demonstrate.
     */
   def ingestPostingsFoldStream(docsStream: DataFrame, indexDir: String,
-                               checkpointDir: String,
-                               availableNow: Boolean = false): StreamingQuery = {
-    val writer = docsStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.RetrievalOps.foldBatchIntoPostings(batch.toDF(), indexDir)
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                               checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(docsStream, checkpointDir) { (batch, _) =>
+      graft.operators.RetrievalOps.foldBatchIntoPostings(batch, indexDir)
+    }
 
   /** Write-once STREAMED postings-fold layout: the index is built
     * from the even-doc half, then the odd half arrives as a REAL
@@ -409,31 +434,15 @@ object EventStreams {
     * hash.
     */
   def streamedPostingsLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streampost", sfDir,
-      Seq(s"$sfDir/documents.parquet"),
+    streamedLayout("streampost", sfDir, "documents",
       params = s"b${graft.operators.RetrievalOps.WordBuckets}") { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
       val docs = graft.Tables.documents(spark, sfDir)
-      docs.where(pmod(col("doc_id"), lit(2)) === 1)
-        .repartition(2) // two files -> two micro-batches
-        .write.parquet(srcDir.toString)
-      val idx = root.resolve("index").toString
+      val srcDir = stageTwoFiles(docs.where(pmod(col("doc_id"), lit(2)) === 1), path)
+      val idx = s"$path/index"
       graft.operators.RetrievalOps.writePostingsIndex(
         docs.where(pmod(col("doc_id"), lit(2)) === 0), idx)
-      val arriving = readDocumentsStream(spark, srcDir.toString)
-      val q = ingestPostingsFoldStream(arriving, idx,
-        s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestPostingsFoldStream(readDocumentsStream(spark, srcDir), idx,
+        s"$path/_checkpoint"))
     }
 
   /** STREAMED weighted priority sampling — the SAMPLING member of
@@ -455,23 +464,20 @@ object EventStreams {
     * manifest makes by keying on batchId.
     */
   def ingestPrioFoldStream(docsStream: DataFrame, stateRoot: String,
-                           checkpointDir: String,
-                           availableNow: Boolean = false): StreamingQuery = {
-    val writer = docsStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val cur = latestCdcVersion(stateRoot)
-        val state = spark.read.parquet(s"$stateRoot/v$cur")
-        graft.operators.PipelineOps.prioFold(state, batch.toDF())
-          .write.mode("overwrite").parquet(s"$stateRoot/v${cur + 1}")
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                           checkpointDir: String): DataStreamWriter[Row] =
+    foldVersions(docsStream, stateRoot, checkpointDir)(graft.operators.PipelineOps.prioFold)
+
+  /** `stream` folded into the version chain under `stateRoot` once per
+    * micro-batch: read the latest committed `v<n>`, write
+    * `fold(state, batch)` as `v<n+1>` — never over the files it reads.
+    */
+  private def foldVersions(stream: DataFrame, stateRoot: String, checkpointDir: String)
+                          (fold: (DataFrame, DataFrame) => DataFrame): DataStreamWriter[Row] =
+    eachBatch(stream, checkpointDir) { (batch, _) =>
+      val cur = latestCdcVersion(stateRoot)
+      fold(batch.sparkSession.read.parquet(s"$stateRoot/v$cur"), batch)
+        .write.mode("overwrite").parquet(s"$stateRoot/v${cur + 1}")
+    }
 
   /** Write-once streamed priority-sample layout: state seeded from
     * the even-doc half, the odd half arriving as TWO real
@@ -481,33 +487,15 @@ object EventStreams {
     * the latest committed version.
     */
   def streamedPrioLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streamprio", sfDir,
-      Seq(s"$sfDir/documents.parquet"),
+    streamedLayout("streamprio", sfDir, "documents",
       params = s"k${graft.operators.PipelineOps.PrioK}") { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      java.nio.file.Files.createDirectories(root)
       val docs = graft.Tables.documents(spark, sfDir)
-      val state = root.resolve("state")
       graft.operators.PipelineOps
         .prioTopState(docs.where(pmod(col("doc_id"), lit(2)) === 0))
-        .write.parquet(state.resolve("v0").toString)
-      val srcDir = root.resolve("_src")
-      docs.where(pmod(col("doc_id"), lit(2)) === 1)
-        .repartition(2) // two files -> two micro-batches
-        .write.parquet(srcDir.toString)
-      val arriving = readDocumentsStream(spark, srcDir.toString)
-      val q = ingestPrioFoldStream(arriving, state.toString,
-        s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+        .write.parquet(s"$path/state/v0")
+      val srcDir = stageTwoFiles(docs.where(pmod(col("doc_id"), lit(2)) === 1), path)
+      drain(ingestPrioFoldStream(readDocumentsStream(spark, srcDir), s"$path/state",
+        s"$path/_checkpoint"))
     } + "/state"
 
   /** STREAMED coded-list maintenance — the VECTOR-INDEX member of
@@ -527,20 +515,10 @@ object EventStreams {
     */
   def ingestIvfPqFoldStream(vecStream: DataFrame, centroids: DataFrame,
                             codebook: DataFrame, listsDir: String,
-                            checkpointDir: String,
-                            availableNow: Boolean = false): StreamingQuery = {
-    val writer = vecStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.SimilarityOps.ivfPqAppendBatch(
-          batch.toDF(), centroids, codebook, listsDir)
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                            checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(vecStream, checkpointDir) { (batch, _) =>
+      graft.operators.SimilarityOps.ivfPqAppendBatch(batch, centroids, codebook, listsDir)
+    }
 
   /** Write-once STREAMED coded-list layout: the even-id corpus is
     * built in batch under the corpus-frozen models, then the odd half
@@ -552,37 +530,18 @@ object EventStreams {
     */
   def streamedIvfPqLayout(spark: SparkSession, sfDir: String): String = {
     val ops = graft.operators.SimilarityOps
-    graft.sources.Fixtures.ensure("streamivfpq", sfDir,
-      Seq(s"$sfDir/embeddings.parquet"),
+    streamedLayout("streamivfpq", sfDir, "embeddings",
       params = s"m98c16q${ops.PqK}") { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
       val emb = graft.Tables.embeddings(spark, sfDir)
       val centroids = spark.read.parquet(
         ops.upsertCentroidsDir(emb, sfDir, 98, 16, 1, 0.0))
       val codebook = spark.read.parquet(ops.pqUpsertCodebookDir(emb, sfDir))
-      val srcDir = root.resolve("_src")
-      emb.where(pmod(col("vec_id"), lit(2)) === 1)
-        .repartition(2) // two files -> two micro-batches
-        .write.parquet(srcDir.toString)
-      val lists = root.resolve("lists").toString
+      val srcDir = stageTwoFiles(emb.where(pmod(col("vec_id"), lit(2)) === 1), path)
+      val lists = s"$path/lists"
       ops.ivfPqCorpusBuild(emb.where(pmod(col("vec_id"), lit(2)) === 0),
         centroids, codebook, lists)
-      val arriving = spark.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val q = ingestIvfPqFoldStream(arriving, centroids, codebook, lists,
-        s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestIvfPqFoldStream(readDocumentsStream(spark, srcDir),
+        centroids, codebook, lists, s"$path/_checkpoint"))
     } + "/lists"
   }
 
@@ -603,20 +562,10 @@ object EventStreams {
     * multiplicity (the idempotent batch_id= sink discipline).
     */
   def ingestNswFoldStream(vecStream: DataFrame, corpus: DataFrame,
-                          edgesDir: String, checkpointDir: String,
-                          availableNow: Boolean = false): StreamingQuery = {
-    val writer = vecStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.SimilarityOps.nswAppendBatch(
-          batch.toDF(), corpus, edgesDir, batchId = Some(id))
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                          edgesDir: String, checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(vecStream, checkpointDir) { (batch, id) =>
+      graft.operators.SimilarityOps.nswAppendBatch(batch, corpus, edgesDir, batchId = Some(id))
+    }
 
   /** Write-once STREAMED graph layout: even-id corpus adjacency
     * built in batch, the odd half arriving as TWO real checkpointed
@@ -626,40 +575,21 @@ object EventStreams {
     */
   def streamedNswLayout(spark: SparkSession, sfDir: String): String = {
     val ops = graft.operators.SimilarityOps
-    graft.sources.Fixtures.ensure("streamnsw", sfDir,
-      Seq(s"$sfDir/embeddings.parquet"),
+    streamedLayout("streamnsw", sfDir, "embeddings",
       params = s"g${ops.NswG}m${ops.NswUpsertMods.mkString("x")}akb") { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
       val emb = graft.Tables.embeddings(spark, sfDir)
       val corpus = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-      val srcDir = root.resolve("_src")
-      emb.where(pmod(col("vec_id"), lit(2)) === 1)
-        .repartition(2) // two files -> two micro-batches
-        .write.parquet(srcDir.toString)
+      val srcDir = stageTwoFiles(emb.where(pmod(col("vec_id"), lit(2)) === 1), path)
       // the corpus build lands under its own batch_id=-1 partition so
       // the layout is uniformly batch_id-partitioned (mixing root
       // files with batch_id= subdirs breaks partition discovery); the
       // extra batch_id column is invisible to the probe, which only
       // consumes (src, dst)
-      val edges = root.resolve("edges").toString
+      val edges = s"$path/edges"
       ops.nswEdges(corpus, ops.NswUpsertMods)
         .write.mode("overwrite").parquet(s"$edges/batch_id=-1")
-      val arriving = spark.readStream
-        .schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val q = ingestNswFoldStream(arriving, corpus, edges,
-        s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestNswFoldStream(readDocumentsStream(spark, srcDir), corpus, edges,
+        s"$path/_checkpoint"))
     } + "/edges"
   }
 
@@ -675,23 +605,8 @@ object EventStreams {
     * the layout below delivers them newest-first on purpose.
     */
   def ingestCdcFoldStream(opsStream: DataFrame, stateRoot: String,
-                          checkpointDir: String,
-                          availableNow: Boolean = false): StreamingQuery = {
-    val writer = opsStream
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val cur = latestCdcVersion(stateRoot)
-        val state = spark.read.parquet(s"$stateRoot/v$cur")
-        graft.operators.RelationalOps.cdcFold(state, batch.toDF())
-          .write.mode("overwrite").parquet(s"$stateRoot/v${cur + 1}")
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+                          checkpointDir: String): DataStreamWriter[Row] =
+    foldVersions(opsStream, stateRoot, checkpointDir)(graft.operators.RelationalOps.cdcFold)
 
   /** Highest committed state version under `stateRoot` (a committed
     * version has Spark's `_SUCCESS`; an interrupted fold's partial
@@ -734,12 +649,7 @@ object EventStreams {
         "aborting before deleting the version chain")
     Option(new java.io.File(stateRoot).listFiles()).toSeq.flatten
       .filter(f => f.getName.matches("v\\d+") && f.getName.drop(1).toLong < next)
-      .foreach { dir =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir.toPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
+      .foreach(dir => Fixtures.deleteTree(dir.toPath))
     next
   }
 
@@ -752,24 +662,20 @@ object EventStreams {
     * hash-proven.
     */
   def streamedCdcCompactedLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streamcdccomp", sfDir,
-      Seq(s"$sfDir/orders.parquet")) { path =>
-      graft.sources.Fixtures.cleanBuild(path, Seq("_SUCCESS")) {
-        val src = java.nio.file.Paths.get(
-          streamedCdcLayout(spark, sfDir), "state")
-        val dst = java.nio.file.Paths.get(path, "state")
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
-          val t = dst.resolve(src.relativize(p))
-          if (java.nio.file.Files.isDirectory(p))
-            java.nio.file.Files.createDirectories(t)
-          else java.nio.file.Files.copy(p, t)
-        }
-        // every changelog seq is <= CdcSeqOffset + max orderkey; the
-        // fixture horizon (all ops delivered) is "past everything"
-        compactCdcChain(spark, dst.toString, Long.MaxValue)
-        ()
+    streamedLayout("streamcdccomp", sfDir, "orders") { path =>
+      val src = java.nio.file.Paths.get(streamedCdcLayout(spark, sfDir), "state")
+      val dst = java.nio.file.Paths.get(path, "state")
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+        val t = dst.resolve(src.relativize(p))
+        if (java.nio.file.Files.isDirectory(p))
+          java.nio.file.Files.createDirectories(t)
+        else java.nio.file.Files.copy(p, t)
       }
+      // every changelog seq is <= CdcSeqOffset + max orderkey; the
+      // fixture horizon (all ops delivered) is "past everything"
+      compactCdcChain(spark, dst.toString, Long.MaxValue)
+      ()
     }
 
   /** Write-once STREAMED CDC layout: state v0 = the initial
@@ -785,49 +691,23 @@ object EventStreams {
     * oracle as the batch `cdc_apply`.
     */
   def streamedCdcLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streamcdc", sfDir,
-      Seq(s"$sfDir/orders.parquet")) { path =>
-      import org.apache.spark.sql.functions.col
+    streamedLayout("streamcdc", sfDir, "orders") { path =>
       import graft.operators.RelationalOps
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      java.nio.file.Files.createDirectories(root)
       val orders = graft.Tables.orders(spark, sfDir)
-      val state = root.resolve("state")
-      RelationalOps.cdcSnapshot(orders)
-        .write.parquet(state.resolve("v0").toString)
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+      RelationalOps.cdcSnapshot(orders).write.parquet(s"$path/state/v0")
+      val srcDir = java.nio.file.Paths.get(path, "_src")
       val ops = RelationalOps.cdcOps(orders)
-      def writeWave(df: org.apache.spark.sql.DataFrame, name: String,
-                    mtimeMs: Long): Unit = {
-        val tmp = root.resolve(s"_tmp_$name")
-        df.coalesce(1).write.parquet(tmp.toString)
-        val part = tmp.toFile.listFiles()
-          .find(_.getName.endsWith(".parquet")).get.toPath
+      def writeWave(df: DataFrame, name: String, mtimeMs: Long): Unit = {
         val dst = srcDir.resolve(s"$name.parquet")
-        java.nio.file.Files.move(part, dst)
+        stageSingleParquet(df, dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
       }
       val t0 = System.currentTimeMillis() - 600000L
       writeWave(ops.where(col("seq") >= RelationalOps.CdcSeqOffset), "wave2", t0)
       writeWave(ops.where(col("seq") < RelationalOps.CdcSeqOffset), "wave1", t0 + 60000L)
-      val arriving = readDocumentsStream(spark, srcDir.toString)
-      val q = ingestCdcFoldStream(arriving, state.toString,
-        s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      drain(ingestCdcFoldStream(readDocumentsStream(spark, srcDir.toString),
+        s"$path/state", s"$path/_checkpoint"))
     }
 
   /** Stream-stream interval self-join: each purchase joined to the
@@ -837,10 +717,20 @@ object EventStreams {
     * both streams through one exchange pair; the time-range predicate
     * bounds state retention (Spark derives the state cleanup
     * threshold from watermark + interval).
+    *
+    * `joinType = "left_outer"` makes EVERY purchase emit — attributed
+    * to a preceding click within the interval when one exists,
+    * null-padded otherwise. The null-padded rows exercise the
+    * state-EVICTION semantics the inner join never does: an unmatched
+    * purchase can only be declared unmatched (and emitted) once the
+    * click-side watermark has passed the end of its match window, so
+    * emission timing is governed by watermark progress, not data
+    * arrival. State stays bounded exactly as in the inner join.
     */
   def clickPurchaseIntervalJoin(events: DataFrame,
                                 intervalMinutes: Int = 30,
-                                watermark: String = "1 hour"): DataFrame = {
+                                watermark: String = "1 hour",
+                                joinType: String = "inner"): DataFrame = {
     val base = events
       .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
     val clicks = base.where(col("event_type") === "click")
@@ -854,7 +744,8 @@ object EventStreams {
     purchases.join(clicks,
       col("p_user") === col("c_user") &&
         col("click_time") <= col("purchase_time") &&
-        col("click_time") >= col("purchase_time") - expr(s"INTERVAL $intervalMinutes MINUTES"))
+        col("click_time") >= col("purchase_time") - expr(s"INTERVAL $intervalMinutes MINUTES"),
+      joinType)
       .select(col("purchase_id"), col("p_user").as("user_id"),
         col("purchase_time"), col("click_id"), col("click_time"))
   }
@@ -874,30 +765,31 @@ object EventStreams {
   val JoinPurchaseMod = 4L
 
   /** [[clickPurchaseIntervalJoin]] under the gate contract, into an
-    * append-mode parquet sink (an inner join emits each match in the
-    * batch where its second side arrives — no window flush).
+    * append-mode parquet sink. An inner join emits each match in the
+    * batch where its second side arrives — no window flush; a
+    * `"left_outer"` sink additionally holds NULL-PADDED rows for
+    * purchases whose match window closed under the watermark with no
+    * (non-late) click.
     */
   def writeJoinedPairs(events: DataFrame, outDir: String,
-                       checkpointDir: String): StreamingQuery =
-    clickPurchaseIntervalJoin(
-      events.where(!(col("event_type") === "purchase" &&
-        pmod(col("event_id"), lit(JoinPurchaseMod)) =!= 1L)),
-      JoinIntervalMinutes, JoinWatermark)
-      .select(col("purchase_id"), col("user_id"),
-        unix_millis(col("purchase_time")).as("p_ms"),
-        col("click_id"), unix_millis(col("click_time")).as("c_ms"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                       checkpointDir: String,
+                       joinType: String = "inner"): DataStreamWriter[Row] =
+    appendParquet(
+      clickPurchaseIntervalJoin(
+        events.where(!(col("event_type") === "purchase" &&
+          pmod(col("event_id"), lit(JoinPurchaseMod)) =!= 1L)),
+        JoinIntervalMinutes, JoinWatermark, joinType)
+        .select(col("purchase_id"), col("user_id"),
+          unix_millis(col("purchase_time")).as("p_ms"),
+          col("click_id"), unix_millis(col("click_time")).as("c_ms")),
+      outDir, checkpointDir)
 
   /** Write-once STREAM-STREAM-JOIN sink: the two-phase staged replay
-    * ([[streamedDedupLayout]] convention — phase 1 = `event_id%5!=0`,
-    * restart, phase 2 = the rest) through the watermarked interval
-    * join. The final sink is a pure function of the data and the
+    * ([[twoPhaseReplay]], phase 1 = `event_id%5!=0`, restart, phase 2 =
+    * the rest) through the watermarked interval join, tagged
+    * `joinsink` for the inner join and `ljoinsink` for `"left_outer"`.
+    *
+    * Inner: the final sink is a pure function of the data and the
     * split: every predicate-satisfying (purchase, click) pair lands
     * EXCEPT those involving a phase-2 row whose event time is below
     * the phase-1 watermark (late, filtered on input). State eviction
@@ -910,61 +802,9 @@ object EventStreams {
     * hash. WM₁ is the MIN of the two sides' per-column watermarks
     * (Spark's default multiple-watermark policy), which the oracle
     * mirrors with `least()`.
-    */
-  def streamedJoinLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("joinsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val ev = graft.Tables.events(spark, sfDir)
-      def run(): Unit = {
-        val q = writeJoinedPairs(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) === 0),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
-    }
-
-  /** [[clickPurchaseLeftOuterJoin]] under the same gate contract as
-    * [[writeJoinedPairs]] — the sink additionally holds NULL-PADDED
-    * rows for purchases whose match window closed under the
-    * watermark with no (non-late) click.
-    */
-  def writeOuterJoinedPairs(events: DataFrame, outDir: String,
-                            checkpointDir: String): StreamingQuery =
-    clickPurchaseLeftOuterJoin(
-      events.where(!(col("event_type") === "purchase" &&
-        pmod(col("event_id"), lit(JoinPurchaseMod)) =!= 1L)),
-      JoinIntervalMinutes, JoinWatermark)
-      .select(col("purchase_id"), col("user_id"),
-        unix_millis(col("purchase_time")).as("p_ms"),
-        col("click_id"), unix_millis(col("click_time")).as("c_ms"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** Write-once LEFT-OUTER stream-stream-join sink, the state-
-    * EVICTION companion of [[streamedJoinLayout]]: matched rows are
-    * the inner join's exact set, and a null-padded row lands iff its
+    *
+    * Left outer, the state-EVICTION companion: matched rows are the
+    * inner join's exact set, and a null-padded row lands iff its
     * purchase was ADMITTED (on time for its arrival batch), found no
     * non-late click, and its match window closed under the FINAL
     * watermark (`p_ms < WM₂` — an unmatched purchase can only be
@@ -980,66 +820,19 @@ object EventStreams {
     * emission union equals the single final-watermark rule the
     * oracle encodes.
     */
-  def streamedOuterJoinLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("ljoinsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val ev = graft.Tables.events(spark, sfDir)
-      def run(): Unit = {
-        val q = writeOuterJoinedPairs(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) === 0),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+  def streamedJoinLayout(spark: SparkSession, sfDir: String,
+                         joinType: String = "inner"): String = {
+    val tag = joinType match {
+      case "inner"      => "joinsink"
+      case "left_outer" => "ljoinsink"
+      case other => throw new IllegalArgumentException(
+        s"no streamed join layout for join type '$other'")
     }
-
-  /** LEFT OUTER stream-stream interval join: EVERY purchase emits —
-    * attributed to a preceding click within the interval when one
-    * exists, null-padded otherwise. The null-padded rows exercise the
-    * state-EVICTION semantics the inner join never does: an unmatched
-    * purchase can only be declared unmatched (and emitted) once the
-    * click-side watermark has passed the end of its match window, so
-    * emission timing is governed by watermark progress, not data
-    * arrival. State stays bounded exactly as in the inner join — both
-    * sides watermarked, the time-range condition bounds click
-    * retention to `intervalMinutes` past the watermark.
-    */
-  def clickPurchaseLeftOuterJoin(events: DataFrame,
-                                 intervalMinutes: Int = 30,
-                                 watermark: String = "1 hour"): DataFrame = {
-    val base = events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-    val clicks = base.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("event_time").as("click_time"))
-      .withWatermark("click_time", watermark)
-    val purchases = base.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("event_time").as("purchase_time"))
-      .withWatermark("purchase_time", watermark)
-    purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("click_time") <= col("purchase_time") &&
-        col("click_time") >= col("purchase_time") - expr(s"INTERVAL $intervalMinutes MINUTES"),
-      "left_outer")
-      .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("purchase_time"), col("click_id"), col("click_time"))
+    streamedLayout(tag, sfDir, "events") { path =>
+      val ev = graft.Tables.events(spark, sfDir)
+      twoPhaseReplay(spark, path, ev.where(!straggler), ev.where(straggler))(
+        writeJoinedPairs(_, _, _, joinType))
+    }
   }
 
   // --- stateful sessionization -------------------------------------
@@ -1183,29 +976,9 @@ object EventStreams {
   /** [[sessionizeEventTime]] into an append-mode parquet sink. */
   def writeSessionized(events: DataFrame, outDir: String,
                        checkpointDir: String,
-                       gapMinutes: Int = 30): StreamingQuery =
-    sessionizeEventTime(events, gapMinutes)
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                       gapMinutes: Int = 30): DataStreamWriter[Row] =
+    appendParquet(sessionizeEventTime(events, gapMinutes).toDF(), outDir, checkpointDir)
 
-  /** Write-once SESSION-GATED layout: [[sessionizeEventTime]] run
-    * through the same two-phase staged replay as
-    * [[streamedWatermarkLayout]] (on-time bulk, then the straggler
-    * slice from the same checkpoint). The sink holds exactly the
-    * sessions CLOSED by the end of run 2 — by an observed gap or by
-    * the watermark timeout — while sessions still inside the horizon
-    * are withheld; the oracle recomputes that set from the original
-    * events table: phase-1 islands, the junction merge of surviving
-    * phase-2 rows into each user's open tail session, and both
-    * timeout cuts. Keyed state under checkpoint restart is thereby
-    * hash-gated end to end.
-    */
   /** [[sessionizeEventTime]]'s state machine on Spark 4's
     * `transformWithState` operator (the StatefulProcessor API that
     * supersedes `flatMapGroupsWithState`): explicit named
@@ -1291,78 +1064,37 @@ object EventStreams {
     * (`transformWithState` requires it; the conf is restored after).
     */
   def streamedSessionTwsLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("sessiontws", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+    streamedLayout("sessiontws", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(providerKey)
       spark.conf.set(providerKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        def run(): Unit = {
-          val q = sessionizeTws(readEventsStream(spark, srcDir.toString))
-            .toDF()
-            .writeStream
-            .format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", s"$path/_checkpoint")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
-        }
-        stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-          srcDir.resolve("phase1.parquet"))
-        run()
-        stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) === 0),
-          srcDir.resolve("phase2.parquet"))
-        run()
-      } finally prev match {
+      try twoPhaseReplay(spark, path, ev.where(!straggler), ev.where(straggler))(
+        (events, out, ckpt) => appendParquet(sessionizeTws(events).toDF(), out, ckpt))
+      finally prev match {
         case Some(v) => spark.conf.set(providerKey, v)
         case None    => spark.conf.unset(providerKey)
       }
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
     }
 
+  /** Write-once SESSION-GATED layout: [[sessionizeEventTime]] run
+    * through the same two-phase staged replay as
+    * [[streamedWatermarkLayout]] (on-time bulk, then the straggler
+    * slice from the same checkpoint). The sink holds exactly the
+    * sessions CLOSED by the end of run 2 — by an observed gap or by
+    * the watermark timeout — while sessions still inside the horizon
+    * are withheld; the oracle recomputes that set from the original
+    * events table: phase-1 islands, the junction merge of surviving
+    * phase-2 rows into each user's open tail session, and both
+    * timeout cuts. Keyed state under checkpoint restart is thereby
+    * hash-gated end to end.
+    */
   def streamedSessionLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("sessionsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+    streamedLayout("sessionsink", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
-      def run(): Unit = {
-        val q = writeSessionized(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) === 0),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      twoPhaseReplay(spark, path, ev.where(!straggler), ev.where(straggler))(
+        writeSessionized(_, _, _))
     }
 
   /** Continuous ingestion into the date-partitioned layout: append
@@ -1378,27 +1110,15 @@ object EventStreams {
     * transactional file manifest (_spark_metadata).
     */
   def writeEventsPartitionedByDay(events: DataFrame, outDir: String,
-                                  checkpointDir: String,
-                                  availableNow: Boolean = false): StreamingQuery = {
-    val writer = events
-      .withColumn("day", date_format(date_trunc("day",
-        timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
+                                  checkpointDir: String): DataStreamWriter[Row] =
+    appendParquet(events.withColumn("day", date_format(date_trunc("day",
+        timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd")),
+      outDir, checkpointDir)
       .partitionBy("day")
-      .outputMode("append")
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
 
   /** Write-once streamed day-partitioned events layout (round-10,
     * VERDICT item 8): run [[writeEventsPartitionedByDay]] to
-    * termination with an availableNow trigger over the fixture's
-    * events parquet — a real Structured Streaming micro-batch run,
+    * termination ([[drain]]) over the fixture's events parquet — a real Structured Streaming micro-batch run,
     * checkpoint and all — landing the partitioned layout under the
     * fixture dir. The registry's `streamed_day_counts` reads this
     * back and is hash-compared against an oracle computed from the
@@ -1407,32 +1127,10 @@ object EventStreams {
     * a lost or duplicated micro-batch reds the hash.
     */
   def streamedEventsLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("streamsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      // fresh run: a partial layout without _SUCCESS may carry a stale
-      // checkpoint; wipe rather than resume into an unknown state
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      // the file stream source wants a directory; stage the single-file
-      // fixture into one (hidden under _src so the layout read skips it)
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-        srcDir.resolve("events.parquet"))
-      val q = writeEventsPartitionedByDay(
-        readEventsStream(spark, srcDir.toString),
-        path, s"$path/_checkpoint", availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      // the streaming sink's completion marker is _spark_metadata;
-      // add the _SUCCESS flag the fixture registry keys on
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+    streamedLayout("streamsink", sfDir, "events") { path =>
+      drain(writeEventsPartitionedByDay(
+        readEventsStream(spark, stageCopy(sfDir, path, "events")),
+        path, s"$path/_checkpoint"))
     }
 
   /** Exactly-once-per-batch sink via `foreachBatch`: each micro-batch
@@ -1446,15 +1144,10 @@ object EventStreams {
     * re-run of the same batch id leaves counts unchanged).
     */
   def writeEventsIdempotent(events: DataFrame, outDir: String,
-                            checkpointDir: String): StreamingQuery =
-    events
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$id")
-      }
-      .start()
+                            checkpointDir: String): DataStreamWriter[Row] =
+    eachBatch(events, checkpointDir) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Watermark delay of the gated late-data layout
     * ([[streamedWatermarkLayout]]) — shared with the generated oracle
@@ -1483,15 +1176,8 @@ object EventStreams {
 
   /** [[watermarkedHourlyCounts]] into an append-mode parquet sink. */
   def writeWatermarkedHourly(events: DataFrame, outDir: String,
-                             checkpointDir: String): StreamingQuery =
-    watermarkedHourlyCounts(events)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                             checkpointDir: String): DataStreamWriter[Row] =
+    appendParquet(watermarkedHourlyCounts(events), outDir, checkpointDir)
 
   /** Land `df` as exactly ONE parquet file at `dest` — the staging
     * step that makes a file-source run deterministic: with
@@ -1508,10 +1194,7 @@ object EventStreams {
       .getOrElse(sys.error(s"no part file staged under $tmp"))
     java.nio.file.Files.createDirectories(dest.getParent)
     java.nio.file.Files.move(part.toPath, dest)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(tmp)
-      .sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    Fixtures.deleteTree(tmp)
   }
 
   /** [[dedupEventsWithinWatermark]] into an append-mode parquet sink
@@ -1520,16 +1203,10 @@ object EventStreams {
     */
   def writeDedupedEvents(events: DataFrame, outDir: String,
                          checkpointDir: String,
-                         watermark: String = WatermarkDelay): StreamingQuery =
-    dedupEventsWithinWatermark(events, watermark)
-      .select(col("event_id"), unix_millis(col("event_time")).as("ms"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                         watermark: String = WatermarkDelay): DataStreamWriter[Row] =
+    appendParquet(dedupEventsWithinWatermark(events, watermark)
+      .select(col("event_id"), unix_millis(col("event_time")).as("ms")),
+      outDir, checkpointDir)
 
   /** Write-once DEDUP-GATED event layout: the exactly-once front door
     * for an at-least-once upstream, under the same two-phase staged
@@ -1548,36 +1225,11 @@ object EventStreams {
     * including the expired-state-but-late corner).
     */
   def streamedDedupLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("dedupsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+    streamedLayout("dedupsink", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
-      def run(): Unit = {
-        val q = writeDedupedEvents(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(
-        ev.where(pmod(col("event_id"), lit(5)) === 0)
-          .unionByName(ev.where(pmod(col("event_id"), lit(5)) =!= 0 &&
-            pmod(col("event_id"), lit(7)) === 3)),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      twoPhaseReplay(spark, path, ev.where(!straggler),
+        ev.where(straggler).unionByName(ev.where(!straggler &&
+          pmod(col("event_id"), lit(7)) === 3)))(writeDedupedEvents(_, _, _))
     }
 
   /** Write-once WATERMARK-GATED hourly-count layout: a two-phase
@@ -1610,33 +1262,10 @@ object EventStreams {
     * late for arriving rows.)
     */
   def streamedWatermarkLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("wmsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      import org.apache.spark.sql.functions.{col, lit, pmod}
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+    streamedLayout("wmsink", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
-      def run(): Unit = {
-        val q = writeWatermarkedHourly(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) =!= 0),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(ev.where(pmod(col("event_id"), lit(5)) === 0),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      twoPhaseReplay(spark, path, ev.where(!straggler), ev.where(straggler))(
+        writeWatermarkedHourly(_, _, _))
     }
 
   // ---- streamed last-touch attribution ------------------------------
@@ -1689,16 +1318,8 @@ object EventStreams {
   }
 
   def writeStreamedAttribution(events: DataFrame, outDir: String,
-                               checkpointDir: String): StreamingQuery =
-    streamedAttribution(events)
-      .toDF()
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+                               checkpointDir: String): DataStreamWriter[Row] =
+    appendParquet(streamedAttribution(events).toDF(), outDir, checkpointDir)
 
   /** Write-once streamed-attribution layout: the event stream staged
     * in TWO TIME-SPLIT phases (ms below/above the fixture midpoint)
@@ -1710,35 +1331,13 @@ object EventStreams {
     * as `attribution_last_touch`.
     */
   def streamedAttributionLayout(spark: SparkSession, sfDir: String): String =
-    graft.sources.Fixtures.ensure("attrsink", sfDir,
-      Seq(s"$sfDir/events.parquet")) { path =>
-      val root = java.nio.file.Paths.get(path)
-      if (java.nio.file.Files.exists(root)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      val srcDir = root.resolve("_src")
-      java.nio.file.Files.createDirectories(srcDir)
+    streamedLayout("attrsink", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
       val Array(lo, hi) = ev
         .agg(expr("min(ts div 1000000)"), expr("max(ts div 1000000)"))
         .collect().map(r => Array(r.getLong(0), r.getLong(1))).head
       val mid = lo + (hi - lo) / 2
-      def run(): Unit = {
-        val q = writeStreamedAttribution(
-          readEventsStream(spark, srcDir.toString),
-          path, s"$path/_checkpoint")
-        try q.awaitTermination() finally q.stop()
-      }
-      stageSingleParquet(ev.where(expr(s"ts div 1000000 < $mid")),
-        srcDir.resolve("phase1.parquet"))
-      run()
-      stageSingleParquet(ev.where(expr(s"ts div 1000000 >= $mid")),
-        srcDir.resolve("phase2.parquet"))
-      run()
-      java.nio.file.Files.createFile(root.resolve("_SUCCESS"))
-      ()
+      twoPhaseReplay(spark, path, ev.where(expr(s"ts div 1000000 < $mid")),
+        ev.where(expr(s"ts div 1000000 >= $mid")))(writeStreamedAttribution(_, _, _))
     }
 }

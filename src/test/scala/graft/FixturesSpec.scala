@@ -56,6 +56,34 @@ class FixturesSpec extends AnyFunSuite {
     assert(writes === 2)
   }
 
+  test("cleanBuild wipes a partial layout, builds once and marks it complete") {
+    val src = tempSource("charlie")
+    // a partial earlier attempt: stale checkpoint, a stray part file,
+    // and no _SUCCESS
+    val dir = new File(Fixtures.ensure("spec_clean", "/tmp/sfX", Seq(src.getPath)) { _ => () })
+    Fixtures.deleteTree(dir.toPath)
+    new File(dir, "_checkpoint/offsets").mkdirs()
+    Files.write(new File(dir, "_checkpoint/offsets/0").toPath, "v1".getBytes("UTF-8"))
+    Files.write(new File(dir, "part-00000.parquet").toPath, "stale".getBytes("UTF-8"))
+    var builds = 0
+    var seen = Seq.empty[String]
+    def run() = Fixtures.ensure("spec_clean", "/tmp/sfX", Seq(src.getPath)) { path =>
+      Fixtures.cleanBuild(path, Seq("_SUCCESS")) {
+        builds += 1
+        seen = new File(path).list().toSeq
+        Files.write(new File(path, "part-00001.parquet").toPath, "fresh".getBytes("UTF-8"))
+      }
+    }
+    assert(run() === dir.getPath)
+    assert(builds === 1)
+    assert(seen.isEmpty, s"build started over leftovers: $seen")
+    assert(new File(dir, "_SUCCESS").exists())
+    assert(dir.list().toSet === Set("_SUCCESS", "part-00001.parquet"))
+    run()
+    assert(builds === 1, "a completed layout was rebuilt")
+    Fixtures.deleteTree(dir.toPath)
+  }
+
   test("missing source still fingerprints stably") {
     val ghost = "/tmp/graft-no-such-file-xyz"
     assert(Fixtures.fingerprint(Seq(ghost)) === Fixtures.fingerprint(Seq(ghost)))

@@ -187,7 +187,7 @@ class Round12SurfaceSpec extends AnyFunSuite {
         graft.streaming.EventStreams.streamedJoinLayout(spark, sf))
       .collect().map(r => (r.getLong(0), r.getLong(3))).toSet
     val outer = spark.read.parquet(
-        graft.streaming.EventStreams.streamedOuterJoinLayout(spark, sf))
+        graft.streaming.EventStreams.streamedJoinLayout(spark, sf, "left_outer"))
       .collect()
     val outerMatched = outer.filter(!_.isNullAt(3))
       .map(r => (r.getLong(0), r.getLong(3))).toSet

@@ -26,9 +26,6 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("two-phase dedup replay: live-state drop, late drop, restart persistence") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-dedup-spec")
-    val src = root.resolve("_src")
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
 
     def df(rows: Seq[(Long, Long)]) = rows
       .map { case (id, ts) => (id, ts, 1L, "a", 1.0, "{}") }
@@ -49,29 +46,16 @@ class StreamingDedupSpec extends AnyFunSuite {
       11L -> ns(1),  // new, late: dropped
       12L -> ns(14)) // new, on time: lands (the new max)
 
-    def run(): Unit = {
-      val q = graft.streaming.EventStreams.writeDedupedEvents(
-        graft.streaming.EventStreams.readEventsStream(spark, src.toString),
-        out, ckpt)
-      try q.awaitTermination() finally q.stop()
-    }
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase1), src.resolve("phase1.parquet"))
-    run()
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase2), src.resolve("phase2.parquet"))
-    run()
+    graft.streaming.EventStreams.twoPhaseReplay(spark, root.toString,
+      df(phase1), df(phase2))(graft.streaming.EventStreams.writeDedupedEvents(_, _, _))
 
-    val got = spark.read.parquet(out)
+    val got = spark.read.parquet(root.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val expected = Seq(
       1L -> ms(0), 2L -> ms(5), 3L -> ms(8), 4L -> ms(-5), // phase 1, all land
       10L -> ms(3), 12L -> ms(14)).sorted
     assert(got === expected)
 
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    graft.sources.Fixtures.deleteTree(root)
   }
 }

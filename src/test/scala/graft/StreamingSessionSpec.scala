@@ -24,9 +24,6 @@ class StreamingSessionSpec extends AnyFunSuite {
   test("two-phase session replay: gap close, timeouts, junction merge/break, late drop") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-sess-spec")
-    val src = root.resolve("_src")
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
 
     def df(rows: Seq[(Long, Long, Long)]) = rows
       .map { case (id, user, ts) => (id, ts, user, "a", 1.0, "{}") }
@@ -52,20 +49,10 @@ class StreamingSessionSpec extends AnyFunSuite {
       (16L, 6L, ns(23, 50)), // u6: second row breaks, tail stays open at WM2
       (17L, 98L, ns(30, 0))) // the new max; open at WM2 -> withheld
 
-    def run(): Unit = {
-      val q = graft.streaming.EventStreams.writeSessionized(
-        graft.streaming.EventStreams.readEventsStream(spark, src.toString),
-        out, ckpt)
-      try q.awaitTermination() finally q.stop()
-    }
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase1), src.resolve("phase1.parquet"))
-    run()
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase2), src.resolve("phase2.parquet"))
-    run()
+    graft.streaming.EventStreams.twoPhaseReplay(spark, root.toString,
+      df(phase1), df(phase2))(graft.streaming.EventStreams.writeSessionized(_, _, _))
 
-    val got = spark.read.parquet(out)
+    val got = spark.read.parquet(root.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val expected = Seq(
@@ -82,9 +69,6 @@ class StreamingSessionSpec extends AnyFunSuite {
     ).sorted                          // u98: open at WM2 -> absent
     assert(got === expected)
 
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    graft.sources.Fixtures.deleteTree(root)
   }
 }

@@ -38,6 +38,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
+  test("streaming wordcount refuses a checkpoint written by the explode-and-count plan") {
+    import org.apache.spark.sql.functions._
+    // the plan streamingWordCount ran before it moved onto the counting
+    // kernel: one row per token, state value `count BIGINT NOT NULL`
+    def explodePlan(docs: org.apache.spark.sql.DataFrame) = docs
+      .select(explode(graft.functions.NativeText.tokens(col("text"))).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("cnt"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-wc-restart")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-wc-restart-ckpt").toString
+    val fixture = java.nio.file.Paths.get(s"${TestSpark.Sf0001}/documents.parquet")
+    def runOnCheckpoint(counts: org.apache.spark.sql.DataFrame): Unit = EventStreams.drain(
+      counts.writeStream.outputMode("update").format("noop")
+        .option("checkpointLocation", ckpt))
+    java.nio.file.Files.copy(fixture, dir.resolve("a.parquet"))
+    runOnCheckpoint(explodePlan(EventStreams.readDocumentsStream(spark, dir.toString)))
+    // new input, so the restart plans a stateful batch over the old state
+    java.nio.file.Files.copy(fixture, dir.resolve("b.parquet"))
+    val e = intercept[Exception](runOnCheckpoint(
+      EventStreams.streamingWordCount(EventStreams.readDocumentsStream(spark, dir.toString))))
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }.toSeq
+    assert(conditions.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+      s"expected the state schema check to refuse the old checkpoint: $e")
+    graft.sources.Fixtures.deleteTree(dir)
+    graft.sources.Fixtures.deleteTree(java.nio.file.Paths.get(ckpt))
+  }
+
   test("streaming ingest dedup equals the batch incremental dedup's keep set") {
     import org.apache.spark.sql.functions._
     // replay the documents fixture as the arriving stream; the even
@@ -84,7 +111,7 @@ class StreamingSpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft-neardup-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-neardup-ckpt").toString
     val q = EventStreams.ingestNearDedupStream(arriving, docs,
-      TestSpark.Sf0001, out, ckpt)
+      TestSpark.Sf0001, out, ckpt).start()
     try q.processAllAvailable() finally { q.stop(); q.awaitTermination() }
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
@@ -103,7 +130,7 @@ class StreamingSpec extends AnyFunSuite {
     val total = Tables.events(spark, TestSpark.Sf0001).count()
     def run(): Unit = {
       val q = EventStreams.writeEventsIdempotent(
-        EventStreams.readEventsStream(spark, eventsDir), out, ckpt)
+        EventStreams.readEventsStream(spark, eventsDir), out, ckpt).start()
       // stop() alone can leave the query briefly registered against the
       // checkpoint; a same-checkpoint restart then trips the
       // concurrent-use guard — await full termination before returning
@@ -207,7 +234,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-events-bydate-ckpt")
     val q = EventStreams.writeEventsPartitionedByDay(
       EventStreams.readEventsStream(spark, eventsDir),
-      outDir.toString, ckpt.toString)
+      outDir.toString, ckpt.toString).start()
     try { q.processAllAvailable() } finally { q.stop() }
     // the sink must emit day= directories, not flat files
     val dayDirs = new java.io.File(outDir.toString).listFiles()
@@ -282,7 +309,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-stream interval join matches the batch interval join") {
     import org.apache.spark.sql.functions._
     val stream = EventStreams.readEventsStream(spark, eventsDir)
-    val q = EventStreams.clickPurchaseIntervalJoin(stream)
+    val q = EventStreams.clickPurchaseIntervalJoin(stream, joinType = "inner")
       .writeStream.outputMode("append")
       .format("memory").queryName("ssj_stream")
       .start()
@@ -310,7 +337,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, Long, String, Long)]
     val events = input.toDF()
       .toDF("user_id", "event_id", "event_type", "ts")
-    val q = EventStreams.clickPurchaseIntervalJoin(events)
+    val q = EventStreams.clickPurchaseIntervalJoin(events, joinType = "inner")
       .writeStream.outputMode("append")
       .format("memory").queryName("ssj_late")
       .start()
@@ -352,7 +379,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, Long, String, Long)]
     val events = input.toDF()
       .toDF("user_id", "event_id", "event_type", "ts")
-    val q = EventStreams.clickPurchaseLeftOuterJoin(events)
+    val q = EventStreams.clickPurchaseIntervalJoin(events, joinType = "left_outer")
       .writeStream.outputMode("append")
       .format("memory").queryName("ssj_outer")
       .start()

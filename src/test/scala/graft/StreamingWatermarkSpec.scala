@@ -29,9 +29,6 @@ class StreamingWatermarkSpec extends AnyFunSuite {
   test("two-phase watermark replay: finalize, drop-late, equality boundary, restart") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-wm-spec")
-    val src = root.resolve("_src")
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
 
     def df(rows: Seq[(Long, Long)]) = rows
       .map { case (id, ts) => (id, ts, 1L, "a", 1.0, "{}") }
@@ -52,20 +49,10 @@ class StreamingWatermarkSpec extends AnyFunSuite {
       9L -> ns(6, 15),  // new open window [6,7), closes under WM2
       10L -> ns(14, 15)) // the new max; [14,15) stays open
 
-    def run(): Unit = {
-      val q = graft.streaming.EventStreams.writeWatermarkedHourly(
-        graft.streaming.EventStreams.readEventsStream(spark, src.toString),
-        out, ckpt)
-      try q.awaitTermination() finally q.stop()
-    }
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase1), src.resolve("phase1.parquet"))
-    run()
-    graft.streaming.EventStreams.stageSingleParquet(
-      df(phase2), src.resolve("phase2.parquet"))
-    run()
+    graft.streaming.EventStreams.twoPhaseReplay(spark, root.toString,
+      df(phase1), df(phase2))(graft.streaming.EventStreams.writeWatermarkedHourly(_, _, _))
 
-    val got = spark.read.parquet(out)
+    val got = spark.read.parquet(root.toString)
       .select(unix_millis(col("hour")).as("ms"), col("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
@@ -77,9 +64,6 @@ class StreamingWatermarkSpec extends AnyFunSuite {
       hourStartMs(6) -> 1L) // phase-2-only window under WM2
     assert(got === expected) // [8,9) and [14,15) open -> absent
 
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    graft.sources.Fixtures.deleteTree(root)
   }
 }
