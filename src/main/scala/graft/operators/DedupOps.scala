@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import graft.sources.Fixtures
 
 /** Deduplication family for a training-data pipeline:
   *
@@ -500,16 +501,16 @@ object DedupOps {
     * probe join co-locates without shuffling the index.
     */
   def substrIndexDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("substridx", sfDir,
+    Fixtures.ensure("substridx", sfDir,
       Seq(s"$sfDir/documents.parquet")) { dir =>
-      substrOcc(substrToks(docs.where(pmod(col("doc_id"), lit(2)) === 0)),
-        SubstrRunLen)
-        .groupBy("sh")
-        .agg(countDistinct("doc_id").as("corpus_df"),
-          min("doc_id").as("corpus_owner"))
-        .write.mode("overwrite").parquet(s"$dir/runs")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
+        substrOcc(substrToks(docs.where(pmod(col("doc_id"), lit(2)) === 0)),
+          SubstrRunLen)
+          .groupBy("sh")
+          .agg(countDistinct("doc_id").as("corpus_df"),
+            min("doc_id").as("corpus_owner"))
+          .write.parquet(s"$dir/runs")
+      }
     }
 
   /** Steady-state [[substringDedup]]: coverage for the parity-split
@@ -673,21 +674,18 @@ object DedupOps {
     * and only [[incrementalComponents]] ever re-converges labels.
     */
   def componentsIndexDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("ccindex", sfDir,
+    Fixtures.ensure("ccindex", sfDir,
       Seq(s"$sfDir/documents.parquet")) { dir =>
-      val spark = docs.sparkSession
-      nearDupJaccard(docs).write.mode("overwrite").parquet(s"$dir/edges")
-      // corpus labels converge over the even-even subgraph; a pair's
-      // jaccard is independent of other documents, so filtering the
-      // full edge set equals re-pairing the corpus alone
-      val evenEdges = spark.read.parquet(s"$dir/edges")
-        .where(col("a_id") % 2 === 0 && col("b_id") % 2 === 0)
-      connectedComponents(evenEdges)
-        .write.mode("overwrite").parquet(s"$dir/corpus_labels")
-      // top-level marker: the two parquet subdirs carry their own
-      // _SUCCESS, Fixtures keys completion on the directory's
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
+        val spark = docs.sparkSession
+        nearDupJaccard(docs).write.parquet(s"$dir/edges")
+        // corpus labels converge over the even-even subgraph; a pair's
+        // jaccard is independent of other documents, so filtering the
+        // full edge set equals re-pairing the corpus alone
+        val evenEdges = spark.read.parquet(s"$dir/edges")
+          .where(col("a_id") % 2 === 0 && col("b_id") % 2 === 0)
+        connectedComponents(evenEdges).write.parquet(s"$dir/corpus_labels")
+      }
     }
 
   /** Duplicate clusters of the near-dup pair graph: each document
@@ -806,11 +804,14 @@ object DedupOps {
     * untouched bands pass through). Nothing re-bands or re-counts the
     * corpus: the append touches |batch| band rows and the count merge
     * joins two band-keyed tables, both shuffle-partitioned by band at
-    * scale. The new counts commit by directory rename after a
-    * complete write, the standard DFS publish step, so a crash
-    * mid-merge leaves the old counts in place rather than a torn
-    * table ([[IndexMaintenanceSpec]] proves fold == full rebuild for
-    * bands, counts, and a follow-up probe).
+    * scale. The new counts are published by
+    * [[IndexVersion.publishDir]]: a crash mid-merge leaves the old
+    * counts live (or, between its two renames, at `band_counts_old`),
+    * never a torn table. A crash after the band append and before the
+    * publish leaves appended bands under the old counts; the unsealed
+    * version slot then refuses every later fold until a rebuild
+    * ([[IndexMaintenanceSpec]] proves fold == full rebuild for bands,
+    * counts, and a follow-up probe).
     */
   def foldBatchIntoLshIndex(batch: DataFrame, indexDir: String): Unit = {
     val spark = batch.sparkSession
@@ -824,13 +825,12 @@ object DedupOps {
     val batchBands = Checkpoints.truncate(bandsOf(docShingles(batch)))
     batchBands.write.mode("append").parquet(s"$indexDir/bands")
     val deltas = batchBands.groupBy("band").agg(count(lit(1)).as("delta_n"))
-    publishTable(
-      spark.read.parquet(s"$indexDir/band_counts")
-        .join(deltas, Seq("band"), "full_outer")
-        .select(col("band"),
-          (coalesce(col("corpus_n"), lit(0L)) +
-            coalesce(col("delta_n"), lit(0L))).as("corpus_n")),
-      indexDir, "band_counts")
+    val merged = spark.read.parquet(s"$indexDir/band_counts")
+      .join(deltas, Seq("band"), "full_outer")
+      .select(col("band"),
+        (coalesce(col("corpus_n"), lit(0L)) +
+          coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
+    IndexVersion.publishDir(s"$indexDir/band_counts")(merged.write.parquet)
     IndexVersion.commit(indexDir, v)
   }
 
@@ -838,43 +838,22 @@ object DedupOps {
     // params "h2": band keys bake the MinHashSignature hash family —
     // the affine-per-row revision must never read an index built by
     // the old correlated family (fixture names ignore code versions)
-    graft.sources.Fixtures.ensure("lshidx", sfDir,
+    Fixtures.ensure("lshidx", sfDir,
       Seq(s"$sfDir/documents.parquet"), params = "h2") { dir =>
-      writeLshIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0), dir)
-      // top-level marker: the parquet subdirs carry their own
-      // _SUCCESS, Fixtures keys completion on the directory's
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
+        writeLshIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0), dir)
+      }
     }
-
-  /** Atomically replace `indexDir/<name>` with a freshly-written
-    * table — the rename-publish step shared by the count merges and
-    * the band compaction: a crash mid-write leaves the live table
-    * untouched, never a torn one.
-    */
-  private[operators] def publishTable(df: DataFrame, indexDir: String,
-                                      name: String): Unit = {
-    val tmp = new java.io.File(indexDir, s"${name}_next")
-    df.write.mode("overwrite").parquet(tmp.getPath)
-    val live = new java.io.File(indexDir, name)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(live)
-    java.nio.file.Files.move(tmp.toPath, live.toPath)
-    ()
-  }
 
   /** DELETE documents from a persisted LSH band index — the dedup
     * family's take-down/right-to-erasure step, mirroring the IVF
     * tombstone leg ([[graft.operators.SimilarityOps.ivfDeleteBatch]]):
-    * the ids land under `_tombstones/` (underscore-prefixed — every
-    * bands scan skips it), probes subtract the log with an anti join,
+    * the ids land in the index's delete log
+    * ([[IndexVersion.appendTombstones]]), probes subtract the log,
     * and [[compactLshIndex]] later removes the band rows physically.
     * The band COUNTS are advanced eagerly by a negative per-band
     * delta merge (the [[foldBatchIntoLshIndex]] machinery run in
-    * reverse, same rename publish), because the mega-bucket cap must
+    * reverse, same publish), because the mega-bucket cap must
     * see the LIVE population immediately — a bucket the deletes
     * vacated below the cap is searchable again on the very next
     * probe. Deltas come from the STORED band rows of the deleted ids
@@ -886,39 +865,30 @@ object DedupOps {
   def deleteFromLshIndex(deletes: DataFrame, indexDir: String): Unit = {
     val spark = deletes.sparkSession
     val ids = Checkpoints.truncate(deletes.select(col("doc_id")).distinct())
-    ids.write.mode("append").parquet(s"$indexDir/_tombstones")
+    IndexVersion.appendTombstones(ids, indexDir, "doc_id")
     val delBands = spark.read.parquet(s"$indexDir/bands")
       .join(ids, Seq("doc_id"), "left_semi")
       .groupBy("band").agg(count(lit(1)).as("delta_n"))
-    publishTable(
-      spark.read.parquet(s"$indexDir/band_counts")
-        .join(delBands, Seq("band"), "full_outer")
-        .select(col("band"),
-          (coalesce(col("corpus_n"), lit(0L)) -
-            coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
-        .where(col("corpus_n") > 0),
-      indexDir, "band_counts")
+    val merged = spark.read.parquet(s"$indexDir/band_counts")
+      .join(delBands, Seq("band"), "full_outer")
+      .select(col("band"),
+        (coalesce(col("corpus_n"), lit(0L)) -
+          coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
+      .where(col("corpus_n") > 0)
+    IndexVersion.publishDir(s"$indexDir/band_counts")(merged.write.parquet)
   }
 
   /** Compact a tombstoned band index: rewrite `bands/` minus the
-    * logged ids (rename-published) and truncate the log. Counts were
-    * already advanced at delete time, so they pass through untouched.
+    * logged ids ([[IndexVersion.publishDir]]) and drop the log. Counts
+    * were already advanced at delete time, so they pass through
+    * untouched.
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): Unit = {
-    val tomb = new java.io.File(indexDir, "_tombstones")
-    if (tomb.exists()) {
-      publishTable(
-        spark.read.parquet(s"$indexDir/bands")
-          .join(broadcast(spark.read.parquet(tomb.getPath)),
-            Seq("doc_id"), "left_anti"),
-        indexDir, "bands")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(tomb)
-    }
+    val kept = IndexVersion.withoutTombstones(
+      spark.read.parquet(s"$indexDir/bands"), indexDir, "doc_id")
+    IndexVersion.publishDir(s"$indexDir/bands")(kept.write.parquet)
+    IndexVersion.dropTombstones(indexDir)
   }
 
   // the gated delete query's deterministic take-down slice, shared
@@ -929,19 +899,21 @@ object DedupOps {
 
   /** Write-once TOMBSTONED band index: the even-id corpus indexed,
     * then the take-down slice deleted through [[deleteFromLshIndex]].
-    * `_DELETED` marks the two-step build complete.
+    * `_DELETED` marks the two-step build complete; a rebuild over a
+    * partial one starts from an empty directory
+    * ([[graft.sources.Fixtures.cleanBuild]]), so the delete log never
+    * holds an id twice.
     */
   def lshDeleteIndexDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("lshdelidx", sfDir,
+    Fixtures.ensure("lshdelidx", sfDir,
       Seq(s"$sfDir/documents.parquet"), params = "h2",
       validate = d => new java.io.File(d, "_DELETED").exists()) { dir =>
-      writeLshIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0), dir)
-      deleteFromLshIndex(
-        docs.where(pmod(col("doc_id"), lit(LshDeleteMod)) === LshDeleteRes)
-          .select("doc_id"), dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_DELETED"))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS", "_DELETED")) {
+        writeLshIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0), dir)
+        deleteFromLshIndex(
+          docs.where(pmod(col("doc_id"), lit(LshDeleteMod)) === LshDeleteRes)
+            .select("doc_id"), dir)
+      }
     }
 
   /** The incremental near-dedup probe AFTER a take-down: the arriving
@@ -1054,19 +1026,12 @@ object DedupOps {
       .select("band")
     val batchBounded = batchBands.join(keptBands, Seq("band"), "left_semi")
     // index probe: stored corpus rows in exactly the bands the batch
-    // occupies (left_semi prunes before the pair fan-out); a
-    // tombstone log, if one exists, is subtracted here — deleted
-    // documents must not pair (deleteFromLshIndex already advanced
-    // the counts, so the cap math above saw the live population)
-    val storedBands = {
-      val raw = spark.read.parquet(s"$idx/bands")
-      val tomb = new java.io.File(idx, "_tombstones")
-      if (tomb.exists())
-        raw.join(broadcast(spark.read.parquet(tomb.getPath)),
-          Seq("doc_id"), "left_anti")
-      else raw
-    }
-    val corpusBounded = storedBands
+    // occupies (left_semi prunes before the pair fan-out); the delete
+    // log, if one exists, is subtracted here — deleted documents must
+    // not pair (deleteFromLshIndex already advanced the counts, so
+    // the cap math above saw the live population)
+    val corpusBounded = IndexVersion.withoutTombstones(
+        spark.read.parquet(s"$idx/bands"), idx, "doc_id")
       .join(keptBands, Seq("band"), "left_semi")
     val candBC = batchBounded.as("a").join(corpusBounded.as("b"),
         col("a.band") === col("b.band"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.Fixtures
 
 /** Retrieval scoring over the corpus: Okapi BM25 lexical ranking and
   * reciprocal-rank-fusion hybrid (lexical + embedding) search — the
@@ -197,10 +198,12 @@ object RetrievalOps {
     * (new words appear, untouched words pass through), and the stats
     * row advances by exact long addition (total tf + token-doc
     * counts are stored precisely so the re-derived avgdl is
-    * bit-identical to a full rebuild's). Lexicon and stats commit by
-    * directory rename after a complete write
-    * ([[DedupOps.publishTable]]) — a crash mid-fold leaves the old
-    * tables live, never torn ones. Touches |batch| postings plus two
+    * bit-identical to a full rebuild's). Lexicon and stats are each
+    * published by [[IndexVersion.publishDir]], so neither table is
+    * ever torn; the fold as a whole is not atomic — a crash after the
+    * postings append, or between the two publishes, leaves the index
+    * inconsistent, and the unsealed version slot then refuses every
+    * later fold until a rebuild. Touches |batch| postings plus two
     * model/vocab-sized merges; the corpus is never re-tokenized.
     */
   def foldBatchIntoPostings(batch: DataFrame, indexDir: String): Unit = {
@@ -220,24 +223,22 @@ object RetrievalOps {
       .agg(sum(col("tf")).as("d_ctf"), count(lit(1)).as("d_df"),
         first(col("word_bucket")).cast("long").as("d_bucket"))
     val lex = spark.read.parquet(s"$indexDir/lexicon")
-    DedupOps.publishTable(
-      lex.join(deltas, Seq("word"), "full_outer")
-        .select(col("word"),
-          (coalesce(col("ctf"), lit(0L)) + coalesce(col("d_ctf"), lit(0L))).as("ctf"),
-          (coalesce(col("df"), lit(0L)) + coalesce(col("d_df"), lit(0L))).as("df"),
-          coalesce(col("word_bucket"), col("d_bucket")).as("word_bucket")),
-      indexDir, "lexicon")
+      .join(deltas, Seq("word"), "full_outer")
+      .select(col("word"),
+        (coalesce(col("ctf"), lit(0L)) + coalesce(col("d_ctf"), lit(0L))).as("ctf"),
+        (coalesce(col("df"), lit(0L)) + coalesce(col("d_df"), lit(0L))).as("df"),
+        coalesce(col("word_bucket"), col("d_bucket")).as("word_bucket"))
+    IndexVersion.publishDir(s"$indexDir/lexicon")(lex.write.parquet)
     val bStats = bp.agg(sum(col("tf")).as("d_tf"),
       countDistinct(col("doc_id")).as("d_token_docs"))
-    DedupOps.publishTable(
-      spark.read.parquet(s"$indexDir/stats").crossJoin(bStats)
-        .select(
-          (col("n_docs") + nNew.toDouble).as("n_docs"),
-          (col("total_tf") + coalesce(col("d_tf"), lit(0L))).as("total_tf"),
-          (col("n_token_docs") + col("d_token_docs")).as("n_token_docs"))
-        .withColumn("avgdl",
-          col("total_tf").cast("double") / col("n_token_docs")),
-      indexDir, "stats")
+    val stats = spark.read.parquet(s"$indexDir/stats").crossJoin(bStats)
+      .select(
+        (col("n_docs") + nNew.toDouble).as("n_docs"),
+        (col("total_tf") + coalesce(col("d_tf"), lit(0L))).as("total_tf"),
+        (col("n_token_docs") + col("d_token_docs")).as("n_token_docs"))
+      .withColumn("avgdl",
+        col("total_tf").cast("double") / col("n_token_docs"))
+    IndexVersion.publishDir(s"$indexDir/stats")(stats.write.parquet)
     IndexVersion.commit(indexDir, v)
   }
 
@@ -245,18 +246,10 @@ object RetrievalOps {
     * source fingerprint, [[graft.sources.Fixtures]] — regenerated
     * data can never hit a stale index), built on first use.
     */
-  // fixture layouts here write into SUBdirectories, so Spark's own
-  // _SUCCESS never lands at the top level — Fixtures.cleanBuild
-  // wipes partial state, builds, and writes the markers itself (the
-  // missing-marker form rebuilt on EVERY call and crashed re-marking
-  // _DELETED — caught by the repeated-gate run)
-  private def buildMarked(dir: String, markers: Seq[String])(build: => Unit): Unit =
-    graft.sources.Fixtures.cleanBuild(dir, markers)(build)
-
   def postingsIndexDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("postings", sfDir,
+    Fixtures.ensure("postings", sfDir,
       Seq(s"$sfDir/documents.parquet"), params = s"b$WordBuckets") { dir =>
-      buildMarked(dir, Seq("_SUCCESS")) {
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
         writePostingsIndex(docs, dir)
       }
     }
@@ -269,9 +262,9 @@ object RetrievalOps {
     * IndexMaintenanceSpec.
     */
   def postingsIncDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("postings_inc", sfDir,
+    Fixtures.ensure("postings_inc", sfDir,
       Seq(s"$sfDir/documents.parquet"), params = s"b$WordBuckets") { dir =>
-      buildMarked(dir, Seq("_SUCCESS")) {
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
         writePostingsIndex(docs.where(pmod(col("doc_id"), lit(2)) === 0), dir)
         foldBatchIntoPostings(docs.where(pmod(col("doc_id"), lit(2)) === 1), dir)
       }
@@ -308,9 +301,9 @@ object RetrievalOps {
 
   /** DELETE documents from a persisted postings index — the
     * retrieval family's take-down/right-to-erasure step, mirroring
-    * the IVF/LSH tombstone legs: the ids land under `_tombstones`
-    * (an append, never a rewrite), probes subtract the log with a
-    * broadcast anti join, and [[compactPostings]] later removes the
+    * the IVF/LSH tombstone legs: the ids land in the index's delete
+    * log ([[IndexVersion.appendTombstones]]), probes subtract it with
+    * a broadcast anti join, and [[compactPostings]] later removes the
     * posting rows physically. Until compaction the collection
     * statistics (df, avgdl, n_docs) deliberately stay STALE — the
     * standard deferred-delete posture of every production search
@@ -319,67 +312,53 @@ object RetrievalOps {
     * refreshes them.
     */
   def deleteDocsFromPostings(deletes: DataFrame, indexDir: String): Unit =
-    deletes.select(col("doc_id"))
-      .write.mode("append").parquet(s"$indexDir/_tombstones")
+    IndexVersion.appendTombstones(deletes, indexDir, "doc_id")
 
   /** Apply the tombstone log physically: rewrite the bucket
     * partitions minus the deleted docs, RECOMPUTE the lexicon and
     * stats from the surviving postings (this is the moment deferred
-    * deletes reach the scoring statistics), and publish by directory
-    * rename — the same crash-safe protocol as the IVF compaction,
-    * and the same invariant: a compaction that dropped the log
-    * without applying it would resurrect every deleted doc, so the
-    * rewrite applies the log and the publish truncates it. After
-    * compaction the index is indistinguishable from a fresh build on
-    * the live corpus (spec-pinned, n_docs included — the advance
-    * subtracts the distinct tombstone count, so it is exact whenever
-    * tombstoned ids reference indexed documents, the contract every
-    * delete path in this engine upholds).
+    * deletes reach the scoring statistics), publish each of the three
+    * tables by [[IndexVersion.publishDir]], and only then drop the
+    * log — a compaction that dropped the log without applying it
+    * would resurrect every deleted doc. After compaction the index is
+    * indistinguishable from a fresh build on the live corpus
+    * (spec-pinned, n_docs included — the advance subtracts the
+    * distinct tombstone count, so it is exact whenever tombstoned ids
+    * reference indexed documents, the contract every delete path in
+    * this engine upholds).
+    *
+    * Each publish leaves its table whole, but the three publishes and
+    * the log drop are separate steps: a compaction that stops after
+    * the stats publish and before the log drop subtracts the log from
+    * n_docs a second time when it is run again.
     */
   def compactPostings(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    val tomb = new java.io.File(indexDir, "_tombstones")
-    val rows = spark.read.parquet(s"$indexDir/postings")
-    val nDeleted =
-      if (tomb.exists())
-        spark.read.parquet(tomb.getPath).distinct().count()
-      else 0L
-    val kept =
-      if (tomb.exists())
-        rows.join(broadcast(spark.read.parquet(tomb.getPath)),
-          Seq("doc_id"), "left_anti")
-      else rows
-    val tmp = new java.io.File(indexDir, "postings_compacting")
-    kept
+    val nDeleted = IndexVersion.tombstones(spark, indexDir)
+      .fold(0L)(_.distinct().count())
+    val kept = IndexVersion.withoutTombstones(
+      spark.read.parquet(s"$indexDir/postings"), indexDir, "doc_id")
+    IndexVersion.publishDir(s"$indexDir/postings")(kept
       .repartition(col("word_bucket"))
-      .write.mode("overwrite").partitionBy("word_bucket").parquet(tmp.getPath)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    val live = new java.io.File(indexDir, "postings")
-    rm(live)
-    java.nio.file.Files.move(tmp.toPath, live.toPath)
+      .write.partitionBy("word_bucket").parquet)
     val written = spark.read.parquet(s"$indexDir/postings")
     val oldNDocs = spark.read.parquet(s"$indexDir/stats")
       .select("n_docs").head().getDouble(0)
-    DedupOps.publishTable(
-      written.groupBy("word")
-        .agg(sum(col("tf")).as("ctf"), count(lit(1)).as("df"),
-          first(col("word_bucket")).cast("long").as("word_bucket")),
-      indexDir, "lexicon")
-    DedupOps.publishTable(
-      written
-        .agg(sum(col("tf")).as("total_tf"),
-          countDistinct(col("doc_id")).as("n_token_docs"))
-        .select(
-          lit(oldNDocs - nDeleted).as("n_docs"),
-          coalesce(col("total_tf"), lit(0L)).as("total_tf"),
-          col("n_token_docs"),
-          (coalesce(col("total_tf"), lit(0L)).cast("double") /
-            col("n_token_docs")).as("avgdl")),
-      indexDir, "stats")
-    if (tomb.exists()) { rm(tomb) }
+    val lex = written.groupBy("word")
+      .agg(sum(col("tf")).as("ctf"), count(lit(1)).as("df"),
+        first(col("word_bucket")).cast("long").as("word_bucket"))
+    IndexVersion.publishDir(s"$indexDir/lexicon")(lex.write.parquet)
+    val stats = written
+      .agg(sum(col("tf")).as("total_tf"),
+        countDistinct(col("doc_id")).as("n_token_docs"))
+      .select(
+        lit(oldNDocs - nDeleted).as("n_docs"),
+        coalesce(col("total_tf"), lit(0L)).as("total_tf"),
+        col("n_token_docs"),
+        (coalesce(col("total_tf"), lit(0L)).cast("double") /
+          col("n_token_docs")).as("avgdl"))
+    IndexVersion.publishDir(s"$indexDir/stats")(stats.write.parquet)
+    IndexVersion.dropTombstones(indexDir)
   }
 
   /** Write-once tombstoned postings fixture for the registered
@@ -388,10 +367,10 @@ object RetrievalOps {
     * build complete (the IVF delete-leg convention).
     */
   def postingsDelDir(docs: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("postings_del", sfDir,
+    Fixtures.ensure("postings_del", sfDir,
       Seq(s"$sfDir/documents.parquet"), params = s"b$WordBuckets",
       validate = d => new java.io.File(d, "_DELETED").exists()) { dir =>
-      buildMarked(dir, Seq("_SUCCESS", "_DELETED")) {
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS", "_DELETED")) {
         writePostingsIndex(docs, dir)
         deleteDocsFromPostings(
           docs.where(pmod(col("doc_id"), lit(DeleteMod)) === DeleteRes), dir)
@@ -409,17 +388,15 @@ object RetrievalOps {
     * corpus df/avgdl, ranking restricted to live docs).
     */
   def bm25AfterDelete(docs: DataFrame, sfDir: String, k: Int = 10): DataFrame =
-    probePostings(docs.sparkSession, postingsDelDir(docs, sfDir), k,
-      subtractTombstones = true)
+    probePostings(docs.sparkSession, postingsDelDir(docs, sfDir), k)
 
-  /** The shared probe: BM25 top-k served from a postings layout.
-    * With `subtractTombstones` the `_tombstones` log is anti-joined
-    * out of the pruned postings scan (broadcast — the log is
-    * model-sized relative to the corpus).
+  /** The shared probe: BM25 top-k served from a postings layout. A
+    * delete log, when the layout has one, is anti-joined out of the
+    * pruned postings scan ([[IndexVersion.withoutTombstones]]).
     */
   def probePostings(spark: org.apache.spark.sql.SparkSession, dir: String,
-      k: Int, subtractTombstones: Boolean = false): DataFrame = {
-    val scored = postingsScores(spark, dir, subtractTombstones)
+      k: Int): DataFrame = {
+    val scored = postingsScores(spark, dir)
     val rnkW = Window.orderBy(round(col("score_raw"), 6).desc, col("doc_id").asc)
     scored
       .orderBy(round(col("score_raw"), 6).desc, col("doc_id").asc)
@@ -434,8 +411,8 @@ object RetrievalOps {
     * from a postings layout (no ranking cut) — shared by
     * [[probePostings]] and the indexed hybrid's lexical leg.
     */
-  def postingsScores(spark: org.apache.spark.sql.SparkSession, dir: String,
-      subtractTombstones: Boolean = false): DataFrame = {
+  def postingsScores(spark: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
     val lex = spark.read.parquet(s"$dir/lexicon")
     val stats = spark.read.parquet(s"$dir/stats")
     val qcand = lex
@@ -450,13 +427,7 @@ object RetrievalOps {
       .collect().map(_.getLong(0)) // ≤ QueryTerms values — model-sized
     val pruned = spark.read.parquet(s"$dir/postings")
       .where(col("word_bucket").isin(probedBuckets.toIndexedSeq: _*))
-    val postings =
-      if (subtractTombstones)
-        pruned.join(
-          broadcast(spark.read.parquet(s"$dir/_tombstones")),
-          Seq("doc_id"), "left_anti")
-      else pruned
-    postings
+    IndexVersion.withoutTombstones(pruned, dir, "doc_id")
       .join(broadcast(query.drop("word_bucket")), "word")
       .crossJoin(broadcast(stats))
       .withColumn("idf",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.Fixtures
 
 /** Similarity search over `array<float>` embedding columns.
   *
@@ -534,25 +535,38 @@ object SimilarityOps {
     * place as a second, separate write job. `_UPSERTED` marks the
     * append's completion — Spark's own `_SUCCESS` lands after the
     * first job, so without the extra marker a crash between the two
-    * writes could leave a half-built fixture that looks finished.
+    * writes could leave a half-built fixture that looks finished; a
+    * rebuild starts from an empty directory
+    * ([[graft.sources.Fixtures.cleanBuild]]).
     */
   def ivfUpsertListsDir(emb: DataFrame, sfDir: String, centroidMod: Int,
                         numCentroids: Int, iterations: Int,
                         moveEps: Double): String =
-    graft.sources.Fixtures.ensure("ivfuplists", sfDir,
+    Fixtures.ensure("ivfuplists", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"m${centroidMod}k${numCentroids}i$iterations",
       validate = d => new java.io.File(d, "_UPSERTED").exists()) { dir =>
-      val spark = emb.sparkSession
-      val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
-        centroidMod, numCentroids, iterations, moveEps))
-      assignToCentroids(emb.where(pmod(col("vec_id"), lit(2)) === 0), centroids)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
-      ivfAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        centroids, dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_UPSERTED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_UPSERTED")) {
+        ivfCorpusAndBatch(emb, sfDir, centroidMod, numCentroids,
+          iterations, moveEps, dir)
+      }
     }
+
+  /** The build both IVF list fixtures share: the even-id corpus
+    * assigned under the corpus-trained model and written partitioned
+    * by centroid, then the odd-id batch [[ivfAppendBatch]]-ed in place.
+    */
+  private def ivfCorpusAndBatch(emb: DataFrame, sfDir: String,
+                                centroidMod: Int, numCentroids: Int,
+                                iterations: Int, moveEps: Double,
+                                dir: String): Unit = {
+    val centroids = emb.sparkSession.read.parquet(upsertCentroidsDir(emb,
+      sfDir, centroidMod, numCentroids, iterations, moveEps))
+    assignToCentroids(emb.where(pmod(col("vec_id"), lit(2)) === 0), centroids)
+      .write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
+    ivfAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
+      centroids, dir)
+  }
 
   // the deterministic delete slice of the gated delete query, shared
   // with the generated oracle: vec_id % IvfDeleteMod == IvfDeleteRes
@@ -560,18 +574,17 @@ object SimilarityOps {
   val IvfDeleteRes = 4
 
   /** DELETE from a persisted inverted-list layout — as a TOMBSTONE
-    * APPEND, never a list rewrite: the deleted ids land under
-    * `_tombstones/` (underscore-prefixed, so every list scan skips it
-    * as metadata), costing |deletes| rows regardless of corpus size.
-    * Probes subtract the log with a broadcast anti join
+    * APPEND, never a list rewrite: the deleted ids land in the
+    * index's delete log ([[IndexVersion.appendTombstones]]; every list
+    * scan skips it as metadata), costing |deletes| rows regardless of
+    * corpus size. Probes subtract the log with a broadcast anti join
     * ([[annIvfDelete]]); the physical removal is deferred to the next
-    * compaction ([[compactIvfLists]], which applies and truncates the
+    * compaction ([[compactIvfLists]], which applies and drops the
     * log) — the standard LSM-shaped delete story, completing the
     * index lifecycle: build → probe → append → DELETE → compact.
     */
   def ivfDeleteBatch(deletes: DataFrame, listsDir: String): Unit =
-    deletes.select(col("vec_id"))
-      .write.mode("append").parquet(s"$listsDir/_tombstones")
+    IndexVersion.appendTombstones(deletes, listsDir, "vec_id")
 
   /** Write-once tombstoned inverted lists: the upsert layout's build
     * (even-id corpus under the frozen corpus model, odd-id batch
@@ -582,21 +595,16 @@ object SimilarityOps {
   def ivfDeleteIndexDir(emb: DataFrame, sfDir: String, centroidMod: Int,
                         numCentroids: Int, iterations: Int,
                         moveEps: Double): String =
-    graft.sources.Fixtures.ensure("ivfdellists", sfDir,
+    Fixtures.ensure("ivfdellists", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"m${centroidMod}k${numCentroids}i$iterations",
       validate = d => new java.io.File(d, "_DELETED").exists()) { dir =>
-      val spark = emb.sparkSession
-      val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
-        centroidMod, numCentroids, iterations, moveEps))
-      assignToCentroids(emb.where(pmod(col("vec_id"), lit(2)) === 0), centroids)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(dir)
-      ivfAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        centroids, dir)
-      ivfDeleteBatch(emb.where(
-        pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes), dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_DELETED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_DELETED")) {
+        ivfCorpusAndBatch(emb, sfDir, centroidMod, numCentroids,
+          iterations, moveEps, dir)
+        ivfDeleteBatch(emb.where(
+          pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes), dir)
+      }
     }
 
   /** Steady-state ANN over the tombstoned index: the shared warm
@@ -619,9 +627,8 @@ object SimilarityOps {
       centroidMod, numCentroids, iterations, moveEps))
     val dir = ivfDeleteIndexDir(emb, sfDir, centroidMod, numCentroids,
       iterations, moveEps)
-    val lists = spark.read.parquet(dir)
-    val tombstones = spark.read.parquet(s"$dir/_tombstones")
-    val live = lists.join(broadcast(tombstones), Seq("vec_id"), "left_anti")
+    val live = IndexVersion.withoutTombstones(spark.read.parquet(dir), dir,
+      "vec_id")
     indexedSearch(emb, centroids, live, nprobe, nProbes, k)
   }
 
@@ -632,59 +639,21 @@ object SimilarityOps {
     * footers instead of a few full ones. The rewrite shuffles rows to
     * their partition key (`repartition(centroid_id)`) so each writer
     * task owns whole partitions and emits ONE file per list, then
-    * commits by [[publishDir]]'s rename-aside — a crash leaves the
-    * old layout (recoverable at `_old`) or the new one, never
-    * neither; the publish is single-process, not a concurrent-reader
-    * protocol. Row content is
-    * untouched (proven in [[IndexMaintenanceSpec]] along with probe
-    * equality before/after).
+    * commits by [[IndexVersion.publishDir]] — a crash leaves the old
+    * layout (recoverable at `_old`) or the new one, never neither.
+    * Any delete log is applied by the rewrite, and the publish drops
+    * it with the old layout it lives in — a compaction that dropped
+    * the log WITHOUT applying it would silently resurrect every
+    * deleted vector. Row content is otherwise untouched (proven in
+    * [[IndexMaintenanceSpec]] along with probe equality before/after).
     */
   def compactIvfLists(spark: org.apache.spark.sql.SparkSession,
                       listsDir: String): Unit = {
-    val tmp = new java.io.File(listsDir + "_compacting")
-    // apply any tombstone log while rewriting: compaction is where
-    // deferred deletes become physical, and the rename that publishes
-    // the rewrite also truncates the log (the new layout has none) —
-    // a compaction that dropped the log WITHOUT applying it would
-    // silently resurrect every deleted vector
-    val tomb = new java.io.File(listsDir, "_tombstones")
-    val rows = spark.read.parquet(listsDir)
-    val kept =
-      if (tomb.exists())
-        rows.join(broadcast(spark.read.parquet(tomb.getPath)),
-          Seq("vec_id"), "left_anti")
-      else rows
-    kept
+    val kept = IndexVersion.withoutTombstones(spark.read.parquet(listsDir),
+      listsDir, "vec_id")
+    IndexVersion.publishDir(listsDir)(kept
       .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(tmp.getPath)
-    publishDir(tmp, new java.io.File(listsDir))
-  }
-
-  /** Crash-safer publish for the compaction rewrites: the staged
-    * directory replaces the live one via rename-ASIDE (live →
-    * live_old, staging → live, delete live_old), so no instant
-    * exists with NO layout on disk — the previous rm-then-move left
-    * a window where a crash stranded the new copy at `*_compacting`
-    * with the old one already gone. A leftover `_old` dir from a
-    * crashed earlier publish is reclaimed first. Single-process
-    * discipline still applies: this is crash-robust, not a
-    * concurrent-writer commit protocol (that would need a manifest).
-    * Deletion null-guards `listFiles()` (null on a dir that vanished
-    * or errored mid-walk — treat as already empty, don't NPE with a
-    * half-deleted tree behind).
-    */
-  private[graft] def publishDir(staging: java.io.File,
-                                live: java.io.File): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-      f.delete(); ()
-    }
-    val old = new java.io.File(live.getPath + "_old")
-    rm(old)
-    if (live.exists()) java.nio.file.Files.move(live.toPath, old.toPath)
-    java.nio.file.Files.move(staging.toPath, live.toPath)
-    rm(old)
+      .write.partitionBy("centroid_id").parquet)
   }
 
   /** Steady-state ANN over the upserted index: probe the
@@ -1013,11 +982,11 @@ object SimilarityOps {
     * data can never hit a stale model.
     */
   def semIndexDir(emb: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("semidx", sfDir,
+    Fixtures.ensure("semidx", sfDir,
       Seq(s"$sfDir/embeddings.parquet")) { dir =>
-      writeSemIndex(emb.where(pmod(col("vec_id"), lit(2)) === 0), dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_SUCCESS"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS")) {
+        writeSemIndex(emb.where(pmod(col("vec_id"), lit(2)) === 0), dir)
+      }
     }
 
   /** Build a semantic model index — seed centroids derived from the
@@ -1053,14 +1022,19 @@ object SimilarityOps {
     * [[graft.operators.DedupOps.foldBatchIntoLshIndex]]: the batch is
     * assigned under the FROZEN stored centroids, its label rows are
     * APPENDED to `assign/`, and `cluster_counts/` advances by a
-    * per-cluster delta merge (full-outer join, rename-published).
-    * Nothing re-assigns or re-counts the corpus; the model itself is
-    * refreshed only by an offline rebuild, exactly like the IVF
-    * centroids. [[IndexMaintenanceSpec]] proves fold == rebuild for
-    * labels, counts, and a follow-up probe.
+    * per-cluster delta merge (full-outer join, published by
+    * [[IndexVersion.publishDir]]). Like the LSH fold it is a
+    * read-modify-write of the counts, so it takes the
+    * [[IndexVersion]] version slot first: a second fold over a held
+    * slot throws before it appends anything. Nothing re-assigns or
+    * re-counts the corpus; the model itself is refreshed only by an
+    * offline rebuild, exactly like the IVF centroids.
+    * [[IndexMaintenanceSpec]] proves fold == rebuild for labels,
+    * counts, and a follow-up probe.
     */
   def foldBatchIntoSemIndex(batch: DataFrame, indexDir: String): Unit = {
     val spark = batch.sparkSession
+    val v = IndexVersion.begin(indexDir)
     val centroids = spark.read.parquet(s"$indexDir/centroids")
     // the batch assignment feeds the append AND the delta counts —
     // materialize once (subtree-duplication discipline)
@@ -1069,13 +1043,13 @@ object SimilarityOps {
     batchAssign.write.mode("append").parquet(s"$indexDir/assign")
     val deltas = batchAssign.groupBy("centroid_id")
       .agg(count(lit(1)).as("delta_n"))
-    DedupOps.publishTable(
-      spark.read.parquet(s"$indexDir/cluster_counts")
-        .join(deltas, Seq("centroid_id"), "full_outer")
-        .select(col("centroid_id"),
-          (coalesce(col("corpus_n"), lit(0L)) +
-            coalesce(col("delta_n"), lit(0L))).as("corpus_n")),
-      indexDir, "cluster_counts")
+    val merged = spark.read.parquet(s"$indexDir/cluster_counts")
+      .join(deltas, Seq("centroid_id"), "full_outer")
+      .select(col("centroid_id"),
+        (coalesce(col("corpus_n"), lit(0L)) +
+          coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
+    IndexVersion.publishDir(s"$indexDir/cluster_counts")(merged.write.parquet)
+    IndexVersion.commit(indexDir, v)
   }
 
   /** Deterministic delete slice for the registered
@@ -1088,8 +1062,9 @@ object SimilarityOps {
   /** DELETE vectors from a persisted semantic model index — the
     * embedding family's take-down/right-to-erasure step, completing
     * the maintenance vocabulary across all five index families: the
-    * ids land under `_tombstones` (an append, never a rewrite),
-    * probes subtract the log with a broadcast anti join, and —
+    * ids land in the index's delete log
+    * ([[IndexVersion.appendTombstones]]), probes subtract the log
+    * with a broadcast anti join, and —
     * the LSH take-down convention — `cluster_counts` advances
     * EAGERLY by a negative per-cluster delta merge, because the
     * combined-population mega-cluster cap must see the LIVE
@@ -1098,49 +1073,35 @@ object SimilarityOps {
     */
   def semDeleteBatch(deletes: DataFrame, indexDir: String): Unit = {
     val spark = deletes.sparkSession
-    val del = deletes.select(col("vec_id"))
-    del.write.mode("append").parquet(s"$indexDir/_tombstones")
+    IndexVersion.appendTombstones(deletes, indexDir, "vec_id")
     val deltas = spark.read.parquet(s"$indexDir/assign")
-      .join(broadcast(del), Seq("vec_id"), "left_semi")
+      .join(broadcast(deletes.select(col("vec_id"))), Seq("vec_id"), "left_semi")
       .groupBy("centroid_id").agg(count(lit(1)).as("delta_n"))
-    DedupOps.publishTable(
-      spark.read.parquet(s"$indexDir/cluster_counts")
-        .join(deltas, Seq("centroid_id"), "full_outer")
-        .select(col("centroid_id"),
-          (coalesce(col("corpus_n"), lit(0L)) -
-            coalesce(col("delta_n"), lit(0L))).as("corpus_n")),
-      indexDir, "cluster_counts")
+    val merged = spark.read.parquet(s"$indexDir/cluster_counts")
+      .join(deltas, Seq("centroid_id"), "full_outer")
+      .select(col("centroid_id"),
+        (coalesce(col("corpus_n"), lit(0L)) -
+          coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
+    IndexVersion.publishDir(s"$indexDir/cluster_counts")(merged.write.parquet)
   }
 
   /** Apply the semantic tombstone log physically: rewrite `assign/`
     * minus the deleted labels, RECOUNT `cluster_counts` from the
     * surviving labels (which must equal the eagerly-advanced counts
     * — spec-pinned, so a drift between the delta math and reality
-    * cannot survive a compaction unnoticed), and truncate the log.
+    * cannot survive a compaction unnoticed), and drop the log.
     * The centroid MODEL is untouched — deletion never retrains, the
     * same frozen-model contract as the IVF family.
     */
   def compactSemIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String): Unit = {
-    val tomb = new java.io.File(indexDir, "_tombstones")
-    val labels = spark.read.parquet(s"$indexDir/assign")
-    val kept =
-      if (tomb.exists())
-        labels.join(broadcast(spark.read.parquet(tomb.getPath)),
-          Seq("vec_id"), "left_anti")
-      else labels
-    DedupOps.publishTable(kept, indexDir, "assign")
-    DedupOps.publishTable(
-      spark.read.parquet(s"$indexDir/assign")
-        .groupBy("centroid_id").agg(count(lit(1)).as("corpus_n")),
-      indexDir, "cluster_counts")
-    if (tomb.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(tomb)
-    }
+    val kept = IndexVersion.withoutTombstones(
+      spark.read.parquet(s"$indexDir/assign"), indexDir, "vec_id")
+    IndexVersion.publishDir(s"$indexDir/assign")(kept.write.parquet)
+    val counts = spark.read.parquet(s"$indexDir/assign")
+      .groupBy("centroid_id").agg(count(lit(1)).as("corpus_n"))
+    IndexVersion.publishDir(s"$indexDir/cluster_counts")(counts.write.parquet)
+    IndexVersion.dropTombstones(indexDir)
   }
 
   /** Write-once tombstoned semantic index for the registered query:
@@ -1151,10 +1112,10 @@ object SimilarityOps {
     * attempt would double-apply it.
     */
   def semDelIndexDir(emb: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("semdelidx", sfDir,
+    Fixtures.ensure("semdelidx", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       validate = d => new java.io.File(d, "_DELETED").exists()) { dir =>
-      graft.sources.Fixtures.cleanBuild(dir, Seq("_SUCCESS", "_DELETED")) {
+      Fixtures.cleanBuild(dir, Seq("_SUCCESS", "_DELETED")) {
         writeSemIndex(emb.where(pmod(col("vec_id"), lit(2)) === 0), dir)
         semDeleteBatch(emb.where(pmod(col("vec_id"), lit(2)) === 0 &&
           pmod(col("vec_id"), lit(SemDeleteMod)) === SemDeleteRes), dir)
@@ -1174,8 +1135,7 @@ object SimilarityOps {
                           threshold: Double = SemThreshold,
                           maxCluster: Int = SemMaxCluster): DataFrame =
     semanticProbe(emb.where(pmod(col("vec_id"), lit(2)) === 1), emb,
-      semDelIndexDir(emb, sfDir), threshold, maxCluster,
-      subtractTombstones = true)
+      semDelIndexDir(emb, sfDir), threshold, maxCluster)
 
   /** Steady-state semantic dedup: the arriving batch (odd vec_ids)
     * probes the PERSISTED centroid model instead of re-clustering the
@@ -1227,11 +1187,11 @@ object SimilarityOps {
     * lifecycle ([[writeSemIndex]] build → probe →
     * [[foldBatchIntoSemIndex]] maintenance). `emb` supplies the
     * embeddings of stored labels (fetched by key join — the index
-    * holds labels, not vectors).
+    * holds labels, not vectors). A delete log at `idx`, when there is
+    * one, is subtracted from the stored labels.
     */
   def semanticProbe(arriving: DataFrame, emb: DataFrame, idx: String,
-                    threshold: Double, maxCluster: Int,
-                    subtractTombstones: Boolean = false): DataFrame = {
+                    threshold: Double, maxCluster: Int): DataFrame = {
     val spark = emb.sparkSession
     val centroids = spark.read.parquet(s"$idx/centroids")
     // the batch assignment feeds the cluster counts AND both pair
@@ -1259,14 +1219,8 @@ object SimilarityOps {
     // a tombstoned index the log is anti-joined FIRST (broadcast —
     // model-sized), so a deleted vector can never appear as a pair
     // endpoint while the labels on disk stay untouched
-    val storedLabels = {
-      val labels = spark.read.parquet(s"$idx/assign")
-      if (subtractTombstones)
-        labels.join(broadcast(spark.read.parquet(s"$idx/_tombstones")),
-          Seq("vec_id"), "left_anti")
-      else labels
-    }
-    val c = storedLabels
+    val c = IndexVersion.withoutTombstones(
+        spark.read.parquet(s"$idx/assign"), idx, "vec_id")
       .join(kept, Seq("centroid_id"), "left_semi")
       .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("centroid_id"), col("vec_id").as("cid"),
@@ -1888,21 +1842,31 @@ object SimilarityOps {
     */
   def ivfPqUpsertListsDir(emb: DataFrame, sfDir: String,
                           centroidMod: Int, numCentroids: Int): String =
-    graft.sources.Fixtures.ensure("ivfpquplists", sfDir,
+    Fixtures.ensure("ivfpquplists", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"m${centroidMod}c${numCentroids}q$PqK",
       validate = d => new java.io.File(d, "_UPSERTED").exists()) { dir =>
-      val spark = emb.sparkSession
-      val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
-        centroidMod, numCentroids, 1, 0.0))
-      val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
-      ivfPqCorpusBuild(emb.where(pmod(col("vec_id"), lit(2)) === 0),
-        centroids, codebook, dir)
-      ivfPqAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        centroids, codebook, dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_UPSERTED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_UPSERTED")) {
+        ivfPqCorpusAndBatch(emb, sfDir, centroidMod, numCentroids, dir)
+      }
     }
+
+  /** The build both coded-list fixtures share: the even-id corpus
+    * encoded and routed under the corpus-frozen models, then the
+    * odd-id batch [[ivfPqAppendBatch]]-ed in place.
+    */
+  private def ivfPqCorpusAndBatch(emb: DataFrame, sfDir: String,
+                                  centroidMod: Int, numCentroids: Int,
+                                  dir: String): Unit = {
+    val spark = emb.sparkSession
+    val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
+      centroidMod, numCentroids, 1, 0.0))
+    val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
+    ivfPqCorpusBuild(emb.where(pmod(col("vec_id"), lit(2)) === 0),
+      centroids, codebook, dir)
+    ivfPqAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
+      centroids, codebook, dir)
+  }
 
   /** Steady-state search over the upserted coded lists with both
     * frozen models. Output equals a from-scratch rebuild over
@@ -1947,22 +1911,15 @@ object SimilarityOps {
     */
   def ivfPqDeleteIndexDir(emb: DataFrame, sfDir: String,
                           centroidMod: Int, numCentroids: Int): String =
-    graft.sources.Fixtures.ensure("ivfpqdellists", sfDir,
+    Fixtures.ensure("ivfpqdellists", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"m${centroidMod}c${numCentroids}q$PqK",
       validate = d => new java.io.File(d, "_DELETED").exists()) { dir =>
-      val spark = emb.sparkSession
-      val centroids = spark.read.parquet(upsertCentroidsDir(emb, sfDir,
-        centroidMod, numCentroids, 1, 0.0))
-      val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
-      ivfPqCorpusBuild(emb.where(pmod(col("vec_id"), lit(2)) === 0),
-        centroids, codebook, dir)
-      ivfPqAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        centroids, codebook, dir)
-      ivfDeleteBatch(emb.where(
-        pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes), dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_DELETED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_DELETED")) {
+        ivfPqCorpusAndBatch(emb, sfDir, centroidMod, numCentroids, dir)
+        ivfDeleteBatch(emb.where(
+          pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes), dir)
+      }
     }
 
   /** DELETE over the coded lists: the tombstone log subtracted by a
@@ -1982,9 +1939,8 @@ object SimilarityOps {
       centroidMod, numCentroids, 1, 0.0))
     val codebook = spark.read.parquet(pqUpsertCodebookDir(emb, sfDir))
     val dir = ivfPqDeleteIndexDir(emb, sfDir, centroidMod, numCentroids)
-    val lists = spark.read.parquet(dir)
-    val tombstones = spark.read.parquet(s"$dir/_tombstones")
-    val live = lists.join(broadcast(tombstones), Seq("vec_id"), "left_anti")
+    val live = IndexVersion.withoutTombstones(spark.read.parquet(dir), dir,
+      "vec_id")
     val probeLists = ivfPqProbeLists(emb, centroids, nprobe, nProbes)
     ivfPqRerank(emb, probeLists,
       ivfPqPrunedDecode(live, probeLists, codebook), nProbes, k, rerankM)
@@ -2349,17 +2305,17 @@ object SimilarityOps {
     * build complete (the ivfUpsertListsDir crash discipline).
     */
   def nswUpsertEdgesDir(emb: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("nswuped", sfDir,
+    Fixtures.ensure("nswuped", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"g${NswG}m${NswUpsertMods.mkString("x")}ak",
       validate = d => new java.io.File(d, "_UPSERTED").exists()) { dir =>
-      val corpus = emb.where(pmod(col("vec_id"), lit(2)) === 0)
-      nswEdges(corpus, NswUpsertMods)
-        .write.mode("overwrite").parquet(dir)
-      nswAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
-        corpus, dir)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_UPSERTED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_UPSERTED")) {
+        val corpus = emb.where(pmod(col("vec_id"), lit(2)) === 0)
+        nswEdges(corpus, NswUpsertMods)
+          .write.mode("overwrite").parquet(dir)
+        nswAppendBatch(emb.where(pmod(col("vec_id"), lit(2)) === 1),
+          corpus, dir)
+      }
     }
 
   /** Search the upserted graph: corpus ∪ batch all reachable. */
@@ -2403,7 +2359,7 @@ object SimilarityOps {
     * adjacency storage forever. The rewrite hash-clusters edges by
     * src into [[NswCompactFiles]] whole files (one file per writer
     * task — the small-files tax of per-batch appends paid down) and
-    * publishes by [[publishDir]]'s rename-aside: a crash leaves the
+    * publishes by [[IndexVersion.publishDir]]: a crash leaves the
     * old layout (recoverable at `_old`) or the new one, never
     * neither (single-process publish). Any `batch_id=`
     * partitioning of the streamed layout is deliberately flattened —
@@ -2411,9 +2367,8 @@ object SimilarityOps {
     */
   def compactNswEdges(spark: org.apache.spark.sql.SparkSession,
                       edgesDir: String, tombstones: DataFrame): Unit = {
-    val tmp = new java.io.File(edgesDir + "_compacting")
     val dead = tombstones.select(col("vec_id")).distinct()
-    spark.read.parquet(edgesDir)
+    val kept = spark.read.parquet(edgesDir)
       .select(col("src"), col("dst"))
       .join(broadcast(dead.select(col("vec_id").as("src"))),
         Seq("src"), "left_anti")
@@ -2421,8 +2376,7 @@ object SimilarityOps {
         Seq("dst"), "left_anti")
       .select(col("src"), col("dst"))
       .repartition(NswCompactFiles, col("src"))
-      .write.mode("overwrite").parquet(tmp.getPath)
-    publishDir(tmp, new java.io.File(edgesDir))
+    IndexVersion.publishDir(edgesDir)(kept.write.parquet)
   }
 
   /** Write-once COMPACTED graph layout: a byte-equivalent copy of
@@ -2433,19 +2387,19 @@ object SimilarityOps {
     * already exists after step one, so it cannot mark this build).
     */
   def nswCompactedEdgesDir(emb: DataFrame, sfDir: String): String =
-    graft.sources.Fixtures.ensure("nswcomp", sfDir,
+    Fixtures.ensure("nswcomp", sfDir,
       Seq(s"$sfDir/embeddings.parquet"),
       params = s"g${NswG}m${NswUpsertMods.mkString("x")}ak",
       validate = d => new java.io.File(d, "_COMPACTED").exists()) { dir =>
-      val spark = emb.sparkSession
-      spark.read.parquet(nswUpsertEdgesDir(emb, sfDir))
-        .select(col("src"), col("dst"))
-        .write.mode("overwrite").parquet(dir)
-      compactNswEdges(spark, dir,
-        emb.where(pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes)
-          .select(col("vec_id")))
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "_COMPACTED"))
-      ()
+      Fixtures.cleanBuild(dir, Seq("_COMPACTED")) {
+        val spark = emb.sparkSession
+        spark.read.parquet(nswUpsertEdgesDir(emb, sfDir))
+          .select(col("src"), col("dst"))
+          .write.mode("overwrite").parquet(dir)
+        compactNswEdges(spark, dir,
+          emb.where(pmod(col("vec_id"), lit(IvfDeleteMod)) === IvfDeleteRes)
+            .select(col("vec_id")))
+      }
     }
 
   /** The delete probe read off the COMPACTED adjacency: identical

@@ -23,15 +23,17 @@ class EvidenceGuardSpec extends AnyFunSuite {
   test("publishDir survives a leftover _old dir and null listFiles") {
     val base = Files.createTempDirectory("graft-publish").toFile
     val live = new File(base, "live")
-    val staging = new File(base, "live_compacting")
+    val staging = new File(base, "live_next")
     val old = new File(base, "live_old")
     // simulate: previous publish crashed after rename-aside (live
-    // absent, _old populated), new staging complete
+    // absent, _old populated); the new staging is written complete
     old.mkdirs()
     Files.writeString(new File(old, "part-0").toPath, "stale")
-    staging.mkdirs()
-    Files.writeString(new File(staging, "part-0").toPath, "fresh")
-    graft.operators.SimilarityOps.publishDir(staging, live)
+    graft.operators.IndexVersion.publishDir(live.getPath) { path =>
+      assert(path === staging.getPath)
+      staging.mkdirs()
+      Files.writeString(new File(staging, "part-0").toPath, "fresh")
+    }
     assert(live.isDirectory)
     assert(Files.readString(new File(live, "part-0").toPath) === "fresh")
     assert(!old.exists(), "_old must be reclaimed after publish")

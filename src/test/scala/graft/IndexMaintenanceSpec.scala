@@ -108,6 +108,32 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     }
   }
 
+  test("semantic fold: a fold over a held version slot throws before it appends anything") {
+    import graft.operators.IndexVersion
+    val corpus = emb.where(pmod(col("vec_id"), lit(3)) =!= 0)
+    val batch = emb.where(pmod(col("vec_id"), lit(3)) === 0)
+    val dir = java.nio.file.Files.createTempDirectory("semcas").toString
+    SimilarityOps.writeSemIndex(corpus, dir)
+    def labels() = spark.read.parquet(s"$dir/assign").count()
+    def counts() = spark.read.parquet(s"$dir/cluster_counts")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
+    val (labelsBefore, countsBefore) = (labels(), counts())
+
+    val slotA = IndexVersion.begin(dir) // another writer, mid-fold
+    intercept[java.util.ConcurrentModificationException] {
+      SimilarityOps.foldBatchIntoSemIndex(batch, dir)
+    }
+    assert(labels() === labelsBefore,
+      "the refused fold must not have appended a single label row")
+    assert(counts() === countsBefore, "the refused fold must not merge counts")
+
+    // once the holder seals its slot the fold runs and seals the next
+    IndexVersion.commit(dir, slotA)
+    SimilarityOps.foldBatchIntoSemIndex(batch, dir)
+    assert(IndexVersion.current(dir) === 2L)
+    assert(labels() === emb.count())
+  }
+
   test("IVF compaction: one file per list partition, identical rows, identical probe") {
     val (centroids, _) = SimilarityOps.lloydIterate(
       emb, iterations = 1, moveEps = 0.0, centroidMod = 97, numCentroids = 16)
@@ -140,7 +166,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(rows(dir) === beforeRows, "compaction changed the row set")
     assert(partFiles(dir).values.max === 1,
       s"each list must be one file after compaction: ${partFiles(dir)}")
-    assert(!new java.io.File(dir + "_compacting").exists())
+    assert(!new java.io.File(dir + "_next").exists())
     val afterProbe = SimilarityOps.indexedSearch(emb, centroids,
       spark.read.parquet(dir), nprobe = 3, nProbes = 10, k = 10).collect().toSeq
     assert(afterProbe === beforeProbe)
@@ -184,7 +210,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .count(p => p.getFileName.toString.endsWith(".parquet"))
     assert(files <= SimilarityOps.NswCompactFiles,
       s"compaction must leave at most ${SimilarityOps.NswCompactFiles} files, got $files")
-    assert(!new java.io.File(dir + "_compacting").exists())
+    assert(!new java.io.File(dir + "_next").exists())
     // compaction is invisible to the delete probe
     assert(probe(dir) === beforeProbe,
       "the delete probe must not change across compaction")
@@ -439,8 +465,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
     // the tombstoned probe never returns a deleted endpoint
     val pairs = SimilarityOps.semanticProbe(batch, emb, dir,
-      SimilarityOps.SemThreshold, SimilarityOps.SemMaxCluster,
-      subtractTombstones = true).collect()
+      SimilarityOps.SemThreshold, SimilarityOps.SemMaxCluster).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(!pairs.exists(p => deadIds(p._1) || deadIds(p._2)),
       "a deleted vector appeared as a pair endpoint")
@@ -462,6 +487,42 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(pairsAfter === pairs, "probe must not change across compaction")
   }
 
+  test("postings compaction over a stale postings_old leaves one live postings table") {
+    import graft.operators.RetrievalOps
+    val dir = java.nio.file.Files.createTempDirectory("postold").toString
+    RetrievalOps.writePostingsIndex(docs, dir)
+    // a crashed earlier publish left its renamed-aside copy behind
+    val stale = java.nio.file.Paths.get(dir, "postings_old")
+    java.nio.file.Files.createDirectories(stale)
+    java.nio.file.Files.writeString(stale.resolve("part-0"), "stale")
+    def postings() = spark.read.parquet(s"$dir/postings")
+      .select("doc_id", "word", "tf").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .sortBy(identity).toSeq
+    val before = postings()
+
+    RetrievalOps.compactPostings(spark, dir)
+    assert(new java.io.File(dir).list().filter(_.startsWith("postings")).toSet ===
+      Set("postings"), "no staging or _old directory may be left")
+    assert(postings() === before, "compaction without deletes changed the postings")
+  }
+
+  test("lshdelidx: a rebuild over a partial build completes and logs each id once") {
+    val dir = DedupOps.lshDeleteIndexDir(docs, TestSpark.Sf0001)
+    // a build that stopped before its last marker is rebuilt
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_SUCCESS"))
+    assert(DedupOps.lshDeleteIndexDir(docs, TestSpark.Sf0001) === dir)
+    assert(new java.io.File(dir, "_SUCCESS").exists())
+    assert(new java.io.File(dir, "_DELETED").exists())
+    val logged = spark.read.parquet(s"$dir/_tombstones")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val slice = docs.where(
+        pmod(col("doc_id"), lit(DedupOps.LshDeleteMod)) === DedupOps.LshDeleteRes)
+      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(slice.nonEmpty, "fixture must delete something")
+    assert(logged === slice, "the delete log must hold each take-down id exactly once")
+  }
+
   test("postings delete + compaction: tombstoned probe goes stale-stats, compaction goes fresh") {
     import graft.operators.RetrievalOps
     val root = java.nio.file.Files.createTempDirectory("postdel").toString
@@ -473,8 +534,8 @@ class IndexMaintenanceSpec extends AnyFunSuite {
 
     // pre-compaction: no deleted doc can be returned, and the stats
     // tables on disk are untouched (stale by design)
-    val probed = RetrievalOps.probePostings(spark, dir, 50,
-      subtractTombstones = true).collect().map(_.getLong(0)).toSeq
+    val probed = RetrievalOps.probePostings(spark, dir, 50)
+      .collect().map(_.getLong(0)).toSeq
     assert(probed.nonEmpty && !probed.exists(deadIds), "a tombstoned doc was returned")
     val staleStats = spark.read.parquet(s"$dir/stats")
       .select("n_docs", "total_tf").head
