@@ -23,104 +23,236 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[TokenCounts]]: a maximal run of non-delimiter bytes of
   * `lower(text)`, the delimiters being StringTokenizer's `" \t\n\r\f"`.
   *
-  * An all-ASCII document is scanned as it is, folding A-Z byte by byte
-  * while copying each token out (exactly what `UTF8String.toLowerCase`
-  * does to ASCII); any other document is scanned after that exact
-  * `toLowerCase`. Delimiters are all ASCII, and UTF-8 continuation
-  * bytes are >= 0x80, so a byte-level scan never splits a multibyte
-  * character.
+  * The scan goes a token at a time and reads eight bytes per load
+  * (`Platform.getLong`), testing all eight at once with SWAR bit
+  * tricks (one mask flags the delimiter bytes): a load at a token's
+  * first byte finds the end of a token of up to 7 bytes, a second load
+  * one of up to 15, and those loads are the token's key. A load never
+  * reads past the string's last byte (column vectors may be off-heap):
+  * the last, short load is assembled byte by byte and padded with
+  * spaces. With `fold`, the token's bytes are also tested for one
+  * >= 0x80. Until one turns up, A-Z are folded eight bytes at a time
+  * (exactly what `UTF8String.toLowerCase` does to ASCII); from the
+  * token holding the first such byte on, the rest of the document is
+  * scanned after that exact `toLowerCase`. The text before that token
+  * ends in a delimiter, so lowering the rest alone changes nothing: no
+  * case rule looks across whitespace. Delimiters are all ASCII, and
+  * UTF-8 continuation bytes are >= 0x80, so a byte-level scan never
+  * splits a multibyte character. Without `fold` the text is split as
+  * it is, case kept: the reference's raw `StringTokenizer` tokens.
   *
-  * A subclass receives each token as `buf(start until start + len)`
-  * together with its hash. With `keepTokens` every document gets a
-  * fresh `buf` and its tokens are laid out one after another, so a
-  * token may be wrapped without a copy; without it `buf` is reused
-  * and a token's bytes are valid only during the `token` call.
-  * Without `fold` the text is split as it is, case kept: the
-  * reference's raw `StringTokenizer` tokens.
+  * A subclass receives each token as its length, its first sixteen
+  * bytes as two little-endian longs `w0` and `w1` (zero past the
+  * token's end) and a 64-bit hash. The bytes of a token longer than 16
+  * are in `buf(0 until len)`, valid only during the `token` call. The
+  * hash takes the token in 16-byte blocks, `h = mix(a ^ s1, b ^ h)`
+  * from `h = s0 ^ len`, where `mix` is the 128-bit product's two
+  * halves XORed and `s0`, `s1` come from `seed`: without the seed,
+  * nobody can build tokens that share a hash except by chance.
+  *
+  * `token` returns false to stop the scan before that token; `resume`
+  * then starts again from the token's first byte.
   */
-private[graft] abstract class TokenScanner(keepTokens: Boolean, fold: Boolean = true) {
+private[graft] abstract class TokenScanner(fold: Boolean, seed: Long) {
+  import TokenScanner._
+
   protected var buf: Array[Byte] = Array.emptyByteArray
+  private val s0 = seed
+  private val s1 = mix(seed ^ 0x9e3779b97f4a7c15L, 0xc2b2ae3d27d4eb4fL)
 
-  protected def token(start: Int, len: Int, hash: Int): Unit
+  // the document being scanned, from byte `pos` on
+  private var base: AnyRef = _
+  private var off = 0L
+  private var n = 0
+  private var pos = 0
+  // A-Z still to fold: the document is ASCII so far
+  private var folding = false
 
-  final def scan(text: UTF8String): Unit =
-    if (fold) scanFolded(text) else scanCased(text)
+  protected def token(len: Int, w0: Long, w1: Long, hash: Long): Boolean
 
-  private def scanFolded(text: UTF8String): Unit = {
-    val src = if (text.isFullAscii) text else text.toLowerCase
-    val base = src.getBaseObject
-    val off = src.getBaseOffset
-    val n = src.numBytes
-    // a token is never longer than its document
-    if (keepTokens) buf = new Array[Byte](n)
-    else if (buf.length < n) buf = new Array[Byte](math.max(n, buf.length * 2))
-    val out = buf
-    var w = 0
-    var start = 0
-    var h = 0
-    var i = 0
+  /** Scans `text` from its start; false if a `token` call stopped it. */
+  final def scan(text: UTF8String): Boolean = {
+    point(text)
+    folding = fold
+    run()
+  }
+
+  /** Goes on with a stopped scan; false if it stopped again. */
+  final def resume(): Boolean = run()
+
+  private def point(text: UTF8String): Unit = {
+    base = text.getBaseObject
+    off = text.getBaseOffset
+    n = text.numBytes
+    pos = 0
+  }
+
+  private def run(): Boolean = {
+    val base = this.base
+    val off = this.off
+    val n = this.n
+    var i = pos
     while (i < n) {
-      val b = Platform.getByte(base, off + i)
-      if (TokenScanner.isDelim(b)) {
-        if (w > start) {
-          token(start, w - start, TokenScanner.finish(h, w - start))
-          if (!keepTokens) w = 0
-          start = w
-          h = 0
-        }
+      val x = load(base, off, i, n)
+      val d = delimiters(x)
+      if ((d & 0x80L) != 0L) {
+        // byte i is a delimiter: on to the first byte that is not
+        val rest = ~d & Hi
+        i += (if (rest == 0L) 8 else java.lang.Long.numberOfTrailingZeros(rest) >>> 3)
       } else {
-        val lb = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-        out(w) = lb
-        h = 31 * h + lb
-        w += 1
+        // a token starts at i; most end within the first or second load
+        var len = 0
+        var w0 = x
+        var w1 = 0L
+        if (d != 0L) {
+          len = java.lang.Long.numberOfTrailingZeros(d) >>> 3
+          w0 = x & bytes(len)
+        } else {
+          val y = load(base, off, i + 8, n)
+          val e = delimiters(y)
+          if (e != 0L) {
+            len = 8 + (java.lang.Long.numberOfTrailingZeros(e) >>> 3)
+            w1 = y & bytes(len - 8)
+          } else {
+            w1 = y
+            len = longLength(i + 16) - i
+          }
+        }
+        if (folding && (if (len <= 16) ((w0 | w1) & Hi) != 0L else hasHigh(i, len))) {
+          // the tokens before this one are final; lower the rest
+          point(UTF8String.fromAddress(base, off + i, n - i).toLowerCase)
+          folding = false
+          return run()
+        }
+        val counted =
+          if (len > 16) emitLong(i, len)
+          else {
+            if (folding) { w0 = foldAscii(w0); w1 = foldAscii(w1) }
+            token(len, w0, w1, mix(w0 ^ s1, w1 ^ s0 ^ len))
+          }
+        if (!counted) { pos = i; return false }
+        i += len + 1
       }
-      i += 1
     }
-    if (w > start) token(start, w - start, TokenScanner.finish(h, w - start))
+    pos = n
+    true
   }
 
-  /** The same split over the text as it is: each document is copied
-    * into `buf` whole and its tokens hashed where they lie.
-    */
-  private def scanCased(text: UTF8String): Unit = {
-    if (keepTokens || buf.length < text.numBytes) buf = new Array[Byte](text.numBytes)
-    text.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
-    var start = 0
-    var h = 0
-    for (i <- 0 to text.numBytes)
-      if (i < text.numBytes && !TokenScanner.isDelim(buf(i))) h = 31 * h + buf(i)
-      else {
-        if (i > start) token(start, i - start, TokenScanner.finish(h, i - start))
-        start = i + 1
-        h = 0
-      }
+  /** The end of the token that has no delimiter before byte `p`. */
+  private def longLength(p: Int): Int = {
+    var e = p
+    var d = delimiters(load(base, off, e, n))
+    while (d == 0L) {
+      e += 8
+      d = delimiters(load(base, off, e, n))
+    }
+    e + (java.lang.Long.numberOfTrailingZeros(d) >>> 3)
   }
+
+  private def hasHigh(start: Int, len: Int): Boolean = {
+    var k = 0
+    while (k < len && (load(base, off, start + k, n) & Hi & bytes(math.min(8, len - k))) == 0L) k += 8
+    k < len
+  }
+
+  /** Bytes `p until p + 8` of the document, folded, and only the first
+    * `rem` of them when `rem` < 8.
+    */
+  @inline private def word(p: Int, rem: Int): Long = {
+    val x = load(base, off, p, n) & bytes(math.min(8, rem))
+    if (folding) foldAscii(x) else x
+  }
+
+  /** A token longer than 16 bytes: lowered into `buf` and hashed block by block. */
+  private def emitLong(start: Int, len: Int): Boolean = {
+    if (buf.length < len + 16) buf = new Array[Byte](math.max(len + 16, buf.length * 2))
+    var h = s0 ^ len
+    var k = 0
+    while (k < len) {
+      val a = word(start + k, len - k)
+      val b = if (k + 8 < len) word(start + k + 8, len - k - 8) else 0L
+      store(buf, k, a)
+      store(buf, k + 8, b)
+      h = mix(a ^ s1, b ^ h)
+      k += 16
+    }
+    token(len, word(start, 8), 0L, h)
+  }
+
+  /** Writes the token just passed to `token` to `dst(at until at +
+    * len)`; a short one also overwrites the 16 - len bytes after it.
+    */
+  protected final def copyToken(len: Int, w0: Long, w1: Long, dst: Array[Byte], at: Int): Unit =
+    if (len <= 16) { store(dst, at, w0); store(dst, at + 8, w1) }
+    else System.arraycopy(buf, 0, dst, at, len)
 }
 
 private[graft] object TokenScanner {
-  // bits 9 (\t), 10 (\n), 12 (\f), 13 (\r) and 32 (' ')
-  private val DelimMask = (1L << 9) | (1L << 10) | (1L << 12) | (1L << 13) | (1L << 32)
+  private val Hi = 0x8080808080808080L
+  private val Low7 = 0x7f7f7f7f7f7f7f7fL
+  private val Spaces = 0x2020202020202020L
+  private val BigEndian = java.nio.ByteOrder.nativeOrder == java.nio.ByteOrder.BIG_ENDIAN
 
-  @inline def isDelim(b: Byte): Boolean = {
-    val u = b & 0xff
-    u <= 32 && ((DelimMask >>> u) & 1L) != 0
+  /** Eight bytes from byte `i` on, the first in the low byte. Past
+    * byte `n` the long holds spaces, so a load never reads past the
+    * string's end.
+    */
+  @inline def load(base: AnyRef, off: Long, i: Int, n: Int): Long =
+    if (i + 8 <= n) {
+      val x = Platform.getLong(base, off + i)
+      if (BigEndian) java.lang.Long.reverseBytes(x) else x
+    } else {
+      var x = Spaces
+      var k = n - 1
+      while (k >= i) { x = (x << 8) | (Platform.getByte(base, off + k) & 0xffL); k -= 1 }
+      x
+    }
+
+  /** Stores `x` as `load` reads it: the low byte at `at`. */
+  @inline def store(dst: Array[Byte], at: Int, x: Long): Unit =
+    Platform.putLong(dst, Platform.BYTE_ARRAY_OFFSET + at,
+      if (BigEndian) java.lang.Long.reverseBytes(x) else x)
+
+  /** The low `k` bytes, 0 <= k <= 8. */
+  @inline def bytes(k: Int): Long = if (k >= 8) -1L else (1L << (k << 3)) - 1
+
+  /** 0x80 on each byte equal to `c`'s, nothing else. */
+  @inline private def equalTo(x: Long, c: Long): Long = {
+    val y = x ^ c
+    ~(((y & Low7) + Low7) | y) & Hi
   }
 
-  /** Murmur3's 32-bit finalizer over the polynomial byte hash. */
-  @inline private def finish(h0: Int, len: Int): Int = {
-    var h = h0 ^ len
-    h ^= h >>> 16
-    h *= 0x85ebca6b
-    h ^= h >>> 13
-    h *= 0xc2b2ae35
-    h ^ (h >>> 16)
+  /** 0x80 on each delimiter byte (' ', \t, \n, \f, \r). */
+  @inline def delimiters(x: Long): Long = {
+    val y = x & Low7
+    // bytes <= 0x20: every delimiter and the other control bytes
+    val low = ~((y + 0x5f5f5f5f5f5f5f5fL) | x) & Hi
+    if (low == 0L) 0L
+    else {
+      val sp = equalTo(x, Spaces)
+      if (low == sp) sp
+      else {
+        // 0x09-0x0d but 0x0b
+        val ctl = (y + 0x7777777777777777L) & ~(y + 0x7272727272727272L) & low
+        sp | (ctl & ~equalTo(x, 0x0b0b0b0b0b0b0b0bL))
+      }
+    }
   }
+
+  /** A-Z -> a-z in each byte below 0x80; no carry crosses a byte. */
+  @inline def foldAscii(x: Long): Long = {
+    val y = x & Low7
+    val upper = (y + 0x3f3f3f3f3f3f3f3fL) & ~(y + 0x2525252525252525L) & ~x & Hi
+    x | (upper >>> 2)
+  }
+
+  @inline def mix(a: Long, b: Long): Long = a * b ^ Math.multiplyHigh(a, b)
 }
 
 /** lower + split on StringTokenizer delimiters (" \t\n\r\f") + drop
   * empties == `filter(split(lower(text), "[ \t\n\r\f]+"), _ != '')`.
-  * Tokens are the [[TokenScanner]]'s, each wrapping its slice of the
-  * document's one token buffer.
+  * Tokens are the [[TokenScanner]]'s, laid out one after another in
+  * the document's token buffer and each wrapping its slice.
   */
 case class Tokenize(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -131,11 +263,23 @@ case class Tokenize(child: Expression)
     TextExprChecks.require(child.dataType == StringType, prettyName, "string", child.dataType)
 
   override def nullSafeEval(input: Any): Any = {
+    val text = input.asInstanceOf[UTF8String]
     val out = new ArrayBuffer[Any](16)
-    new TokenScanner(keepTokens = true) {
-      protected def token(start: Int, len: Int, hash: Int): Unit =
-        out += UTF8String.fromBytes(buf, start, len)
-    }.scan(input.asInstanceOf[UTF8String])
+    new TokenScanner(fold = true, seed = 0L) {
+      private var bytes = new Array[Byte](text.numBytes + 16)
+      private var used = 0
+      protected def token(len: Int, w0: Long, w1: Long, hash: Long): Boolean = {
+        // a lowered token may outgrow the text; earlier tokens keep the old buffer
+        if (used + len + 16 > bytes.length) {
+          bytes = new Array[Byte](math.max(2 * bytes.length, len + 16))
+          used = 0
+        }
+        copyToken(len, w0, w1, bytes, used)
+        out += UTF8String.fromBytes(bytes, used, len)
+        used += len
+        true
+      }
+    }.scan(text)
     new GenericArrayData(out.toArray)
   }
 

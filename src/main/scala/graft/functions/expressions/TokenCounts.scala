@@ -2,12 +2,10 @@ package graft.functions.expressions
 
 import java.util.Arrays
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, SpecificInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,11 +30,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    O(its words) however large the table grew.
   *
   * The tally holds at most `flushAt` distinct words (and about
-  * `flushAt * 32` bytes of them): a word that does not fit flushes the
-  * rows so far out of the next `eval` and starts an empty table. Since
-  * `cnt` is summed, flushing never changes the answer. Memory is
-  * therefore fixed per task, except that a single document's flushes
-  * wait until its scan ends.
+  * `flushAt * 32` bytes of words longer than 16 bytes): a word that
+  * does not fit stops the scan, and `eval`'s iterator hands out the
+  * table's rows (one reused row, its word wrapping the table or the
+  * arena), empties the table once they are read and resumes the scan.
+  * Generate reads every row of `eval` before it advances the input
+  * row, so nothing is copied, and memory is fixed per task whatever
+  * the documents hold: even one huge document holds one flush segment
+  * of rows at a time. Since `cnt` is summed, flushing never changes
+  * the answer.
   *
   * Who sums the rows: per task, the kernel is the partial aggregate. A
   * task emits at most one row per (flush segment, word), and
@@ -69,14 +71,13 @@ case class TokenCounts private[graft] (child: Expression, flushAt: Int,
     val text = child.eval(input)
     if (text == null) return Nil
     if (tally == null) tally = new TokenTally(flushAt, fold)
-    tally.scan(text.asInstanceOf[UTF8String])
-    if (perDocument) tally.takeAll() else tally.takeFlushed()
+    tally.count(text.asInstanceOf[UTF8String], perDocument)
   }
 
   override def terminate(): IterableOnce[InternalRow] = {
     val t = tally
     tally = null
-    if (t == null) Nil else t.rows(copy = false)
+    if (t == null) Nil else t.rows()
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -85,8 +86,8 @@ case class TokenCounts private[graft] (child: Expression, flushAt: Int,
 
 object TokenCounts {
 
-  /** Distinct words a task counts before it flushes: 2^17, about
-    * 5 MB of table and at most 4 MB of word bytes.
+  /** Distinct words a task counts before it flushes: 2^17, at most
+    * 8 MB of table and 4 MB of words longer than 16 bytes.
     */
   val FlushAt: Int = 1 << 17
 
@@ -97,135 +98,176 @@ object TokenCounts {
   def apply(child: Expression): TokenCounts = new TokenCounts(child, FlushAt)
 }
 
-/** Open-addressing (linear probing) word -> count table. A slot holds
-  * `hash << 32 | entry + 1` (0 = empty); entry `e`'s bytes are
-  * `arena(starts(e) until starts(e) + lens(e))`. The table starts small
-  * and doubles while it is at most half full, up to twice `flushAt`.
+/** Open-addressing (linear probing) word -> count table. Slot `s` is
+  * four longs, `table(4s until 4s + 4)`:
+  *  - the hash's high 32 bits over the word's length (0 = empty);
+  *  - the word's first eight bytes;
+  *  - for a word of up to 16 bytes, its next eight bytes, so the word
+  *    is its own key and a hit reads one slot and nothing else; for a
+  *    longer word, the offset of its bytes in `arena`, which a hit
+  *    then compares;
+  *  - the count.
+  * The slot index is the hash's high bits too. `order(e)` is the slot
+  * of the e-th word inserted, so rows come out in insertion order: the
+  * hash seed, drawn when the tally is created, changes no row and no
+  * order. The table starts small and doubles while it is at most half
+  * full, up to twice `flushAt` slots.
+  *
+  * The worst case is bounded by the seed: the hash is a seeded 64-bit
+  * mix of the whole word, so input written without the seed makes
+  * lookups walk long runs of slots only by chance. A property test
+  * holds 2^16 words that share one 31-polynomial hash to at most twice
+  * the probes per token of random words.
   */
 private[graft] final class TokenTally(flushAt: Int, fold: Boolean = true)
-    extends TokenScanner(keepTokens = false, fold) {
+    extends TokenScanner(fold, java.util.concurrent.ThreadLocalRandom.current().nextLong()) {
   private val maxSlots = Integer.highestOneBit(math.max(1, 2 * flushAt - 1)) << 1
   private val arenaCap = flushAt.toLong * 32
 
-  private var slots = new Array[Long](math.min(1024, maxSlots))
-  private var hashes = new Array[Int](16)
-  private var starts = new Array[Int](16)
-  private var lens = new Array[Int](16)
-  private var counts = new Array[Long](16)
+  private var table = new Array[Long](4 * math.min(1024, maxSlots))
+  private var mask = table.length / 4 - 1
+  private var order = new Array[Int](16)
   private var arena = new Array[Byte](4096)
   private var used = 0
   private var size = 0
-  private var flushed: ArrayBuffer[InternalRow] = null
+  /** The table's rows are being handed out; the scan waits for them. */
+  private var emitting = false
   private val row = new SpecificInternalRow(TokenCounts.Schema.map(_.dataType))
+  private val shortWord = new Array[Byte](16)
   /** Slots visited by [[clear]], over the tally's life. */
   private[graft] var cleared = 0L
+  /** Slots visited by lookups, over the tally's life. */
+  private[graft] var probes = 0L
+  /** Tokens counted, over the tally's life. */
+  private[graft] var tokens = 0L
 
-  protected def token(start: Int, len: Int, hash: Int): Unit = {
-    var s = hash & (slots.length - 1)
-    var v = slots(s)
-    while (v != 0L) {
-      if ((v >>> 32).toInt == hash) {
-        val e = v.toInt - 1
-        val at = starts(e)
-        if (lens(e) == len && Arrays.equals(arena, at, at + len, buf, start, start + len)) {
-          counts(e) += 1
-          return
-        }
+  protected def token(len: Int, w0: Long, w1: Long, hash: Long): Boolean = {
+    val tag = (hash & 0xffffffff00000000L) | len
+    val t = table
+    var s = (hash >>> 32).toInt & mask
+    var p = 1L
+    var b = s << 2
+    var m = t(b)
+    while (m != 0L) {
+      if (m == tag && t(b + 1) == w0 &&
+          (if (len <= 16) t(b + 2) == w1
+           else { val at = t(b + 2).toInt; Arrays.equals(arena, at, at + len, buf, 0, len) })) {
+        t(b + 3) += 1
+        probes += p
+        tokens += 1
+        return true
       }
-      s = (s + 1) & (slots.length - 1)
-      v = slots(s)
+      s = (s + 1) & mask
+      b = s << 2
+      m = t(b)
+      p += 1
     }
-    if (size == flushAt || (size > 0 && used + len > arenaCap)) {
-      flush()
-      s = hash & (slots.length - 1)
-    }
-    insert(s, start, len, hash)
+    probes += p
+    insert(s, tag, len, w0, w1)
   }
 
-  private def insert(slot: Int, start: Int, len: Int, hash: Int): Unit = {
+  /** Puts a new word in empty slot `s`, unless the table is full. */
+  private def insert(s: Int, tag: Long, len: Int, w0: Long, w1: Long): Boolean = {
+    if (size == flushAt || (len > 16 && size > 0 && used + len > arenaCap)) return false
+    tokens += 1
+    val b = s << 2
+    table(b) = tag
+    table(b + 1) = w0
+    table(b + 2) = if (len <= 16) w1 else append(len)
+    table(b + 3) = 1L
+    if (size == order.length) order = Arrays.copyOf(order, math.min(size * 2, flushAt))
+    order(size) = s
+    size += 1
+    if (size * 2 > mask + 1 && mask + 1 < maxSlots) rehash(2 * (mask + 1))
+    true
+  }
+
+  /** Copies the long word in `buf` to the arena; returns its offset. */
+  private def append(len: Int): Long = {
     if (used + len > arena.length)
       arena = Arrays.copyOf(arena, math.max(arena.length * 2, used + len))
-    System.arraycopy(buf, start, arena, used, len)
-    if (size == starts.length) {
-      val n = math.min(size * 2, flushAt)
-      hashes = Arrays.copyOf(hashes, n)
-      starts = Arrays.copyOf(starts, n)
-      lens = Arrays.copyOf(lens, n)
-      counts = Arrays.copyOf(counts, n)
-    }
-    hashes(size) = hash
-    starts(size) = used
-    lens(size) = len
-    counts(size) = 1L
+    System.arraycopy(buf, 0, arena, used, len)
     used += len
-    size += 1
-    slots(slot) = (hash.toLong << 32) | size
-    if (size * 2 > slots.length && slots.length < maxSlots) rehash(slots.length * 2)
+    used - len
   }
 
-  private def rehash(n: Int): Unit = {
-    slots = new Array[Long](n)
+  private def rehash(slots: Int): Unit = {
+    val old = table
+    table = new Array[Long](4 * slots)
+    mask = slots - 1
     var e = 0
     while (e < size) {
-      var s = hashes(e) & (n - 1)
-      while (slots(s) != 0L) s = (s + 1) & (n - 1)
-      slots(s) = (hashes(e).toLong << 32) | (e + 1)
+      val from = order(e) << 2
+      var s = (old(from) >>> 32).toInt & mask
+      while (table(s << 2) != 0L) s = (s + 1) & mask
+      System.arraycopy(old, from, table, s << 2, 4)
+      order(e) = s
       e += 1
     }
   }
 
-  private def flush(): Unit = {
-    if (flushed == null) flushed = new ArrayBuffer[InternalRow](size)
-    flushed ++= rows(copy = true)
-    Arrays.fill(slots, 0L)
-    used = 0
-    size = 0
-  }
-
-  /** Rows flushed by the last scan, if any. */
-  def takeFlushed(): IterableOnce[InternalRow] =
-    if (flushed == null) Nil
-    else { val out = flushed; flushed = null; out }
-
-  /** Every row of the last scan, flushed ones first, leaving the tally
-    * empty. The unflushed entries come as one reused row, refilled by
-    * each `next()`, whose word wraps the arena: a row is valid until
-    * the next one and the tally must not count again before all are
-    * read, as Generate does, projecting each row as it comes.
-    */
-  def takeAll(): IterableOnce[InternalRow] = {
-    val own = Iterator.tabulate(size) { e =>
-      row.update(0, UTF8String.fromBytes(arena, starts(e), lens(e)))
-      row.setLong(1, counts(e))
-      row
-    }
-    clear()
-    if (flushed == null) own else takeFlushed().iterator ++ own
-  }
-
-  /** Empties the table by zeroing each entry's own slot, found by
-    * probing from its hash for the slot that names it.
-    */
+  /** Empties the table by zeroing each word's own slot. */
   private def clear(): Unit = {
     var e = 0
     while (e < size) {
-      var s = hashes(e) & (slots.length - 1)
-      while ({ cleared += 1; slots(s).toInt != e + 1 }) s = (s + 1) & (slots.length - 1)
-      slots(s) = 0L
+      table(order(e) << 2) = 0L
       e += 1
     }
+    cleared += size
     used = 0
     size = 0
   }
 
-  /** One `(word, cnt)` row per entry; without `copy` the words wrap the
-    * arena, so the tally must not count again.
+  /** Counts `text`. Per task, the result holds the rows of the flushes
+    * the document caused; per document, every row of the document,
+    * leaving the tally empty. The scan goes on as the rows are read,
+    * and the tally must not count again before all are read.
     */
-  def rows(copy: Boolean): Iterator[InternalRow] =
-    Iterator.range(0, size).map { e =>
-      val word =
-        if (copy) UTF8String.fromBytes(Arrays.copyOfRange(arena, starts(e), starts(e) + lens(e)))
-        else UTF8String.fromBytes(arena, starts(e), lens(e))
-      new GenericInternalRow(Array[Any](word, counts(e)))
+  def count(text: UTF8String, perDocument: Boolean): Iterator[InternalRow] = {
+    if (emitting) throw new IllegalStateException(
+      "graft_token_counts: a document was counted before the last one's rows were all read")
+    val done = scan(text)
+    if (done && !perDocument) Iterator.empty
+    else new Iterator[InternalRow] {
+      private var scanned = done
+      private var e = 0
+      emitting = true
+
+      def hasNext: Boolean = {
+        while (!(emitting && e < TokenTally.this.size)) {
+          if (emitting) { clear(); emitting = false; e = 0 }
+          if (scanned) return false
+          scanned = resume()
+          emitting = !scanned || perDocument
+        }
+        true
+      }
+
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        e += 1
+        rowOf(e - 1)
+      }
     }
+  }
+
+  /** One `(word, cnt)` row per word in the table, in insertion order:
+    * one reused row, refilled by each `next()`, whose word wraps the
+    * tally, so the tally must not count again.
+    */
+  def rows(): Iterator[InternalRow] = Iterator.range(0, size).map(rowOf)
+
+  private def rowOf(e: Int): InternalRow = {
+    val b = order(e) << 2
+    val len = table(b).toInt
+    val w =
+      if (len <= 16) {
+        TokenScanner.store(shortWord, 0, table(b + 1))
+        TokenScanner.store(shortWord, 8, table(b + 2))
+        UTF8String.fromBytes(shortWord, 0, len)
+      } else UTF8String.fromBytes(arena, table(b + 2).toInt, len)
+    row.update(0, w)
+    row.setLong(1, table(b + 3))
+    row
+  }
 }

@@ -864,6 +864,7 @@ object DedupOps {
     */
   def deleteFromLshIndex(deletes: DataFrame, indexDir: String): Unit = {
     val spark = deletes.sparkSession
+    val v = IndexVersion.begin(indexDir)
     val ids = Checkpoints.truncate(deletes.select(col("doc_id")).distinct())
     IndexVersion.appendTombstones(ids, indexDir, "doc_id")
     val delBands = spark.read.parquet(s"$indexDir/bands")
@@ -876,6 +877,7 @@ object DedupOps {
           coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
       .where(col("corpus_n") > 0)
     IndexVersion.publishDir(s"$indexDir/band_counts")(merged.write.parquet)
+    IndexVersion.commit(indexDir, v)
   }
 
   /** Compact a tombstoned band index: rewrite `bands/` minus the

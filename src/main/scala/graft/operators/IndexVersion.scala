@@ -36,10 +36,12 @@ import graft.sources.Fixtures
   * lose one batch's counts (the classic lost update). The single-host
   * `flock` of tools/run.sh serializes the jobs it launches; a real
   * cluster has no such lock, so the invariant lives in the index
-  * layout itself. The read-modify-write folds take the slot:
-  * [[DedupOps.foldBatchIntoLshIndex]] (band counts),
-  * [[RetrievalOps.foldBatchIntoPostings]] (lexicon and stats) and
-  * [[SimilarityOps.foldBatchIntoSemIndex]] (cluster counts). The
+  * layout itself. The read-modify-write folds and deletes take the
+  * slot: [[DedupOps.foldBatchIntoLshIndex]] and
+  * [[DedupOps.deleteFromLshIndex]] (band counts),
+  * [[RetrievalOps.foldBatchIntoPostings]] (lexicon and stats), and
+  * [[SimilarityOps.foldBatchIntoSemIndex]] and
+  * [[SimilarityOps.semDeleteBatch]] (cluster counts). The
   * append-only folds ([[SimilarityOps.ivfAppendBatch]],
   * [[SimilarityOps.ivfPqAppendBatch]], [[SimilarityOps.nswAppendBatch]])
   * read no merged state and do not take it.

@@ -1073,6 +1073,7 @@ object SimilarityOps {
     */
   def semDeleteBatch(deletes: DataFrame, indexDir: String): Unit = {
     val spark = deletes.sparkSession
+    val v = IndexVersion.begin(indexDir)
     IndexVersion.appendTombstones(deletes, indexDir, "vec_id")
     val deltas = spark.read.parquet(s"$indexDir/assign")
       .join(broadcast(deletes.select(col("vec_id"))), Seq("vec_id"), "left_semi")
@@ -1083,6 +1084,7 @@ object SimilarityOps {
         (coalesce(col("corpus_n"), lit(0L)) -
           coalesce(col("delta_n"), lit(0L))).as("corpus_n"))
     IndexVersion.publishDir(s"$indexDir/cluster_counts")(merged.write.parquet)
+    IndexVersion.commit(indexDir, v)
   }
 
   /** Apply the semantic tombstone log physically: rewrite `assign/`

@@ -39,13 +39,35 @@ object ExpressionProperties extends Properties("graft.expressions") {
   // longer than any earlier document, so the scan buffer must grow
   private val longWord = Gen.choose(65, 400)
     .flatMap(n => Gen.listOfN(n, Gen.alphaChar)).map(_.mkString)
+  // bytes the eight-byte scan must not take for delimiters or fold:
+  // control bytes that are not delimiters, and the neighbours of A-Z
+  // and a-z ('@', '[', '`', '{', DEL)
+  private val edgeChar = Gen.oneOf('\u0000', '\u0001', '\u000b', '\u001f',
+    '@', '[', '`', '{', '\u007f', 'A', 'Z', 'a', 'z')
+  /** 1-40 bytes, across the 8- and 16-byte boundaries of the scan and
+    * of the in-slot key, sometimes with a non-ASCII word spliced in
+    * within the first 16 bytes.
+    */
+  private val boundaryToken: Gen[String] = for {
+    len <- Gen.choose(1, 40)
+    cs <- Gen.listOfN(len, Gen.frequency(3 -> Gen.alphaChar, 2 -> edgeChar, 1 -> Gen.numChar))
+    splice <- Gen.option(Gen.zip(Gen.choose(0, 15), nonAsciiWord))
+  } yield splice.fold(cs.mkString) { case (at, w) => cs.mkString.patch(math.min(at, len), w, 0) }
+  /** Tokens after a 0-7 byte lead, so delimiters fall at every offset
+    * mod 8.
+    */
+  private val boundaryDocument: Gen[String] = for {
+    lead <- Gen.choose(0, 7)
+    toks <- Gen.listOf(Gen.zip(boundaryToken, Gen.nonEmptyListOf(delimChars).map(_.take(3).mkString)))
+  } yield " " * lead + toks.take(20).map { case (t, d) => t + d }.mkString
   private val document: Gen[String] = Gen.frequency(
     1 -> Gen.const(""),
     12 -> Gen.listOf(Gen.frequency(
       6 -> Gen.nonEmptyListOf(wordChar).map(_.mkString),
       2 -> nonAsciiWord,
       1 -> longWord,
-      4 -> Gen.nonEmptyListOf(delimChars).map(_.mkString))).map(_.take(30).mkString))
+      4 -> Gen.nonEmptyListOf(delimChars).map(_.mkString))).map(_.take(30).mkString),
+    6 -> boundaryDocument)
   /** A partition: documents, `None` for a null one. */
   private val partition: Gen[List[Option[String]]] =
     Gen.listOf(Gen.frequency(1 -> Gen.const(None), 8 -> document.map(Some(_))))
@@ -78,6 +100,20 @@ object ExpressionProperties extends Properties("graft.expressions") {
   private def explodeCounts(docs: Seq[Option[String]]): Map[String, Long] =
     countWords(docs.flatten.flatMap(tokenize))
 
+  /** StringTokenizer over `UTF8String.toLowerCase`: the folded tokens,
+    * by a model that shares no code with the scanner.
+    */
+  private def modelTokens(s: String): Seq[String] = {
+    val st = new java.util.StringTokenizer(
+      UTF8String.fromString(s).toLowerCase.toString, " \t\n\r\f")
+    val model = Seq.newBuilder[String]
+    while (st.hasMoreTokens) model += st.nextToken()
+    model.result()
+  }
+
+  private def modelCounts(docs: Seq[Option[String]]): Map[String, Long] =
+    countWords(docs.flatten.flatMap(modelTokens))
+
   /** `explode(filter(split(text, "[ \t\n\r\f]+"), _ != ""))` + count:
     * the reference's case-kept tokens.
     */
@@ -100,18 +136,27 @@ object ExpressionProperties extends Properties("graft.expressions") {
 
   property("tokenize of non-ASCII text splits UTF8String.toLowerCase") =
     forAll(document) { s =>
-      val st = new java.util.StringTokenizer(
-        UTF8String.fromString(s).toLowerCase.toString, " \t\n\r\f")
-      val model = Seq.newBuilder[String]
-      while (st.hasMoreTokens) model += st.nextToken()
-      tokenize(s) == model.result()
+      tokenize(s) == modelTokens(s)
+    }
+
+  property("tokenize and every kernel mode equal the models at the scan's boundaries") =
+    forAll(Gen.listOf(boundaryDocument.map(Some(_))).map(_.take(8))) { docs =>
+      val perDoc = kernelRows(docs, TokenCounts.FlushAt, perDocument = true).groupBy(_._1)
+        .map { case (d, rs) => d -> rs.groupMapReduce(_._2)(_._3)(_ + _) }
+      docs.forall(d => tokenize(d.get) == modelTokens(d.get)) :| "tokenize" &&
+        (tokenCountRows(docs, TokenCounts.FlushAt).toMap == modelCounts(docs)) :| "per task" &&
+        docs.indices.forall(i =>
+          perDoc.getOrElse(i, Map.empty) == modelCounts(Seq(docs(i)))) :| "per document" &&
+        (tokenCountRows(docs, TokenCounts.FlushAt, fold = false).toMap ==
+          splitCounts(docs)) :| "case kept"
     }
 
   property("token counts equal explode(tokenize) + count, one row per word") =
     forAll(partition) { docs =>
       def oneRowPerWord(rows: Seq[(String, Long)], want: Map[String, Long]) =
         rows.map(_._1).distinct.size == rows.size && rows.toMap == want
-      oneRowPerWord(tokenCountRows(docs, TokenCounts.FlushAt), explodeCounts(docs)) :| "folded" &&
+      oneRowPerWord(tokenCountRows(docs, TokenCounts.FlushAt), modelCounts(docs)) :| "folded" &&
+        (explodeCounts(docs) == modelCounts(docs)) :| "explode(tokenize)" &&
         oneRowPerWord(tokenCountRows(docs, TokenCounts.FlushAt, fold = false),
           splitCounts(docs)) :| "case kept, split on the delimiters"
     }
@@ -133,13 +178,50 @@ object ExpressionProperties extends Properties("graft.expressions") {
     val tally = new TokenTally(TokenCounts.FlushAt)
     def count(doc: String): (Int, Long) = {
       val before = tally.cleared
-      tally.scan(UTF8String.fromString(doc))
-      (tally.takeAll().iterator.size, tally.cleared - before)
+      val rows = tally.count(UTF8String.fromString(doc), perDocument = true).size
+      (rows, tally.cleared - before)
     }
     val (bigWords, bigCleared) = count((0 until 50000).map(i => s"w$i").mkString(" "))
     val (smallWords, smallCleared) = count("a b c a")
     (bigWords == 50000 && bigCleared >= 50000) :| s"large document: $bigCleared slots" &&
       (smallWords == 3 && smallCleared <= 12) :| s"small document: $smallCleared slots"
+  }
+
+  property("one huge document holds one flush segment of rows at a time") =
+    forAll(Gen.choose(1, 8), Gen.oneOf(false, true)) { (flushAt, perDocument) =>
+      val words = (0 until 5 * flushAt).map(i => s"w$i")
+      val tally = new TokenTally(flushAt)
+      val rows = tally.count(UTF8String.fromString(words.mkString(" ")), perDocument)
+      // every word is distinct, so each token counted is one row to read
+      var read = 0L
+      var held = tally.tokens
+      val got = Map.newBuilder[String, Long]
+      while (rows.hasNext) {
+        val r = rows.next()
+        got += r.getUTF8String(0).toString -> r.getLong(1)
+        read += 1
+        held = math.max(held, tally.tokens - read)
+      }
+      if (!perDocument) tally.rows().foreach(r => got += r.getUTF8String(0).toString -> r.getLong(1))
+      (held <= flushAt) :| s"held $held rows at flushAt $flushAt" &&
+        (got.result() == words.map(_ -> 1L).toMap) :| "sums"
+    }
+
+  property("colliding tokens probe like random ones") = {
+    // 2^16 distinct 32-byte tokens of "a~"/"b_" blocks, which share one
+    // 31-polynomial hash, against 2^16 random tokens of the same shape
+    def probesPerToken(tokens: Seq[String]): Double = {
+      val tally = new TokenTally(TokenCounts.FlushAt)
+      tokens.grouped(1024).foreach(g =>
+        assert(tally.count(UTF8String.fromString(g.mkString(" ")), perDocument = false).isEmpty))
+      tally.probes.toDouble / tally.tokens
+    }
+    val colliding = (0 until (1 << 16)).map(i =>
+      (0 until 16).map(b => if ((i >>> b & 1) == 0) "a~" else "b_").mkString)
+    val rnd = new scala.util.Random(13)
+    val random = Seq.fill(1 << 16)(Seq.fill(32)(('a' + rnd.nextInt(26)).toChar).mkString).distinct
+    val (c, r) = (probesPerToken(colliding), probesPerToken(random))
+    (c <= 2 * r) :| f"colliding $c%.2f probes per token, random $r%.2f"
   }
 
   property("token counts summed over flushes equal the model at any flush size") =

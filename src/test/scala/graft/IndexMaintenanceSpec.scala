@@ -234,6 +234,52 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       "a redelivered micro-batch must land the identical on-disk edge set")
   }
 
+  test("LSH delete: a delete over a held version slot throws before it logs a tombstone") {
+    import graft.operators.IndexVersion
+    val corpus = docs.where(pmod(col("doc_id"), lit(3)) =!= 0)
+    val deletes = corpus.where(pmod(col("doc_id"), lit(7)) === 1).select("doc_id")
+    val dir = java.nio.file.Files.createTempDirectory("lshdelcas").toString
+    DedupOps.writeLshIndex(corpus, dir)
+    def counts() = spark.read.parquet(s"$dir/band_counts")
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(identity).toSeq
+    val countsBefore = counts()
+
+    val slotA = IndexVersion.begin(dir) // a fold, mid-flight
+    intercept[java.util.ConcurrentModificationException] {
+      DedupOps.deleteFromLshIndex(deletes, dir)
+    }
+    assert(IndexVersion.tombstones(spark, dir).isEmpty,
+      "the refused delete must not have logged a single tombstone")
+    assert(counts() === countsBefore, "the refused delete must not merge counts")
+
+    IndexVersion.commit(dir, slotA)
+    DedupOps.deleteFromLshIndex(deletes, dir)
+    assert(IndexVersion.current(dir) === 2L, "a completed delete seals its slot")
+  }
+
+  test("semantic delete: a delete over a held version slot throws before it logs a tombstone") {
+    import graft.operators.IndexVersion
+    val corpus = emb.where(pmod(col("vec_id"), lit(3)) =!= 0)
+    val deletes = corpus.where(pmod(col("vec_id"), lit(7)) === 1)
+    val dir = java.nio.file.Files.createTempDirectory("semdelcas").toString
+    SimilarityOps.writeSemIndex(corpus, dir)
+    def counts() = spark.read.parquet(s"$dir/cluster_counts")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(identity).toSeq
+    val countsBefore = counts()
+
+    val slotA = IndexVersion.begin(dir) // a fold, mid-flight
+    intercept[java.util.ConcurrentModificationException] {
+      SimilarityOps.semDeleteBatch(deletes, dir)
+    }
+    assert(IndexVersion.tombstones(spark, dir).isEmpty,
+      "the refused delete must not have logged a single tombstone")
+    assert(counts() === countsBefore, "the refused delete must not merge counts")
+
+    IndexVersion.commit(dir, slotA)
+    SimilarityOps.semDeleteBatch(deletes, dir)
+    assert(IndexVersion.current(dir) === 2L, "a completed delete seals its slot")
+  }
+
   test("LSH delete: tombstoned probe equals a rebuild on the live corpus, and compaction truncates the log") {
     // arbitrary take-down slice (NOT the gated query's mod-10 one):
     // corpus = mod-3 nonzero docs, deletes = the corpus's mod-7 == 1
