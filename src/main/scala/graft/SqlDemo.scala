@@ -36,8 +36,8 @@ object SqlDemo {
 
     val vocab = spark.sql(
       """SELECT count(*) AS n FROM (
-        |  SELECT word, count(*) AS cnt FROM (
-        |    SELECT explode(graft_tokenize(text)) AS word FROM documents
+        |  SELECT word, sum(cnt) AS cnt FROM (
+        |    SELECT graft_token_counts(text) FROM documents
         |  ) GROUP BY word)""".stripMargin).head().getLong(0)
 
     val topPair = spark.sql(

@@ -3,7 +3,8 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{date_format, date_trunc, expr, timestamp_millis}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -99,6 +100,22 @@ object Tables {
       case other => sys.error(s"unexpected events.ts type: $other")
     }
   }
+
+  /** The events clock: the epoch-ms floor of the nanos `ts` contract
+    * above. Every events operator, streaming sink and partitioned
+    * layout maps `ts` onto time through it and the two definitions
+    * below. Integer `div`, so the DuckDB oracles' `epoch_ms` sees the
+    * same grid, with no float rounding and no sub-ms ordering.
+    */
+  def eventMs: Column = expr("ts div 1000000")
+
+  /** [[eventMs]] as an event-time TIMESTAMP (the watermark column). */
+  def eventTime: Column = timestamp_millis(eventMs)
+
+  /** The UTC day of [[eventMs]] as a `yyyy-MM-dd` string: the day key
+    * the streamed day-partition writer and the pruning readers share.
+    */
+  def eventDay: Column = date_format(date_trunc("day", eventTime), "yyyy-MM-dd")
 
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -1,5 +1,7 @@
 package graft.functions.expressions
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -34,7 +36,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * >= 0x80. Until one turns up, A-Z are folded eight bytes at a time
   * (exactly what `UTF8String.toLowerCase` does to ASCII); from the
   * token holding the first such byte on, the rest of the document is
-  * scanned after that exact `toLowerCase`. The text before that token
+  * scanned after `String.toLowerCase(Locale.ROOT)`, which is what
+  * `UTF8String.toLowerCase` does to non-ASCII text under a root-like
+  * default locale; pinning the locale keeps the tokens the same under
+  * any default (a Turkish one would lower `I` to a dotless `ı`, but
+  * only after the first non-ASCII token). The text before that token
   * ends in a delimiter, so lowering the rest alone changes nothing: no
   * case rule looks across whitespace. Delimiters are all ASCII, and
   * UTF-8 continuation bytes are >= 0x80, so a byte-level scan never
@@ -120,7 +126,8 @@ private[graft] abstract class TokenScanner(fold: Boolean, seed: Long) {
         }
         if (folding && (if (len <= 16) ((w0 | w1) & Hi) != 0L else hasHigh(i, len))) {
           // the tokens before this one are final; lower the rest
-          point(UTF8String.fromAddress(base, off + i, n - i).toLowerCase)
+          point(UTF8String.fromString(
+            UTF8String.fromAddress(base, off + i, n - i).toString.toLowerCase(Locale.ROOT)))
           folding = false
           return run()
         }

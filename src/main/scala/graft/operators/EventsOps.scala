@@ -1,86 +1,77 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Tables.{eventDay, eventMs, eventTime}
 
 /** Stream-shaped analytics over the `events` table (batch plans here;
   * the Structured Streaming variants live in [[graft.streaming]]).
   *
   * Timestamps: `events.ts` arrives as nanos-since-epoch Long (see
-  * [[graft.Tables.events]]). All time math is integer (`div`), so the
-  * DuckDB oracle (`epoch_ms` over TIMESTAMP_NS) sees identical values
-  * — no float rounding, no sub-ms ordering ambiguity.
+  * [[graft.Tables.events]]) and maps onto ms, event time and the day
+  * key through the one events clock there ([[graft.Tables.eventMs]]).
   */
 object EventsOps {
-
-  /** ts (nanos long) -> epoch milliseconds, floor. */
-  private def tsMs = expr("ts div 1000000")
 
   /** Tumbling-hour aggregates per event type. */
   def hourly(events: DataFrame): DataFrame =
     events
-      .groupBy(date_trunc("hour", timestamp_millis(tsMs)).as("hour"), col("event_type"))
+      .groupBy(date_trunc("hour", eventTime).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
       .orderBy("hour", "event_type")
 
-  /** Sessionization: a session breaks after `gapMinutes` of user
-    * inactivity. Classic lag + cumulative-sum session ids, then
-    * per-user session stats. Two exchanges total (both on user_id —
-    * the second reuses the partitioning).
+  /** The batch session rule: a user's session breaks after a gap of
+    * more than `gapMinutes` between consecutive events on the ms grid.
+    * Classic lag + cumulative-sum session ids, one row per session:
+    * (user, session start, event count, span), unordered. The window
+    * is ordered by the ms value, not raw ts: the oracle runs at ms
+    * precision, so sub-ms ordering must not influence the result. One
+    * user_id exchange; the session aggregate reuses its partitioning.
     */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
+  private def sessionSegments(events: DataFrame, gapMinutes: Int): DataFrame = {
     val gapMs = gapMinutes * 60L * 1000L
-    // order by the millisecond value (not raw ts): the oracle runs at
-    // ms precision, so sub-ms ordering must not influence the result
     val w = Window.partitionBy(col("user_id")).orderBy(col("ms").asc, col("event_id").asc)
     val flagged = events
-      .withColumn("ms", tsMs)
+      .withColumn("ms", eventMs)
       .withColumn("prev_ms", lag(col("ms"), 1).over(w))
       .withColumn("new_session",
         when(col("prev_ms").isNull || col("ms") - col("prev_ms") > gapMs, 1L).otherwise(0L))
       .withColumn("session_id",
         sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    val perSession = flagged
-      .groupBy("user_id", "session_id")
-      .agg(count(lit(1)).as("n_events"), (max(col("ms")) - min(col("ms"))).as("span_ms"))
-    perSession
+    sessionRows(flagged.groupBy("user_id", "session_id"))
+  }
+
+  /** One row per session group: (user, start, event count, span). */
+  private def sessionRows(sessions: RelationalGroupedDataset): DataFrame =
+    sessions
+      .agg(
+        min(col("ms")).as("session_start_ms"),
+        count(lit(1)).as("n_events"),
+        (max(col("ms")) - min(col("ms"))).as("span_ms"))
+      .select("user_id", "session_start_ms", "n_events", "span_ms")
+
+  /** Sessionization: [[sessionSegments]] aggregated to user grain
+    * (session count, mean events per session, longest span). Two
+    * exchanges total: the user_id one, then the result sort.
+    */
+  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame =
+    sessionSegments(events, gapMinutes)
       .groupBy("user_id")
       .agg(
         count(lit(1)).as("n_sessions"),
         round(avg(col("n_events")), 4).as("avg_events_per_session"),
         max(col("span_ms")).as("max_span_ms"))
       .orderBy("user_id")
-  }
 
-  /** Per-session records at session grain: (user, session start,
-    * event count, span). The same lag + cumulative-sum segmentation
-    * as [[sessionize]] (whose output is this aggregated one level
-    * further, to user grain); kept separate because the session-grain
-    * rows are what the STREAMING [[graft.streaming.EventStreams
-    * .sessionize]] emits — the equality of the two (stream's closed
-    * sessions = these rows minus each user's open tail) is the
-    * replay-equivalence proof in StreamingSpec. Same two user_id
-    * exchanges, second reuses the first's partitioning.
+  /** Per-session records at session grain: [[sessionSegments]] in
+    * (user, start) order. The streaming sessionizers emit these rows
+    * (a stream's closed sessions = these rows minus each user's open
+    * tail, StreamingSpec).
     */
-  def sessionRecords(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val gapMs = gapMinutes * 60L * 1000L
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ms").asc, col("event_id").asc)
-    events
-      .withColumn("ms", tsMs)
-      .withColumn("prev_ms", lag(col("ms"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ms").isNull || col("ms") - col("prev_ms") > gapMs, 1L).otherwise(0L))
-      .withColumn("session_id",
-        sum(col("new_session")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "session_id")
-      .agg(
-        min(col("ms")).as("session_start_ms"),
-        count(lit(1)).as("n_events"),
-        (max(col("ms")) - min(col("ms"))).as("span_ms"))
-      .select("user_id", "session_start_ms", "n_events", "span_ms")
-      .orderBy("user_id", "session_start_ms")
-  }
+  def sessionRecords(events: DataFrame, gapMinutes: Int = 30): DataFrame =
+    sessionSegments(events, gapMinutes).orderBy("user_id", "session_start_ms")
 
   /** The SAME session-grain records as [[sessionRecords]], computed
     * by Spark's built-in `session_window` aggregate instead of the
@@ -88,24 +79,19 @@ object EventsOps {
     * session-merge operator (one merging aggregate exchange on
     * user_id; the formulations pair the way the KMV window/UDAF
     * queries do, and share one DuckDB oracle). Timestamps pass
-    * through `timestamp_millis` of the integer ms, so the session
-    * cuts land on the identical millisecond grid. Boundary semantics
-    * MATCH the lag form's strict cut (diff > gapMs): session windows
-    * merge when the next event's start touches the previous window's
-    * end (start <= end), so an event at exactly prev+gap stays in
-    * the session — EventsSpec pins this on a synthetic exact-gap
-    * fixture.
+    * through the events clock's integer ms, so the session cuts land
+    * on the identical millisecond grid. Boundary semantics MATCH the
+    * lag form's strict cut (only a gap of MORE than `gapMinutes`
+    * breaks): session windows merge when the next event's start
+    * touches the previous window's end (start <= end), so an event at
+    * exactly prev+gap stays in the session — EventsSpec pins this on a
+    * synthetic exact-gap fixture.
     */
   def sessionRecordsViaSessionWindow(events: DataFrame,
                                      gapMinutes: Int = 30): DataFrame =
-    events
-      .withColumn("ms", tsMs)
-      .groupBy(col("user_id"),
-        session_window(timestamp_millis(col("ms")), s"$gapMinutes minutes"))
-      .agg(min(col("ms")).as("session_start_ms"),
-        count(lit(1)).as("n_events"),
-        (max(col("ms")) - min(col("ms"))).as("span_ms"))
-      .select("user_id", "session_start_ms", "n_events", "span_ms")
+    sessionRows(events
+      .withColumn("ms", eventMs)
+      .groupBy(col("user_id"), session_window(eventTime, s"$gapMinutes minutes")))
       .orderBy("user_id", "session_start_ms")
 
   /** 7-day moving average of daily value totals per event type — the
@@ -119,7 +105,7 @@ object EventsOps {
     */
   def movingAvgDaily(events: DataFrame, windowDays: Int = 7): DataFrame = {
     val daily = events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type", "day")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
@@ -136,7 +122,7 @@ object EventsOps {
     */
   private def dailyPartials(events: DataFrame): DataFrame =
     events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type", "day")
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100.0 + 0.5).cast("long")).as("cents"))
@@ -203,7 +189,7 @@ object EventsOps {
     */
   def ewmaDaily(events: DataFrame): DataFrame = {
     val daily = events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type", "day")
       .agg((sum(floor(col("value") * 100.0 + 0.5).cast("long")) / 100.0).as("x"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -237,7 +223,7 @@ object EventsOps {
     */
   def holtDaily(events: DataFrame): DataFrame = {
     val daily = events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type", "day")
       .agg((sum(floor(col("value") * 100.0 + 0.5).cast("long")) / 100.0).as("x"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -285,7 +271,7 @@ object EventsOps {
     */
   def holtWintersDaily(events: DataFrame): DataFrame = {
     val daily = events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type", "day")
       .agg((sum(floor(col("value") * 100.0 + 0.5).cast("long")) / 100.0).as("x"))
     val w = Window.partitionBy("event_type").orderBy("day")
@@ -423,7 +409,7 @@ object EventsOps {
       .orderBy(col("ms").asc, col("event_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     events
-      .withColumn("ms", tsMs)
+      .withColumn("ms", eventMs)
       .withColumn("click_ms",
         when(col("event_type") === "click", col("ms")))
       .withColumn("last_click_ms", last(col("click_ms"), ignoreNulls = true).over(w))
@@ -439,7 +425,7 @@ object EventsOps {
     */
   def cubeDaily(events: DataFrame): DataFrame =
     events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .cube("event_type", "day")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
       .select(
@@ -456,7 +442,7 @@ object EventsOps {
     */
   def groupingSetsDaily(events: DataFrame): DataFrame =
     events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupingSets(
         Seq(Seq(col("event_type")), Seq(col("day")), Seq()),
         col("event_type"), col("day"))
@@ -563,7 +549,7 @@ object EventsOps {
   def funnel(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
     val staged = events
-      .select(col("user_id"), col("event_type"), tsMs.as("ms"))
+      .select(col("user_id"), col("event_type"), eventMs.as("ms"))
       .withColumn("v_ms",
         min(when(col("event_type") === "view", col("ms"))).over(w))
       .withColumn("c_ms",
@@ -593,7 +579,7 @@ object EventsOps {
   def cohortRetention(events: DataFrame): DataFrame = {
     val days = events
       .select(col("user_id"),
-        to_date(timestamp_millis(tsMs)).as("day"))
+        to_date(eventTime).as("day"))
       .distinct()
     val first = days.groupBy("user_id").agg(min("day").as("cohort_day"))
     days.join(first, "user_id")
@@ -640,7 +626,7 @@ object EventsOps {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ms").asc, col("event_id").asc)
     events
-      .select(col("user_id"), col("event_id"), col("event_type"), tsMs.as("ms"))
+      .select(col("user_id"), col("event_id"), col("event_type"), eventMs.as("ms"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .where(col("next_type").isNotNull)
       .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
@@ -681,7 +667,7 @@ object EventsOps {
     */
   def dailyGapfill(events: DataFrame): DataFrame = {
     val daily = Checkpoints.truncate(events
-      .withColumn("day", to_date(date_trunc("day", timestamp_millis(tsMs))))
+      .withColumn("day", to_date(eventTime))
       .groupBy("event_type", "day")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value")))
     val bounds = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -709,7 +695,7 @@ object EventsOps {
     */
   def multiDistinct(events: DataFrame): DataFrame =
     events
-      .withColumn("day", date_format(date_trunc("day", timestamp_millis(tsMs)), "yyyy-MM-dd"))
+      .withColumn("day", eventDay)
       .groupBy("event_type")
       .agg(
         countDistinct(col("user_id")).as("n_users"),
@@ -734,7 +720,7 @@ object EventsOps {
       .orderBy(col("ms").asc, col("event_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
     events
-      .withColumn("ms", tsMs)
+      .withColumn("ms", eventMs)
       .withColumn("click_id",
         last(when(col("event_type") === "click", col("event_id")), ignoreNulls = true).over(w))
       .withColumn("click_ms",
@@ -767,7 +753,7 @@ object EventsOps {
     // red-flagged at sf0.1 on a genuine .xxxx5 tie (Spark HALF_UP vs
     // DuckDB's double rounding); this form has no such tie hazard.
     val daily = Checkpoints.truncate(events
-      .withColumn("day", to_date(date_trunc("day", timestamp_millis(tsMs))))
+      .withColumn("day", to_date(eventTime))
       .groupBy("user_id", "day")
       .agg(floor(sum(floor(col("value") * 100 + lit(0.5))) * lit(100.0) /
         count(lit(1)) + lit(0.5)).cast("long").as("o4")))
@@ -817,7 +803,7 @@ object EventsOps {
   def rollingActiveUsers(events: DataFrame): DataFrame = {
     val pairs = Checkpoints.truncate(events
       .select(col("user_id"),
-        to_date(date_trunc("day", timestamp_millis(tsMs))).as("day"))
+        to_date(eventTime).as("day"))
       .distinct())
     val maxDay = pairs.agg(max(col("day")).as("d1"))
     val dau = pairs.groupBy("day").agg(countDistinct("user_id").as("dau"))
@@ -848,7 +834,7 @@ object EventsOps {
   def rollingActiveKmv(events: DataFrame, k: Int = 64): DataFrame = {
     val pairs = Checkpoints.truncate(events
       .select(col("user_id"),
-        to_date(date_trunc("day", timestamp_millis(tsMs))).as("day"))
+        to_date(eventTime).as("day"))
       .distinct())
     val activeDays = pairs.select("day").distinct()
     pairs
@@ -874,7 +860,7 @@ object EventsOps {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ms").asc, col("event_id").asc)
     events
-      .withColumn("ms", tsMs)
+      .withColumn("ms", eventMs)
       .withColumn("t1", lag(col("event_type"), 2).over(w))
       .withColumn("t2", lag(col("event_type"), 1).over(w))
       .where(col("t1").isNotNull)

@@ -446,9 +446,11 @@ object TextAnalysisOps {
       .orderBy("w1", "rnk")
   }
 
-  /** Corpus-wide word-bigram frequencies, top-k. Native tokenize +
-    * n-gram expressions feed the aggregate.
+  /** N-gram width for [[repetitionScore]]; the DuckDB oracle is
+    * generated from the same constant.
     */
+  val RepetitionNgramN = 3
+
   /** Repeated-n-gram repetition score (the Gopher/C4-family quality
     * rule): `dup_frac` = 1 - distinct(n-grams)/total(n-grams) per
     * document — near 0 for natural prose, approaching 1 for looping
@@ -456,11 +458,6 @@ object TextAnalysisOps {
     * n-gram list built and deduplicated on the row), so the 100 TB
     * form is pure map work with no exchange at all.
     */
-  /** N-gram width for [[repetitionScore]]; the DuckDB oracle is
-    * generated from the same constant.
-    */
-  val RepetitionNgramN = 3
-
   def repetitionScore(docs: DataFrame, n: Int = RepetitionNgramN): DataFrame = {
     val grams = graft.functions.NativeText.wordNgrams(
       graft.functions.NativeText.tokens(col("text")), n)
@@ -505,6 +502,9 @@ object TextAnalysisOps {
       .orderBy("doc_id")
   }
 
+  /** Corpus-wide word-bigram frequencies, top-k. Native tokenize +
+    * n-gram expressions feed the aggregate.
+    */
   def ngramFreq(docs: DataFrame, n: Int = 2, k: Int = 30): DataFrame = {
     docs
       .select(explode(graft.functions.NativeText.wordNgrams(

@@ -9,6 +9,38 @@ import graft.operators._
 /** Registry slice: events / time series / sessions / streaming. */
 private[graft] trait QueriesEvents extends QueriesOracleHelpers {
 
+  /** The batch session rule in DuckDB, as CTEs ending in `s`: one
+    * row per session (user_id, session_start_ms, n_events, span_ms).
+    * It works at the distinct-(user, ms) grain: a session boundary can
+    * only fall BETWEEN distinct timestamps (equal-ms rows always share
+    * a session), and deduping first makes every window total-ordered
+    * — order-insensitive even if the fixture carries fully duplicated
+    * rows, where a per-row two-pass window could order a tie group
+    * differently in each pass and split it across sessions (the
+    * engine's single-sort window plan cannot).
+    */
+  private def sessionSegmentsSql: String =
+    """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
+      |d AS (SELECT user_id, ms, count(*) AS n FROM e GROUP BY 1, 2),
+      |f AS (SELECT user_id, ms, n,
+      |  CASE WHEN lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
+      |         OR ms - lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
+      |       THEN 1 ELSE 0 END AS new_session
+      |FROM d),
+      |g AS (SELECT user_id, ms, n,
+      |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ms
+      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+      |FROM f),
+      |s AS (SELECT user_id, min(ms) AS session_start_ms,
+      |  CAST(sum(n) AS BIGINT) AS n_events,
+      |  max(ms) - min(ms) AS span_ms
+      |FROM g GROUP BY user_id, session_id)""".stripMargin
+
+  /** [[sessionSegmentsSql]] at session grain, in (user, start) order. */
+  private def sessionRecordsSql: String =
+    sessionSegmentsSql +
+      "\nSELECT user_id, session_start_ms, n_events, span_ms FROM s ORDER BY 1, 2"
+
   protected lazy val eventsRegistry: Seq[(String, QueryDef)] = Seq(
 
     // ----- events ------------------------------------------------------
@@ -47,56 +79,20 @@ private[graft] trait QueriesEvents extends QueriesOracleHelpers {
              |  count(*) AS n, round(sum(value), 4) AS sum_value
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    // oracle works at the distinct-(user, ms) grain: a session
-    // boundary can only fall BETWEEN distinct timestamps (equal-ms
-    // rows always share a session), and deduping first makes every
-    // window total-ordered — order-insensitive even if the fixture
-    // carries fully duplicated rows, where a per-row two-pass window
-    // could order a tie group differently in each pass and split it
-    // across sessions (the engine's single-sort window plan cannot)
+    // the session rule aggregated to user grain (sessionSegmentsSql)
     "events_sessionize" -> QueryDef(
       (s, d) => EventsOps.sessionize(Tables.events(s, d)),
-      Some("""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-             |d AS (SELECT user_id, ms, count(*) AS n FROM e GROUP BY 1, 2),
-             |f AS (SELECT user_id, ms, n,
-             |  CASE WHEN lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-             |         OR ms - lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
-             |       THEN 1 ELSE 0 END AS new_session
-             |FROM d),
-             |g AS (SELECT user_id, ms, n,
-             |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ms
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-             |FROM f),
-             |s AS (SELECT user_id, session_id, CAST(sum(n) AS BIGINT) AS n_events,
-             |        max(ms) - min(ms) AS span_ms
-             |      FROM g GROUP BY user_id, session_id)
-             |SELECT user_id, count(*) AS n_sessions,
-             |  round(avg(n_events), 4) AS avg_events_per_session,
-             |  CAST(max(span_ms) AS BIGINT) AS max_span_ms
-             |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      Some(sessionSegmentsSql +
+        """
+          |SELECT user_id, count(*) AS n_sessions,
+          |  round(avg(n_events), 4) AS avg_events_per_session,
+          |  CAST(max(span_ms) AS BIGINT) AS max_span_ms
+          |FROM s GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-    // session-grain records (user-grain sessionize one level up);
-    // same tie-safe distinct-(user, ms) oracle grain as above —
-    // boundaries fall only between distinct timestamps, so start/
-    // count/span per session are order-insensitive
+    // session-grain records (user-grain sessionize one level up)
     "session_records" -> QueryDef(
       (s, d) => EventsOps.sessionRecords(Tables.events(s, d)),
-      Some("""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-             |d AS (SELECT user_id, ms, count(*) AS n FROM e GROUP BY 1, 2),
-             |f AS (SELECT user_id, ms, n,
-             |  CASE WHEN lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-             |         OR ms - lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
-             |       THEN 1 ELSE 0 END AS new_session
-             |FROM d),
-             |g AS (SELECT user_id, ms, n,
-             |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ms
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-             |FROM f)
-             |SELECT user_id, min(ms) AS session_start_ms,
-             |  CAST(sum(n) AS BIGINT) AS n_events,
-             |  max(ms) - min(ms) AS span_ms
-             |FROM g GROUP BY user_id, session_id
-             |ORDER BY user_id, session_start_ms""".stripMargin)),
+      Some(sessionRecordsSql)),
 
     // the same session records through Spark's BUILT-IN session_window
     // merging aggregate (one user_id exchange) — pairs with the
@@ -104,22 +100,7 @@ private[graft] trait QueriesEvents extends QueriesOracleHelpers {
     // one oracle
     "session_window_records" -> QueryDef(
       (s, d) => EventsOps.sessionRecordsViaSessionWindow(Tables.events(s, d)),
-      Some("""WITH e AS (SELECT user_id, epoch_ms(ts) AS ms FROM events),
-             |d AS (SELECT user_id, ms, count(*) AS n FROM e GROUP BY 1, 2),
-             |f AS (SELECT user_id, ms, n,
-             |  CASE WHEN lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) IS NULL
-             |         OR ms - lag(ms, 1) OVER (PARTITION BY user_id ORDER BY ms) > 1800000
-             |       THEN 1 ELSE 0 END AS new_session
-             |FROM d),
-             |g AS (SELECT user_id, ms, n,
-             |  sum(new_session) OVER (PARTITION BY user_id ORDER BY ms
-             |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-             |FROM f)
-             |SELECT user_id, min(ms) AS session_start_ms,
-             |  CAST(sum(n) AS BIGINT) AS n_events,
-             |  max(ms) - min(ms) AS span_ms
-             |FROM g GROUP BY user_id, session_id
-             |ORDER BY user_id, session_start_ms""".stripMargin)),
+      Some(sessionRecordsSql)),
 
     "events_json" -> QueryDef(
       (s, d) => EventsOps.jsonProps(Tables.events(s, d)),

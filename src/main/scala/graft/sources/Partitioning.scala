@@ -24,10 +24,10 @@ object Partitioning {
 
   /** Write-once date-partitioned copy of `events` under /tmp
     * ([[Fixtures.ensure]] keying: dataset basename + source parquet
-    * fingerprint), `day=YYYY-MM-DD/` derived from the nanos `ts` with
-    * integer ms math (the [[graft.operators.EventsOps]] convention,
-    * so the oracle's `date_trunc` over TIMESTAMP_NS sees identical
-    * day cuts). Returns a reader over the partitioned layout with
+    * fingerprint), `day=YYYY-MM-DD/` derived from the nanos `ts` by
+    * the events clock's day key ([[graft.Tables.eventDay]], integer
+    * ms math, so the oracle's `date_trunc` over TIMESTAMP_NS sees
+    * identical day cuts). Returns a reader over the partitioned layout with
     * `day` kept as STRING (partition-column type inference would
     * otherwise make it DATE and the schema engine-dependent).
     */
@@ -35,8 +35,7 @@ object Partitioning {
     val path = Fixtures.ensure("events_bydate", sfDir,
       Seq(s"$sfDir/events.parquet")) { p =>
       graft.Tables.events(spark, sfDir)
-        .withColumn("day",
-          date_format(date_trunc("day", timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd"))
+        .withColumn("day", graft.Tables.eventDay)
         .write.mode("overwrite")
         .partitionBy("day")
         .parquet(p)
@@ -83,8 +82,7 @@ object Partitioning {
   def eventsDppJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val hotDays = graft.Tables.events(spark, sfDir)
       .where(col("event_type") === "purchase" && col("value") > DppHotValue)
-      .select(date_format(date_trunc("day",
-        timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd").as("day"))
+      .select(graft.Tables.eventDay.as("day"))
       .distinct()
     partitionedEvents(spark, sfDir)
       .join(broadcast(hotDays), Seq("day"))
@@ -115,8 +113,7 @@ object Partitioning {
     val path = Fixtures.ensure("events_restated", sfDir,
       Seq(s"$sfDir/events.parquet")) { p =>
       val withDay = graft.Tables.events(spark, sfDir)
-        .withColumn("day",
-          date_format(date_trunc("day", timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd"))
+        .withColumn("day", graft.Tables.eventDay)
       // Suppress the committer's _SUCCESS marker for the BASE write so
       // a complete-looking fixture can never exist without the
       // restatement: only the second (dynamic) write commits the

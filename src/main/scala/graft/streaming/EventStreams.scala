@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
+import graft.Tables.{eventDay, eventMs, eventTime}
 import graft.sources.Fixtures
 
 /** Structured Streaming variants of the events analytics: the same
@@ -219,6 +220,11 @@ object EventStreams {
       .agg(count(lit(1)).as("n_purchases"),
         sum(col("value").cast("decimal(18,6)")).as("spend"))
 
+  /** `events` with its event-time column `event_time` ([[graft.Tables
+    * .eventTime]]) under a `watermark` delay. */
+  private def watermarked(events: DataFrame, watermark: String): DataFrame =
+    events.withColumn("event_time", eventTime).withWatermark("event_time", watermark)
+
   /** Sliding/tumbling windowed counts per event type with a watermark:
     * the incremental form of `EventsOps.hourly`. Late data beyond the
     * watermark is dropped; state is bounded by (watermark / window).
@@ -226,9 +232,7 @@ object EventStreams {
   def windowedCounts(events: DataFrame,
                      window_ : String = "1 hour",
                      watermark: String = "2 hours"): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
+    watermarked(events, watermark)
       .groupBy(window(col("event_time"), window_), col("event_type"))
       .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
@@ -240,9 +244,7 @@ object EventStreams {
     * `DedupOps.exactDedup` for an at-least-once upstream.
     */
   def dedupEvents(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
+    watermarked(events, watermark)
       .dropDuplicates("event_id", "event_time")
 
   /** Watermark-window dedup: unlike [[dedupEvents]] (exact match on
@@ -254,9 +256,7 @@ object EventStreams {
     */
   def dedupEventsWithinWatermark(events: DataFrame,
                                  watermark: String = "1 hour"): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
+    watermarked(events, watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming corpus ingest with dedup — the continuous form of
@@ -733,7 +733,7 @@ object EventStreams {
                                 watermark: String = "1 hour",
                                 joinType: String = "inner"): DataFrame = {
     val base = events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
+      .withColumn("event_time", eventTime)
     val clicks = base.where(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("event_time").as("click_time"))
@@ -839,81 +839,96 @@ object EventStreams {
   // --- stateful sessionization -------------------------------------
 
   case class SessionInput(user_id: Long, ms: Long)
-  case class SessionState(sessionStartMs: Long, lastMs: Long, nEvents: Long)
+  case class SessionState(sessionStartMs: Long, lastMs: Long, nEvents: Long) {
+    /** The session record this state closes into. */
+    def close(user: Long): SessionOut =
+      SessionOut(user, sessionStartMs, nEvents, lastMs - sessionStartMs)
+  }
   case class SessionOut(user_id: Long, session_start_ms: Long,
                         n_events: Long, span_ms: Long)
 
-  /** Custom keyed state: emit a session record when a user goes quiet
-    * for `gapMinutes`. This is the `flatMapGroupsWithState` path — the
-    * preference-order slot for custom streaming state.
+  /** The session rule on keyed state, the one step every streaming
+    * sessionizer runs: fold one micro-batch's ms values for `user`, in
+    * ms order, into the user's open session. A value more than `gapMs`
+    * past the open session's `lastMs` closes it and opens a new one;
+    * any other value extends it. Returns the closed sessions and the
+    * open state (None only when there was neither state nor a value);
+    * each operator keeps only its own timeout or timer handling.
     *
-    * `useProcessingTimeTimeout=true` additionally flushes idle
-    * sessions on a wall-clock timeout — correct for a live stream,
-    * but on a bounded replay it makes the micro-batch engine poll
-    * continuously (timeouts force empty batches), so it defaults off;
-    * bounded runs close sessions on observed gaps only.
+    * PINNED CONTRACT: `lastMs` is the last PROCESSED value, not the
+    * max. A cross-batch row that is late but within the watermark
+    * moves the tail backward (shrinking `span_ms` and arming an
+    * earlier timeout). Session islanding is thereby a pure function of
+    * per-user processing order, which the replay oracle expresses with
+    * lag(ms) (streamedSessionsOracle's b2/g2m: `last = rlast`, the
+    * island's max BATCH ms); both event-time generations run this step,
+    * so they stay on one oracle text.
     */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30,
-                 useProcessingTimeTimeout: Boolean = false): Dataset[SessionOut] = {
+  def sessionStep(user: Long, open: Option[SessionState], ms: Iterator[Long],
+                  gapMs: Long): (Seq[SessionOut], Option[SessionState]) = {
+    val closed = Seq.newBuilder[SessionOut]
+    var st = open
+    for (m <- ms.toSeq.sorted) st = st match {
+      case Some(s) if m - s.lastMs > gapMs =>
+        closed += s.close(user)
+        Some(SessionState(m, m, 1L))
+      case Some(s) => Some(SessionState(s.sessionStartMs, m, s.nEvents + 1L))
+      case None    => Some(SessionState(m, m, 1L))
+    }
+    (closed.result(), st)
+  }
+
+  /** Custom keyed state: emit a session record when a user's next
+    * event comes more than `gapMinutes` after the last. This is the
+    * `flatMapGroupsWithState` path with no timeout, so a bounded
+    * replay closes sessions on observed gaps only and each user's last
+    * session stays open in state.
+    */
+  def sessionize(events: DataFrame, gapMinutes: Int = 30): Dataset[SessionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
-    val timeoutConf =
-      if (useProcessingTimeTimeout) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-
-    def fn(userId: Long, rows: Iterator[SessionInput],
-           state: GroupState[SessionState]): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(_.ms)
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[SessionOut]
-      for (r <- sorted) {
-        if (st == null) {
-          st = SessionState(r.ms, r.ms, 1L)
-        } else if (r.ms - st.lastMs > gapMs) {
-          out += SessionOut(userId, st.sessionStartMs, st.nEvents, st.lastMs - st.sessionStartMs)
-          st = SessionState(r.ms, r.ms, 1L)
-        } else {
-          st = SessionState(st.sessionStartMs, r.ms, st.nEvents + 1L)
-        }
-      }
-      if (st != null) {
-        if (state.hasTimedOut) {
-          out += SessionOut(userId, st.sessionStartMs, st.nEvents, st.lastMs - st.sessionStartMs)
-          state.remove()
-        } else {
-          state.update(st)
-          if (useProcessingTimeTimeout) state.setTimeoutDuration(gapMs)
-        }
-      }
-      out.result().iterator
-    }
-
     events
-      .withColumn("ms", expr("ts div 1000000"))
-      .select(col("user_id"), col("ms"))
+      .select(col("user_id"), eventMs.as("ms"))
       .as[SessionInput]
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(fn)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (user: Long, rows: Iterator[SessionInput], state: GroupState[SessionState]) =>
+          val (closed, open) = sessionStep(user, state.getOption, rows.map(_.ms), gapMs)
+          open.foreach(state.update)
+          closed.iterator
+      }
   }
 
   case class SessionInputEt(user_id: Long, ms: Long,
                             event_time: java.sql.Timestamp)
 
+  /** The event-time sessionizers' keyed input: the watermark column
+    * rides into the keyed rows, so the engine's late filter drops rows
+    * older than the checkpointed watermark before they reach the state
+    * step.
+    */
+  private def eventTimeSessionInput(events: DataFrame, watermark: String)
+      : KeyValueGroupedDataset[Long, SessionInputEt] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    watermarked(events, watermark)
+      .select(col("user_id"), eventMs.as("ms"), col("event_time"))
+      .as[SessionInputEt]
+      .groupByKey(_.user_id)
+  }
+
   /** [[sessionize]] with EVENT-TIME timeouts: sessions also close
     * when the WATERMARK passes their last event + gap — the correct
     * idle-flush for a replayable stream (processing-time timeouts
     * depend on wall clock; event-time ones are a function of the
-    * data). The watermark column rides into the keyed input so the
-    * engine's late filter drops rows older than the checkpointed
-    * watermark before they reach the state machine, and every state
-    * update re-arms `setTimeoutTimestamp(last + gap)` — state is
-    * bounded by the watermark horizon, the 100 TB requirement for
-    * keyed state. Closed-session content is deterministic under a
-    * staged replay even though emission TIMING is not: a session past
-    * its gap is emitted either by its timeout firing or by the gap
-    * rule breaking at the next arrival — same record either way
-    * ([[StreamingSessionSpec]] pins the semantics,
+    * data). Every state update re-arms `setTimeoutTimestamp(last +
+    * gap)`, so state is bounded by the watermark horizon, the 100 TB
+    * requirement for keyed state. Closed-session content is
+    * deterministic under a staged replay even though emission TIMING
+    * is not: a session past its gap is emitted either by its timeout
+    * firing or by the gap rule breaking at the next arrival — same
+    * record either way ([[StreamingSessionSpec]] pins the semantics,
     * `streamed_sessions` hash-gates them).
     */
   def sessionizeEventTime(events: DataFrame, gapMinutes: Int = 30,
@@ -921,57 +936,25 @@ object EventStreams {
     val spark = events.sparkSession
     import spark.implicits._
     val gapMs = gapMinutes * 60L * 1000L
-
-    def fn(userId: Long, rows: Iterator[SessionInputEt],
-           state: GroupState[SessionState]): Iterator[SessionOut] = {
-      val out = Seq.newBuilder[SessionOut]
-      if (state.hasTimedOut) {
-        // timeout invocations carry no rows: flush and drop the state
-        val st = state.get
-        out += SessionOut(userId, st.sessionStartMs, st.nEvents,
-          st.lastMs - st.sessionStartMs)
-        state.remove()
-      } else {
-        var st = state.getOption.orNull
-        for (r <- rows.toSeq.sortBy(_.ms)) {
-          if (st == null) {
-            st = SessionState(r.ms, r.ms, 1L)
-          } else if (r.ms - st.lastMs > gapMs) {
-            out += SessionOut(userId, st.sessionStartMs, st.nEvents,
-              st.lastMs - st.sessionStartMs)
-            st = SessionState(r.ms, r.ms, 1L)
+    eventTimeSessionInput(events, watermark)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, rows: Iterator[SessionInputEt], state: GroupState[SessionState]) =>
+          if (state.hasTimedOut) {
+            // timeout invocations carry no rows: flush and drop the state
+            val st = state.get
+            state.remove()
+            Iterator.single(st.close(user))
           } else {
-            // PINNED CONTRACT: lastMs is the last PROCESSED row's ms,
-            // not max — a cross-batch late-but-within-watermark row
-            // moves the tail backward (shrinking span_ms and arming an
-            // earlier timer). This makes session islanding a pure
-            // function of per-user processing order, which the replay
-            // oracle expresses with lag(ms) (streamedSessionsOracle's
-            // b2/g2m: `last = rlast`, the island's max BATCH ms); the
-            // transformWithState processor shares the same branch so
-            // both generations stay on one oracle text.
-            st = SessionState(st.sessionStartMs, r.ms, st.nEvents + 1L)
+            val (closed, open) = sessionStep(user, state.getOption, rows.map(_.ms), gapMs)
+            open.foreach { st =>
+              state.update(st)
+              // processed rows are >= the watermark, so last + gap is
+              // strictly ahead of it — always a legal timeout timestamp
+              state.setTimeoutTimestamp(st.lastMs + gapMs)
+            }
+            closed.iterator
           }
-        }
-        if (st != null) {
-          state.update(st)
-          // processed rows are >= the watermark, so last + gap is
-          // strictly ahead of it — always a legal timeout timestamp
-          state.setTimeoutTimestamp(st.lastMs + gapMs)
-        }
       }
-      out.result().iterator
-    }
-
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
-      .withColumn("ms", expr("ts div 1000000"))
-      .select(col("user_id"), col("ms"), col("event_time"))
-      .as[SessionInputEt]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(fn)
   }
 
   /** [[sessionizeEventTime]] into an append-mode parquet sink. */
@@ -1004,29 +987,15 @@ object EventStreams {
 
     override def handleInputRows(key: Long, rows: Iterator[SessionInputEt],
                                  timerValues: TimerValues): Iterator[SessionOut] = {
-      val out = Seq.newBuilder[SessionOut]
-      var st = if (state.exists()) state.get() else null
-      // only the stored state armed a timer; the states below live in this call
-      if (st != null) getHandle.deleteTimer(st.lastMs + gapMs)
-      for (r <- rows.toSeq.sortBy(_.ms)) {
-        if (st == null) {
-          st = SessionState(r.ms, r.ms, 1L)
-        } else if (r.ms - st.lastMs > gapMs) {
-          out += SessionOut(key, st.sessionStartMs, st.nEvents,
-            st.lastMs - st.sessionStartMs)
-          st = SessionState(r.ms, r.ms, 1L)
-        } else {
-          // lastMs = last PROCESSED row's ms, deliberately not max —
-          // the pinned cross-batch-late-row contract shared with
-          // flatMapGroupsWithState above (see the comment there).
-          st = SessionState(st.sessionStartMs, r.ms, st.nEvents + 1L)
-        }
-      }
-      if (st != null) {
+      val stored = if (state.exists()) Some(state.get()) else None
+      // only the stored state armed a timer; the step's own states live in this call
+      stored.foreach(st => getHandle.deleteTimer(st.lastMs + gapMs))
+      val (closed, open) = sessionStep(key, stored, rows.map(_.ms), gapMs)
+      open.foreach { st =>
         state.update(st)
         getHandle.registerTimer(st.lastMs + gapMs)
       }
-      out.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
@@ -1035,8 +1004,7 @@ object EventStreams {
         val st = state.get()
         if (expired.getExpiryTimeInMs() >= st.lastMs + gapMs) {
           state.clear()
-          return Iterator.single(SessionOut(key, st.sessionStartMs,
-            st.nEvents, st.lastMs - st.sessionStartMs))
+          return Iterator.single(st.close(key))
         }
       }
       Iterator.empty
@@ -1048,36 +1016,42 @@ object EventStreams {
                     watermark: String = WatermarkDelay): Dataset[SessionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
-      .withColumn("ms", expr("ts div 1000000"))
-      .select(col("user_id"), col("ms"), col("event_time"))
-      .as[SessionInputEt]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionStatefulProcessor(gapMs),
+    eventTimeSessionInput(events, watermark)
+      .transformWithState(new SessionStatefulProcessor(gapMinutes * 60L * 1000L),
         TimeMode.EventTime(), OutputMode.Append())
   }
 
+  /** [[sessionizeTws]] into an append-mode parquet sink; run it
+    * inside [[withRocksDbStateStore]]. */
+  def writeSessionizedTws(events: DataFrame, outDir: String,
+                          checkpointDir: String): DataStreamWriter[Row] =
+    appendParquet(sessionizeTws(events).toDF(), outDir, checkpointDir)
+
+  /** `body` with the RocksDB state store provider, which
+    * `transformWithState` requires; the previous provider conf is
+    * restored after.
+    */
+  private[graft] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T = {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(providerKey, v)
+      case None    => spark.conf.unset(providerKey)
+    }
+  }
+
   /** Write-once layout for `streamed_sessions_tws`: the SAME
-    * two-phase staged replay as [[streamedSessionLayout]], with the
-    * RocksDB state store provider pinned for the run
-    * (`transformWithState` requires it; the conf is restored after).
+    * two-phase staged replay as [[streamedSessionLayout]], through
+    * [[writeSessionizedTws]] on the RocksDB state store.
     */
   def streamedSessionTwsLayout(spark: SparkSession, sfDir: String): String =
     streamedLayout("sessiontws", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try twoPhaseReplay(spark, path, ev.where(!straggler), ev.where(straggler))(
-        (events, out, ckpt) => appendParquet(sessionizeTws(events).toDF(), out, ckpt))
-      finally prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
+      withRocksDbStateStore(spark)(twoPhaseReplay(spark, path, ev.where(!straggler),
+        ev.where(straggler))(writeSessionizedTws(_, _, _)))
     }
 
   /** Write-once SESSION-GATED layout: [[sessionizeEventTime]] run
@@ -1104,8 +1078,9 @@ object EventStreams {
     * EXACT layout [[graft.sources.Partitioning]]'s batch readers
     * prune ([[graft.sources.Partitioning.eventsPartitionPruned]]
     * statically, [[graft.sources.Partitioning.eventsDppJoin]] via
-    * DPP). The day derives from the nanos `ts` with the same integer
-    * ms math as the batch writer, so a pipeline can tail a live
+    * DPP). The day is the events clock's day key
+    * ([[graft.Tables.eventDay]]), the one the batch writer and the
+    * pruning readers use, so a pipeline can tail a live
     * event log into the lake and the day's directory closes itself:
     * at 100 TB the streaming sink IS the partitioned table's writer,
     * and exactly-once comes from the checkpoint + the parquet sink's
@@ -1113,9 +1088,7 @@ object EventStreams {
     */
   def writeEventsPartitionedByDay(events: DataFrame, outDir: String,
                                   checkpointDir: String): DataStreamWriter[Row] =
-    appendParquet(events.withColumn("day", date_format(date_trunc("day",
-        timestamp_millis(expr("ts div 1000000"))), "yyyy-MM-dd")),
-      outDir, checkpointDir)
+    appendParquet(events.withColumn("day", eventDay), outDir, checkpointDir)
       .partitionBy("day")
 
   /** Write-once streamed day-partitioned events layout (round-10,
@@ -1169,9 +1142,7 @@ object EventStreams {
     */
   def watermarkedHourlyCounts(events: DataFrame,
                               watermark: String = WatermarkDelay): DataFrame =
-    events
-      .withColumn("event_time", timestamp_millis(expr("ts div 1000000")))
-      .withWatermark("event_time", watermark)
+    watermarked(events, watermark)
       .groupBy(window(col("event_time"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("win.start").as("hour"), col("event_type"), col("n"))
@@ -1310,7 +1281,7 @@ object EventStreams {
     }
 
     events
-      .withColumn("ms", expr("ts div 1000000"))
+      .withColumn("ms", eventMs)
       .where(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("ms"))
@@ -1336,10 +1307,10 @@ object EventStreams {
     streamedLayout("attrsink", sfDir, "events") { path =>
       val ev = graft.Tables.events(spark, sfDir)
       val Array(lo, hi) = ev
-        .agg(expr("min(ts div 1000000)"), expr("max(ts div 1000000)"))
+        .agg(min(eventMs), max(eventMs))
         .collect().map(r => Array(r.getLong(0), r.getLong(1))).head
       val mid = lo + (hi - lo) / 2
-      twoPhaseReplay(spark, path, ev.where(expr(s"ts div 1000000 < $mid")),
-        ev.where(expr(s"ts div 1000000 >= $mid")))(writeStreamedAttribution(_, _, _))
+      twoPhaseReplay(spark, path, ev.where(eventMs < mid),
+        ev.where(eventMs >= mid))(writeStreamedAttribution(_, _, _))
     }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.Locale
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -240,6 +242,37 @@ object ExpressionProperties extends Properties("graft.expressions") {
       (tokenCountRows(docs, TokenCounts.FlushAt).toMap == want) :| "kernel" &&
       (tokenCountRows(docs, 2).groupMapReduce(_._1)(_._2)(_ + _) == want) :| "kernel, flushing"
   }
+
+  /** `body` under `locale` as the JVM's default, the old default (all
+    * categories) restored after.
+    */
+  private def withDefaultLocale[T](locale: Locale)(body: => T): T = {
+    val (all, display, format) = (Locale.getDefault,
+      Locale.getDefault(Locale.Category.DISPLAY), Locale.getDefault(Locale.Category.FORMAT))
+    Locale.setDefault(locale)
+    try body
+    finally {
+      Locale.setDefault(all)
+      Locale.setDefault(Locale.Category.DISPLAY, display)
+      Locale.setDefault(Locale.Category.FORMAT, format)
+    }
+  }
+
+  property("tokens are the root locale's under a Turkish default locale") =
+    forAll(document) { d =>
+      // `I` and `İ` after the first non-ASCII token, where a Turkish
+      // lowering gives `ı` and `i` instead of `i` and `i̇`
+      val s = s"é I İ $d I"
+      val st = new java.util.StringTokenizer(s.toLowerCase(Locale.ROOT), " \t\n\r\f")
+      val root = Seq.newBuilder[String]
+      while (st.hasMoreTokens) root += st.nextToken()
+      val want = root.result()
+      val (toks, counts) = withDefaultLocale(Locale.forLanguageTag("tr")) {
+        (tokenize(s), tokenCountRows(Seq(Some(s)), TokenCounts.FlushAt))
+      }
+      (toks == want) :| s"tokenize: $toks" &&
+        (counts.toMap == countWords(want)) :| s"per task: $counts"
+    }
 
   property("tokenize distributes over whitespace concatenation") =
     forAll(rawString, rawString) { (a, b) =>

@@ -40,6 +40,11 @@ headroom() {
   echo "headroom: ${avail_gb}G free (need ${need_gb}G for $1)" >> "$log"
 }
 
+# Fixtures.ensure keys a write-once layout on its sources and params,
+# not on the code that built it: delete the sf0.01 layouts so the cold
+# stage rebuilds every one with the current builders (the warm stage
+# then reuses them).
+rm -rf /tmp/graft_*_sf0.01_*
 headroom /root/testdata/sf0.01
 stage "sf0.01 cold"
 SPARK_GRAFT_CPUS=32 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/v_001 2>/dev/null | tail -1 | tee -a "$log"
